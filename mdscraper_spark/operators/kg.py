@@ -44,24 +44,6 @@ from pyspark.sql.types import (
 from mdscraper_spark.kg import rules
 from mdscraper_spark.sources import fixtures
 
-MENTIONS_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("sent_id", IntegerType(), False),
-    StructField("span_start", IntegerType(), False),
-    StructField("span_end", IntegerType(), False),
-    StructField("surface", StringType(), False),
-    StructField("mtype", StringType(), True),
-])
-
-TRIPLES_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("sent_id", IntegerType(), False),
-    StructField("subj", StringType(), False),
-    StructField("pred", StringType(), False),
-    StructField("obj", StringType(), False),
-    StructField("conf", DoubleType(), False),
-])
-
 
 def alias_df(spark: SparkSession) -> DataFrame:
     """The broadcastable alias dictionary (FIXTURES.md §2)."""
@@ -84,34 +66,6 @@ def alias_df(spark: SparkSession) -> DataFrame:
 # I2 + I3 — mention & triple mining (narrow Arrow stages)
 # ---------------------------------------------------------------------------
 
-def mine_mentions(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
-    """Gazetteer mentions; the compiled automaton is cached per executor
-    process (rules.cached_gazetteer), amortized across Arrow batches."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = rules.cached_gazetteer(gaz_entries)
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "sent_id", "span_start", "span_end",
-                                    "surface", "mtype")}
-            for url, markdown in zip(pdf["url"], pdf["markdown"]):
-                if markdown is None:
-                    continue
-                sentences = rules.split_sentences(markdown)
-                for sid, start, end, surface, mtype in rules.detect_mentions(
-                        sentences, gaz):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(sid)
-                    rows["span_start"].append(start)
-                    rows["span_end"].append(end)
-                    rows["surface"].append(surface)
-                    rows["mtype"].append(mtype)
-            yield pd.DataFrame(rows)
-
-    return (markdown_docs.filter(F.col("status") == "ok")
-            .select("url", "markdown")
-            .mapInPandas(run, MENTIONS_SCHEMA))
-
-
 MINE_COMBINED_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("kind", StringType(), False),   # 'mention' | 'triple'
@@ -128,9 +82,11 @@ MINE_COMBINED_SCHEMA = StructType([
 
 
 def mine_kg_combined(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
-    """Mentions AND triples in ONE pass over the markdown — halves the
-    Arrow transfer + Python parse cost vs running the two miners
-    separately.  Split back out with :func:`split_mined`."""
+    """Mentions AND triples in ONE pass over the markdown: each
+    document crosses the Arrow boundary and is sentence-split once.
+    The gazetteer automaton is cached per executor process
+    (rules.cached_gazetteer), amortized across Arrow batches.  Split
+    back out with :func:`split_mined`."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz = rules.cached_gazetteer(gaz_entries)
@@ -164,7 +120,10 @@ def mine_kg_combined(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
 
 
 def split_mined(mined: DataFrame) -> tuple:
-    """combined rows -> (mentions, triples) with the canonical schemas."""
+    """combined rows -> (mentions, triples).
+
+    mentions: (url, sent_id, span_start, span_end, surface, mtype);
+    triples: (url, sent_id, subj, pred, obj, conf)."""
     mentions = (mined.filter(F.col("kind") == "mention")
                 .select("url", "sent_id",
                         F.col("span_start").cast("int").alias("span_start"),
@@ -173,29 +132,6 @@ def split_mined(mined: DataFrame) -> tuple:
     triples = (mined.filter(F.col("kind") == "triple")
                .select("url", "sent_id", "subj", "pred", "obj", "conf"))
     return mentions, triples
-
-
-def mine_triples(markdown_docs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "sent_id", "subj", "pred", "obj",
-                                    "conf")}
-            for url, markdown in zip(pdf["url"], pdf["markdown"]):
-                if markdown is None:
-                    continue
-                sentences = rules.split_sentences(markdown)
-                for sid, subj, pred, obj, conf in rules.extract_triples(sentences):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(sid)
-                    rows["subj"].append(subj)
-                    rows["pred"].append(pred)
-                    rows["obj"].append(obj)
-                    rows["conf"].append(conf)
-            yield pd.DataFrame(rows)
-
-    return (markdown_docs.filter(F.col("status") == "ok")
-            .select("url", "markdown")
-            .mapInPandas(run, TRIPLES_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -584,8 +520,8 @@ def _canonicalized_triples(triples: DataFrame,
     obj) surfaces onto canonical ids via two left joins on the
     canonical_map (broadcast-hinted only when the size gate proved it
     driver-sized); unlinked surfaces keep their surface node id.
-    Passes every other triple column (url, sent_id, conf) through for
-    downstream aggregation."""
+    Passes every other input column (url, sent_id, conf, warc_ts,
+    n_support, ...) through for downstream aggregation."""
     cmap = _maybe_broadcast(canonical_map)
     subj_node = F.concat(F.lit("s:"), _norm_col(F.col("subj")))
     obj_node = F.concat(F.lit("s:"), _norm_col(F.col("obj")))
@@ -601,12 +537,20 @@ def _canonicalized_triples(triples: DataFrame,
             .drop("subj_node", "obj_node", "src_canon", "dst_canon"))
 
 
+def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
+                     n_support, *extra_aggs) -> DataFrame:
+    """The one edge aggregation every edge builder shares: canonicalize
+    the triples, then a single groupBy shuffle on (src, pred, dst) with
+    ``n_support`` and any extra aggregates riding it."""
+    return (_canonicalized_triples(triples, canonical_map)
+            .groupBy("src", "pred", "dst")
+            .agg(n_support.alias("n_support"), *extra_aggs))
+
+
 def build_kg_edges(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
     """kg_edges(src, pred, dst, n_support): triples mapped onto canonical
     ids, deduped by support count."""
-    return (_canonicalized_triples(triples, canonical_map)
-            .groupBy("src", "pred", "dst")
-            .agg(F.count(F.lit(1)).alias("n_support")))
+    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)))
 
 
 def build_kg_edges_with_provenance(triples: DataFrame,
@@ -617,36 +561,28 @@ def build_kg_edges_with_provenance(triples: DataFrame,
     supporting url.  Same single shuffle as build_kg_edges (the extra
     aggregates ride the same groupBy); countDistinct is exact here
     because the group key already co-locates each edge's rows."""
-    return (_canonicalized_triples(triples, canonical_map)
-            .groupBy("src", "pred", "dst")
-            .agg(F.count(F.lit(1)).alias("n_support"),
-                 F.countDistinct("url").alias("n_docs"),
-                 F.min("url").alias("first_url"),
-                 F.max("url").alias("last_url")))
+    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)),
+                            F.countDistinct("url").alias("n_docs"),
+                            F.min("url").alias("first_url"),
+                            F.max("url").alias("last_url"))
 
 
 def build_kg_edges_with_time_windows(triples: DataFrame,
-                                     canonical_map: DataFrame,
-                                     page_times: DataFrame) -> DataFrame:
+                                     canonical_map: DataFrame) -> DataFrame:
     """Temporal KG edges: kg_edges extended with the assertion's
     OBSERVATION WINDOW — min/max crawl timestamp over the supporting
     pages.  The temporal layer every streaming-KG consumer asks of a
     crawl-built graph ("since when has the web said this?", "is this
     edge stale?") without moving to full interval semantics.
 
-    ``page_times``: (url, warc_ts) — at production scale this is a
-    column already on the pages/markdown_docs table and the join
-    disappears (carry warc_ts through extraction); the join form
-    exists because mine_triples' Arrow schema is deliberately minimal.
-    Join key is url, the same distribution as the triples themselves —
-    one hash join under AQE, then the min/max aggregates ride the SAME
-    single groupBy shuffle as the flagship edge build."""
-    t = _canonicalized_triples(triples, canonical_map) \
-        .join(page_times, "url")
-    return (t.groupBy("src", "pred", "dst")
-            .agg(F.count(F.lit(1)).alias("n_support"),
-                 F.min("warc_ts").alias("first_seen"),
-                 F.max("warc_ts").alias("last_seen")))
+    ``triples`` carries a ``warc_ts`` column next to the triple
+    columns.  A triple whose warc_ts is null still counts toward
+    n_support (support always equals build_kg_edges); it just leaves
+    the window untouched.  Min/max ride the SAME single groupBy
+    shuffle as the flagship edge build."""
+    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)),
+                            F.min("warc_ts").alias("first_seen"),
+                            F.max("warc_ts").alias("last_seen"))
 
 
 def build_kg_edges_from_support(support: DataFrame,
@@ -658,23 +594,7 @@ def build_kg_edges_from_support(support: DataFrame,
     accumulated support instead of re-counting rows.  Identical output
     to build_kg_edges over the union of the batches' triples (support
     counting is associative)."""
-    cmap = _maybe_broadcast(canonical_map)
-    subj_node = F.concat(F.lit("s:"), _norm_col(F.col("subj")))
-    obj_node = F.concat(F.lit("s:"), _norm_col(F.col("obj")))
-    t = (support
-         .withColumn("subj_node", subj_node)
-         .withColumn("obj_node", obj_node))
-    t = (t.join(cmap.withColumnRenamed("node_id", "subj_node")
-                .withColumnRenamed("canon_id", "src_canon"), "subj_node", "left")
-         .join(cmap.withColumnRenamed("node_id", "obj_node")
-               .withColumnRenamed("canon_id", "dst_canon"), "obj_node", "left"))
-    return (t.select(
-                F.coalesce("src_canon", "subj_node").alias("src"),
-                F.col("pred"),
-                F.coalesce("dst_canon", "obj_node").alias("dst"),
-                F.col("n_support"))
-            .groupBy("src", "pred", "dst")
-            .agg(F.sum("n_support").alias("n_support")))
+    return _aggregate_edges(support, canonical_map, F.sum("n_support"))
 
 
 # ---------------------------------------------------------------------------

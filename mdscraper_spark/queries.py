@@ -2546,8 +2546,8 @@ def kg_flagship(spark, sf_dir):
     signature, so the one static SQL string picks the right expected
     edges for whichever sf the driver registered, and an unknown corpus
     fails loudly with zero oracle rows."""
-    docs, mentions, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_edges(kg_ops.mine_triples(docs), cmap)
+    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    return kg_ops.build_kg_edges(triples, cmap)
 
 
 _KG_PARTS_CACHE: dict = {}
@@ -2555,15 +2555,15 @@ _KG_PARTS_CACHE: dict = {}
 
 def _kg_pipeline_parts(spark, sf_dir):
     """Shared pipeline prefix of the KG registry rows (pages ->
-    extract -> mentions -> links -> connected components); ONE
+    extract -> one combined mining pass -> links -> connected
+    components) -> (mentions, triples, aliases, canonical_map); ONE
     definition so the edges/nodes oracle rows cannot silently
     diverge.
 
-    Memoized per (Spark application, sf_dir) with the expensive frames
-    localCheckpointed: seven registry rows (flagship, nodes, triple
-    P/R, degrees, shared-neighbor, two-hop, pagerank) consume this
-    prefix, and without the cache each would re-run extraction +
-    mining + linking + CC from scratch.  Keyed by applicationId so a
+    Memoized per (Spark application, sf_dir) with the mined rows
+    localCheckpointed: every KG registry row consumes this prefix,
+    and without the cache each would re-run extraction + mining +
+    linking + CC from scratch.  Keyed by applicationId so a
     fresh session (whose checkpoints are gone) rebuilds instead of
     replaying dead references."""
     app_id = spark.sparkContext.applicationId
@@ -2577,13 +2577,14 @@ def _kg_pipeline_parts(spark, sf_dir):
         del _KG_PARTS_CACHE[stale]
     pages = docs_to_kg_pages(load(spark, sf_dir, "documents",
                                   fan_out=True))
-    docs = extract_markdown(pages, ExtractConfig()).localCheckpoint()
+    docs = extract_markdown(pages, ExtractConfig())
     aliases = kg_ops.alias_df(spark)
     gaz_entries = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions = kg_ops.mine_mentions(docs, gaz_entries).localCheckpoint()
+    mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz_entries).localCheckpoint())
     links = kg_ops.link_entities(mentions, aliases)
     cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    parts = (docs, mentions, aliases, cmap)
+    parts = (mentions, triples, aliases, cmap)
     _KG_PARTS_CACHE[key] = parts
     return parts
 
@@ -2634,7 +2635,7 @@ def kg_nodes_check(spark, sf_dir):
     """I6 node side of the graph materialize, hash-checked against the
     frozen single-threaded oracle's kg_nodes (canon_id, label,
     n_mentions) — the edges twin is `kg_flagship`."""
-    _docs, mentions, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    mentions, _triples, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
     return kg_ops.build_kg_nodes(cmap, mentions, aliases)
 
 
@@ -2720,9 +2721,8 @@ def kg_lambda_parity(spark, sf_dir):
                 F.pmod(F.xxhash64("url"), F.lit(3)) == F.lit(b))
             apply_kg_batch(spark, batch, b, workdir, stream_id=workdir)
         nodes_acc, edges_acc = canonicalize_accumulated(spark, workdir)
-        docs, mentions, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-        edges_one = kg_ops.build_kg_edges(
-            kg_ops.mine_triples(docs), cmap).localCheckpoint()
+        mentions, triples, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+        edges_one = kg_ops.build_kg_edges(triples, cmap).localCheckpoint()
         nodes_one = kg_ops.build_kg_nodes(
             cmap, mentions, aliases).localCheckpoint()
         n_nodes, n_edges = nodes_one.count(), edges_one.count()
@@ -2878,10 +2878,11 @@ def kg_snapshot_diff(spark, sf_dir):
     pages = docs_to_kg_pages(docs_sub)
     docs = extract_markdown(pages, ExtractConfig())
     gaz_entries = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions = kg_ops.mine_mentions(docs, gaz_entries)
+    mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz_entries).localCheckpoint())
     links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
     cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    sub = kg_ops.build_kg_edges(kg_ops.mine_triples(docs), cmap)
+    sub = kg_ops.build_kg_edges(triples, cmap)
     return snapshot_diff(full, sub)
 
 
@@ -3102,7 +3103,7 @@ def kg_pmi_cooccurrence(spark, sf_dir):
     by mentions-per-sentence, never corpus size."""
     from mdscraper_spark.operators.kg import pmi_cooccurrence
 
-    docs, mentions, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    mentions, _triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
     return pmi_cooccurrence(mentions, cmap)
 
 
@@ -3121,9 +3122,8 @@ def kg_edge_provenance(spark, sf_dir):
     shuffle as the flagship edge build (extra aggregates ride the same
     groupBy); verified against the frozen single-threaded oracle's
     identical derivation."""
-    docs, _mentions, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_edges_with_provenance(
-        kg_ops.mine_triples(docs), cmap)
+    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    return kg_ops.build_kg_edges_with_provenance(triples, cmap)
 
 
 @register("kg_edge_time_windows", """
@@ -3140,23 +3140,18 @@ def kg_edge_time_windows(spark, sf_dir):
     pages ("since when has the web said this?").  The synthetic
     corpus's pages carry one constant warc_ts, so the row supplies
     the deterministic varied-timestamp twin both engines replay:
-    ts(doc) = 2025-06-14 + (doc_id % 97) hours, attached as the
-    (url, warc_ts) page_times side.  Min/max ride the SAME single
-    groupBy shuffle as the flagship edge build; the page_times join
-    keys on url — the triples' own distribution — and disappears at
-    production scale where warc_ts is already a docs column.
-    Verified against the frozen single-threaded oracle's identical
-    derivation (tools/freeze_kg_oracle.py kg_tw fixtures)."""
-    docs, _mentions, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    page_times = (load(spark, sf_dir, "documents")
-                  .select(F.concat(F.lit("https://docs.test/"),
-                                   F.col("doc_id")).alias("url"),
-                          F.expr("timestamp'2025-06-14 00:00:00' + "
-                                 "make_interval(0, 0, 0, 0, "
-                                 "CAST(doc_id % 97 AS INT), 0, 0)")
-                          .alias("warc_ts")))
+    ts(doc) = 2025-06-14 + (doc_id % 97) hours, where doc_id is the
+    last url segment — a projection on each triple row, no join.
+    Min/max ride the SAME single groupBy shuffle as the flagship edge
+    build.  Verified against the frozen single-threaded oracle's
+    identical derivation (tools/freeze_kg_oracle.py kg_tw fixtures)."""
+    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    warc_ts = F.expr(
+        "timestamp'2025-06-14 00:00:00' + make_interval(0, 0, 0, 0, "
+        "CAST(CAST(substring_index(url, '/', -1) AS BIGINT) % 97 AS INT), "
+        "0, 0)")
     return kg_ops.build_kg_edges_with_time_windows(
-        kg_ops.mine_triples(docs), cmap, page_times)
+        triples.withColumn("warc_ts", warc_ts), cmap)
 
 
 def _nt_sql_frag_expr(c: str) -> str:
@@ -3240,10 +3235,9 @@ def kg_export_provenance(spark, sf_dir):
     verified line-for-line against the same reification over the FROZEN
     single-threaded oracle's provenance edges.  Projection + explode
     only: the export adds zero shuffles at any scale."""
-    docs, _mentions, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
     return kg_ops.provenance_to_ntriples(
-        kg_ops.build_kg_edges_with_provenance(
-            kg_ops.mine_triples(docs), cmap))
+        kg_ops.build_kg_edges_with_provenance(triples, cmap))
 
 
 @register("warc_roundtrip", """

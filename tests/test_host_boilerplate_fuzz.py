@@ -4,8 +4,17 @@ replay of the census -> threshold -> scrub-all -> positional rebuild."""
 
 import math
 import random
+import re
 
 from mdscraper_spark.operators.dedup import host_boilerplate_scrub
+
+# mirrors dedup.ws_strip: Java regex \s is ASCII-only, so a line of
+# non-ASCII whitespace (e.g. NBSP) is content, not structure
+_WS_EDGES = re.compile(r"^\s+|\s+$", re.ASCII)
+
+
+def _ws_only(para):
+    return _WS_EDGES.sub("", para) == ""
 
 
 def _py_replay(rows, min_frac=0.5, min_docs=3):
@@ -19,7 +28,7 @@ def _py_replay(rows, min_frac=0.5, min_docs=3):
         h = host if host is not None else ""
         host_docs.setdefault(h, set()).add(doc_id)
         for para in (text or "").split("\n"):
-            if para.strip() != "":
+            if not _ws_only(para):
                 line_docs.setdefault((h, para), set()).add(doc_id)
     template = set()
     for (h, para), docs in line_docs.items():
@@ -31,7 +40,7 @@ def _py_replay(rows, min_frac=0.5, min_docs=3):
         h = host if host is not None else ""
         kept, removed = [], 0
         for para in (text or "").split("\n"):
-            if para.strip() != "" and (h, para) in template:
+            if not _ws_only(para) and (h, para) in template:
                 removed += 1
             else:
                 kept.append(para)
@@ -65,8 +74,15 @@ def test_host_boilerplate_differential_fuzz(spark):
             docs.append((did, f"host{host}", "\n".join(lines)))
             did += 1
     docs.append((did, None, "nav for host0"))   # null host buckets alone
+    # an NBSP-only line on three docs of one host: not whitespace to
+    # the operator, so it is template and dropped (three docs, because
+    # one doc can never reach min_docs=3)
+    nbsp_ids = range(did + 1, did + 4)
+    for i in nbsp_ids:
+        docs.append((i, "host_nbsp", f"body {i}\n\u00a0"))
 
     expect = _py_replay(docs)
+    assert all(expect[i] == (f"body {i}", 1) for i in nbsp_ids)
     df = spark.createDataFrame(
         docs, "doc_id long, source string, text string")
     for d in (df.coalesce(1), df.repartition(11)):

@@ -32,8 +32,8 @@ def spark_kg(spark):
     docs = extract_markdown(pages, CFG)
     aliases = kg_ops.alias_df(spark)
     gaz_entries = tuple((a, t) for a, _e, _c, t, _p in fixtures.alias_rows())
-    mentions = kg_ops.mine_mentions(docs, gaz_entries)
-    triples = kg_ops.mine_triples(docs)
+    mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz_entries))
     links = kg_ops.link_entities(mentions, aliases)
     cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
     nodes = kg_ops.build_kg_nodes(cmap, mentions, aliases)
@@ -284,33 +284,42 @@ def test_edge_provenance_counts_and_url_span(spark):
 def test_edge_time_windows(spark):
     """Round 5 (J61): build_kg_edges_with_time_windows aggregates the
     min/max supporting-page timestamp per canonical edge; support
-    counts agree with the flagship edge build."""
+    counts agree with the flagship edge build, also for a triple whose
+    page has no timestamp."""
     import datetime
 
     from mdscraper_spark.operators.kg import (
         build_kg_edges, build_kg_edges_with_time_windows)
 
+    t0 = datetime.datetime(2025, 6, 14, 0, 0, 0)
+
+    def ts(i):
+        return t0 + datetime.timedelta(hours=i)
+
     triples = spark.createDataFrame(
-        [("https://d.test/2", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
-         ("https://d.test/1", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
-         ("https://d.test/3", 0, "Ada Lovelace", "born_in", "London", 0.8)],
+        [("https://d.test/2", 0, "Ada Lovelace", "works_for", "Acme", 0.9,
+          ts(2)),
+         ("https://d.test/1", 0, "Ada Lovelace", "works_for", "Acme", 0.9,
+          ts(1)),
+         ("https://d.test/4", 0, "Ada Lovelace", "works_for", "Acme", 0.9,
+          None),
+         ("https://d.test/3", 0, "Ada Lovelace", "born_in", "London", 0.8,
+          ts(3))],
         "url string, sent_id int, subj string, pred string, obj string, "
-        "conf double")
+        "conf double, warc_ts timestamp")
     cmap = spark.createDataFrame([("s:ada lovelace", "e:1")],
                                  "node_id string, canon_id string")
-    t0 = datetime.datetime(2025, 6, 14, 0, 0, 0)
-    times = spark.createDataFrame(
-        [(f"https://d.test/{i}", t0 + datetime.timedelta(hours=i))
-         for i in (1, 2, 3)], "url string, warc_ts timestamp")
     rows = {(r.src, r.pred, r.dst): r for r in
-            build_kg_edges_with_time_windows(triples, cmap, times).collect()}
+            build_kg_edges_with_time_windows(triples, cmap).collect()}
     works = rows[("e:1", "works_for", "s:acme")]
-    # window spans the supporting pages only (doc 3 supports born_in)
-    assert works.n_support == 2
-    assert works.first_seen == t0 + datetime.timedelta(hours=1)
-    assert works.last_seen == t0 + datetime.timedelta(hours=2)
+    # the null-timestamp triple (doc 4) still supports the edge; the
+    # window spans the timestamped supporting pages only (doc 3
+    # supports born_in)
+    assert works.n_support == 3
+    assert works.first_seen == ts(1)
+    assert works.last_seen == ts(2)
     born = rows[("e:1", "born_in", "s:london")]
-    assert born.first_seen == born.last_seen == t0 + datetime.timedelta(hours=3)
+    assert born.first_seen == born.last_seen == ts(3)
     flag = {(r.src, r.pred, r.dst): r.n_support
             for r in build_kg_edges(triples, cmap).collect()}
     assert {k: v.n_support for k, v in rows.items()} == flag

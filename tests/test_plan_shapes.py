@@ -64,7 +64,8 @@ def test_link_join_is_broadcast(spark):
 
     docs = extract_markdown(fixture_pages_df(spark), ExtractConfig())
     gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions = kg_ops.mine_mentions(docs, gaz)
+    mentions, _triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz))
     links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -275,8 +276,9 @@ def test_host_boilerplate_scrub_no_cartesian_census_shape(spark):
 
 
 def test_edge_time_windows_no_cartesian(spark):
-    """J61: page_times joins url-keyed and the min/max aggregates ride
-    the single edge groupBy — no cartesian, no extra global sort."""
+    """J61: the timestamp is a projection on each triple row and the
+    min/max aggregates ride the single edge groupBy — no cartesian,
+    no extra global sort."""
     plan = plan_of(spark, "kg_edge_time_windows")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -95,6 +95,7 @@ def test_incremental_kg_edge_accumulation(spark, tmp_path):
 
     from mdscraper_spark.operators import kg as kg_ops
     from mdscraper_spark.operators.extract_udfs import extract_markdown
+    from mdscraper_spark.sources.fixtures import alias_rows
     from mdscraper_spark.sources.tables import Warehouse
     from mdscraper_spark.streaming.kg_incremental import stream_kg_update
 
@@ -117,8 +118,11 @@ def test_incremental_kg_edge_accumulation(spark, tmp_path):
     # batch ground truth over the full corpus in one pass
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
+    gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
+    _mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz))
     want = {(r.subj, r.pred, r.obj): r.n
-            for r in kg_ops.mine_triples(docs)
+            for r in triples
             .groupBy("subj", "pred", "obj")
             .agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got == want and len(got) > 0
@@ -187,8 +191,8 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
     gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions = kg_ops.mine_mentions(docs, gaz)
-    triples = kg_ops.mine_triples(docs)
+    mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz))
     links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
     cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
     want_edges = {(r.src, r.pred, r.dst): r.n_support

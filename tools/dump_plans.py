@@ -29,9 +29,10 @@ CASES = [
      "ONE ArrowEvalPython stage over a narrow projected scan — the "
      "whole extraction front end is a single vectorized pass"),
     ("kg_flagship",
-     "Arrow mining pass -> broadcast alias join -> size-gated CC -> "
-     "edge aggregation; no shuffle on the big side until the final "
-     "groupBy"),
+     "scan of the checkpointed mined triples (the one Arrow mining "
+     "pass is shared by every KG row) -> two broadcast canonical-map "
+     "joins -> edge aggregation; no shuffle on the big side until the "
+     "final groupBy"),
     ("near_dedup_groups",
      "banded LSH self-join on the bucket key (never all-pairs), CC on "
      "the pair graph only, one corpus left join at the end"),
@@ -123,8 +124,8 @@ CASES = [
      "hash aggregate — no self-join, no CartesianProduct"),
     ("kg_edge_time_windows",
      "the flagship edge build's single groupBy shuffle with min/max "
-     "timestamp aggregates riding it; page_times joined url-keyed "
-     "(the triples' own distribution) before the aggregate"),
+     "timestamp aggregates riding it; the timestamp a projection on "
+     "each triple row's url (no join)"),
 ]
 
 

@@ -110,10 +110,11 @@ def stage_times(spark, pages_path: str) -> dict:
 
     docs = spark.read.parquet(pages_path + "_docs")
     t0 = time.monotonic()
-    mentions = kg_ops.mine_mentions(docs, gaz)
+    mined = kg_ops.mine_kg_combined(docs, gaz).persist()
+    mentions, triples = kg_ops.split_mined(mined)
     mentions.write.mode("overwrite").parquet(pages_path + "_mentions")
-    triples = kg_ops.mine_triples(docs)
     triples.write.mode("overwrite").parquet(pages_path + "_triples")
+    mined.unpersist()
     out["mine_write"] = time.monotonic() - t0
 
     mentions = spark.read.parquet(pages_path + "_mentions")
