@@ -9,6 +9,10 @@ ground truth, and the distributed operators (operators/kg.py) must
 reproduce that truth at P/R >= 0.95 (target 1.0 — same rules, with
 total-order tie-breaks so partitioning cannot change results).
 
+Mention detection (I2) probes a hash of alias buckets keyed on each
+alias's first token, once per word of the sentence, so its per-sentence
+cost does not grow with the alias dictionary.
+
 Everything here is pure Python executed inside Arrow batch UDFs.
 """
 
@@ -62,47 +66,74 @@ def split_sentences(markdown: str) -> List[str]:
 # I2 — gazetteer mention detection
 # ---------------------------------------------------------------------------
 
+_WORD_RE = re.compile(r"\w")
+_WORD_RUN_RE = re.compile(r"\w+")
+
+
 class Gazetteer:
     """Leftmost-longest, word-bounded surface matching over an alias
-    dictionary.  Compiled once per executor process and reused across
-    Arrow batches (module-level cache below)."""
+    dictionary, keyed on each alias's first token.  Built once per
+    executor process and reused across Arrow batches (module-level
+    cache below).
+
+    An alias starting with a word character is filed under its first
+    maximal ``\\w+`` run; any other alias under its first character.
+    Each bucket holds the alias lengths, longest first.  ``find`` probes
+    the bucket of every word run and every non-word key character of
+    the sentence, left to right, so its cost per sentence depends on
+    the sentence and the bucket sizes, not on the dictionary size.
+
+    Word boundaries apply only on word-character edges: a word-initial
+    alias can only start a word run, and a word-final alias must not be
+    followed by a word character.  Non-word edges need no boundary (the
+    edge char itself breaks any word), so ``C++`` and ``.NET`` match.
+    Both word tests go through ``re`` so Unicode word characters
+    classify exactly as ``\\b`` does."""
 
     def __init__(self, entries: Iterable[Tuple[str, str]]):
-        """entries: (alias_surface, mtype)."""
+        """entries: (alias_surface, mtype); the first mtype seen for a
+        surface wins.  Empty surfaces can never match and are dropped
+        (a caller-supplied alias dictionary may carry a blank alias)."""
         self.types: Dict[str, str] = {}
-        surfaces = []
         for surface, mtype in entries:
-            if surface not in self.types:
+            if surface and surface not in self.types:
                 self.types[surface] = mtype
-                surfaces.append(surface)
-        # longest-first alternation => leftmost-longest match.  A \b is
-        # attached only where the alias EDGE is a word character: \b
-        # needs a word char on its inside, so wrapping 'C++'/'.NET' in
-        # \b...\b could never match anywhere — a silent recall hole.
-        # Non-word edges need no boundary (the edge char itself breaks
-        # any word).
-        def bounded(s: str) -> str:
-            left = r"\b" if re.match(r"\w", s[0]) else ""
-            right = r"\b" if re.match(r"\w", s[-1]) else ""
-            return f"{left}{re.escape(s)}{right}"
-
-        # drop empty surfaces: a caller-supplied alias dictionary (now
-        # reachable via KgBuildJob custom aliases) with a blank alias
-        # would IndexError in bounded() and can never match anything
-        surfaces = [s for s in surfaces if s]
-        pattern = "|".join(
-            bounded(s)
-            for s in sorted(surfaces, key=lambda s: (-len(s), s)))
-        self._re = re.compile(f"(?:{pattern})") if surfaces else None
+        lengths: Dict[str, set] = {}
+        for s in self.types:
+            run = _WORD_RUN_RE.match(s)
+            lengths.setdefault(run.group() if run else s[0], set()).add(len(s))
+        self._buckets = {k: sorted(v, reverse=True)
+                         for k, v in lengths.items()}
+        # surfaces whose last char is a word char need a word boundary
+        # after them
+        self._word_final = {s for s in self.types if _WORD_RE.match(s[-1])}
+        # candidate starts in position order: every word run, plus every
+        # char that begins a non-word-initial alias
+        non_word = "".join(re.escape(k) for k in sorted(self._buckets)
+                           if not _WORD_RE.match(k))
+        self._starts = re.compile(rf"\w+|[{non_word}]" if non_word else r"\w+")
 
     def find(self, sentence: str) -> List[Tuple[int, int, str, str]]:
         """Non-overlapping mentions: (start, end, surface, mtype)."""
-        if self._re is None:
-            return []
+        types, word_final = self.types, self._word_final
+        buckets, word_at = self._buckets, _WORD_RE.match
         out = []
-        for m in self._re.finditer(sentence):
-            surface = m.group(0)
-            out.append((m.start(), m.end(), surface, self.types[surface]))
+        end = 0
+        size = len(sentence)
+        for m in self._starts.finditer(sentence):
+            i = m.start()
+            if i < end:
+                continue
+            for n in buckets.get(m.group(), ()):
+                j = i + n
+                if j > size:
+                    continue
+                surface = sentence[i:j]
+                if surface in types and not (surface in word_final
+                                             and word_at(sentence, j)):
+                    end = j
+                    out.append((i, j, surface, types[surface]))
+                    break
         return out
 
 
@@ -113,7 +144,7 @@ def cached_gazetteer(entries_key: tuple) -> Gazetteer:
     """Per-process gazetteer cache; keyed by the entry tuple ITSELF
     (not its hash — dict lookup gets equality checking for free, where
     a raw-hash key would silently hand a colliding caller the wrong
-    compiled gazetteer)."""
+    gazetteer)."""
     gaz = _GAZETTEER_CACHE.get(entries_key)
     if gaz is None:
         gaz = Gazetteer(entries_key)

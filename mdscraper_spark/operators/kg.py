@@ -84,7 +84,7 @@ MINE_COMBINED_SCHEMA = StructType([
 def mine_kg_combined(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
     """Mentions AND triples in ONE pass over the markdown: each
     document crosses the Arrow boundary and is sentence-split once.
-    The gazetteer automaton is cached per executor process
+    The token-keyed gazetteer is built once per executor process
     (rules.cached_gazetteer), amortized across Arrow batches.  Split
     back out with :func:`split_mined`."""
 

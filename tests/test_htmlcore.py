@@ -143,19 +143,6 @@ def test_selector_root_is_not_an_element():
     assert [e.get_text() for e in root.select("* nav")] == ["y"]
 
 
-def test_gazetteer_non_word_edge_aliases_match():
-    from mdscraper_spark.kg.rules import Gazetteer, cached_gazetteer
-
-    gaz = Gazetteer([("C++", "LANG"), (".NET", "LANG"), ("Acme", "ORG")])
-    found = gaz.find("uses C++ and .NET at Acme daily")
-    assert {f[2] for f in found} == {"C++", ".NET", "Acme"}
-    # word-edged aliases keep strict boundaries
-    assert gaz.find("Acmeville") == []
-    # cache keyed by the tuple itself (equality, not raw hash)
-    k = (("C++", "LANG"),)
-    assert cached_gazetteer(k) is cached_gazetteer((("C++", "LANG"),))
-
-
 def test_table_with_thead_renders_single_separator():
     from mdscraper_spark.mdrender.render import render_markdown
 
