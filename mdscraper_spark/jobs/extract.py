@@ -93,8 +93,6 @@ def create_cli_parser() -> argparse.ArgumentParser:
     p.add_argument("--resume", action="store_true",
                    help="skip url-host buckets already ok in lineage")
     p.add_argument("--n-buckets", type=int, default=256)
-    p.add_argument("--salt", type=int, default=None,
-                   help="salt factor for the entity-link join (skewed dicts)")
     p.add_argument("--extract-only", action="store_true",
                    help="stop after markdown_docs (no KG back end)")
     p.add_argument("--master", default=None)
@@ -189,8 +187,7 @@ def main(argv=None) -> None:
         print(f"Fetching and parsing pages into {args.warehouse}...")
 
     run_id = args.run_id or datetime.datetime.now().strftime("run-%Y%m%d%H%M%S")
-    job = KgBuildJob(spark, args.warehouse, config, n_buckets=args.n_buckets,
-                     salt=args.salt if args.salt is not None else "auto")
+    job = KgBuildJob(spark, args.warehouse, config, n_buckets=args.n_buckets)
     if args.extract_only:
         from mdscraper_spark.operators.extract_udfs import (extract_markdown,
                                                             with_doc_path)

@@ -4,9 +4,14 @@ Stage pipeline (SURVEY.md §3.2), driven as one batch job:
 
   pages -> [extract] markdown_docs          resumable per url-host bucket
         -> [mine]    mentions, triples      narrow Arrow stages
-        -> [link]    entity_links           broadcast (or salted) join
+        -> [link]    entity_links           scored in the mining pass
         -> [canon]   canonical_map          iterative CC
         -> [graph]   kg_nodes, kg_edges     shuffle agg + write
+
+Stage row counts in the lineage come from the writes themselves (the
+warehouse manifest's ``record_counts``), never from re-scanning a
+table.  Extract rows are appended as soon as extraction commits;
+every later stage's rows go in one append at the end of the run.
 
 Resume contract (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"): the expensive extraction stage is
@@ -37,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from mdscraper_spark.config import ExtractConfig
+from mdscraper_spark.kg import rules
 from mdscraper_spark.operators import kg as kg_ops
 from mdscraper_spark.operators.extract_udfs import (extract_markdown,
                                                     with_doc_path)
@@ -58,16 +64,19 @@ GLOBAL_PART = -1  # lineage part_id for non-bucketed (global) stages
 
 
 class KgBuildJob:
+    # the job scores links in the mining pass; kept for callers that
+    # replay its stages through kg_ops.link_entities
+    salt = "auto"
+
     def __init__(self, spark: SparkSession, warehouse_path: str,
                  config: Optional[ExtractConfig] = None,
-                 n_buckets: int = 16, salt="auto",
+                 n_buckets: int = 16,
                  aliases: Optional[DataFrame] = None,
                  cc_local_solve_threshold: int = 2_000_000) -> None:
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_path)
         self.config = config or ExtractConfig()
         self.n_buckets = n_buckets
-        self.salt = salt
         # size gate for canonicalization (passed straight to
         # connected_components); 0 forces the distributed
         # label-propagation path — production web-scale behavior, and
@@ -76,15 +85,25 @@ class KgBuildJob:
         self._custom_aliases = aliases is not None
         self.aliases = aliases if aliases is not None else kg_ops.alias_df(spark)
 
+    def _dictionary(self) -> list:
+        """The job's alias rows (alias, entity_id, canonical, etype,
+        prior) in the order whose first etype per alias wins: fixture
+        order for the default dictionary; an injected one by (alias,
+        etype) ascending, nulls first as Spark sorts them.  The
+        dictionary is the bounded broadcast side, so one plain collect
+        is small by contract; the sort runs here, not as a Spark job."""
+        if not self._custom_aliases:
+            return fixtures.alias_rows()
+        rows = self.aliases.select("alias", "entity_id", "canonical",
+                                   "etype", "prior").collect()
+        return sorted(map(tuple, rows),
+                      key=lambda r: (r[0] is not None, r[0] or "",
+                                     r[3] is not None, r[3] or ""))
+
     def _gazetteer_entries(self) -> tuple:
         """(alias, etype) tuples for mention mining, from the job's own
         alias dictionary."""
-        if not self._custom_aliases:
-            return tuple((a, t) for a, _e, _c, t, _p in
-                         fixtures.alias_rows())
-        rows = (self.aliases.select("alias", "etype")
-                .orderBy("alias", "etype").collect())
-        return tuple((r.alias, r.etype) for r in rows)
+        return tuple((a, t) for a, _e, _c, t, _p in self._dictionary())
 
     # -- lineage -----------------------------------------------------------
     def _append_lineage(self, rows: list) -> None:
@@ -97,13 +116,14 @@ class KgBuildJob:
             return None
         return self.spark.read.parquet(str(path))
 
-    def _record_stage(self, run_id: str, stage: str, per_part_counts: list,
-                      wall_ms: int) -> None:
+    def _stage_rows(self, run_id: str, stage: str, table: str,
+                    wall_ms: int) -> list:
+        """One ok lineage row per part_id the table's last write wrote,
+        counted from that write's manifest."""
         now = datetime.datetime.now()
-        self._append_lineage([
-            (run_id, int(pid), stage, "ok", int(n), wall_ms, now)
-            for pid, n in per_part_counts
-        ])
+        counts = self.wh.manifest(table)["record_counts"]
+        return [(run_id, int(key.removeprefix("part_id=")), stage, "ok", n,
+                 wall_ms, now) for key, n in counts.items()]
 
     # -- stages -------------------------------------------------------------
     def run(self, pages: DataFrame, run_id: str = "run-1",
@@ -133,54 +153,47 @@ class KgBuildJob:
             self.wh.write_table(docs, "markdown_docs",
                                 partition_by=("part_id",))
             wall_ms = int((time.monotonic() - t0) * 1000)
-            counts = [(r.part_id, r.n) for r in
-                      self.wh.read_table("markdown_docs")
-                      .join(todo.select("part_id").distinct(), "part_id",
-                            "left_semi")
-                      .groupBy("part_id").agg(F.count("*").alias("n"))
-                      .collect()]
-            self._record_stage(run_id, "extract", counts, wall_ms)
+            # resume reads these rows: append them before any later
+            # stage can fail
+            self._append_lineage(self._stage_rows(
+                run_id, "extract", "markdown_docs", wall_ms))
 
         docs = self.wh.read_table("markdown_docs")
+        ledger: list = []   # later stages' lineage rows, one append
 
-        # downstream stages, each lineage-recorded with per-bucket counts.
-        # The mining gazetteer comes from the SAME aliases the linking
-        # stage uses — a caller-injected dictionary must drive mention
-        # detection too, or custom aliases silently produce an empty KG.
-        # (alias_rows() order is preserved for the default fixture dict,
-        # keeping the byte-pinned fixture behavior; injected dicts are
-        # collected in a deterministic order — the dictionary is the
-        # bounded broadcast side, so the collect is small by contract.)
-        gaz_entries = self._gazetteer_entries()
-
-        def per_part(df: DataFrame) -> list:
-            keyed = with_part_id(df, self.n_buckets)
-            return [(r.part_id, r.n) for r in
-                    keyed.groupBy("part_id").agg(F.count("*").alias("n"))
-                    .collect()]
+        # The mining gazetteer comes from the SAME dictionary the links
+        # are scored against — a caller-injected dictionary must drive
+        # mention detection too, or custom aliases silently produce an
+        # empty KG.  One collect feeds both: the matcher carries each
+        # surface's best link and ships once per executor.
+        rows = self._dictionary()
+        gaz = self.spark.sparkContext.broadcast(rules.Gazetteer(
+            ((a, t) for a, _e, _c, t, _p in rows), rules.best_links(rows)))
 
         t0 = time.monotonic()
-        mined = kg_ops.mine_kg_combined(docs, gaz_entries).persist()
-        mentions, triples = kg_ops.split_mined(mined)
-        self.wh.write_table(with_part_id(mentions, self.n_buckets),
-                            "mentions", partition_by=("part_id",))
-        self.wh.write_table(with_part_id(triples, self.n_buckets),
-                            "triples", partition_by=("part_id",))
-        mined.unpersist()
+        mined = kg_ops.mine_kg_combined(docs, gaz).persist()
+        try:
+            mentions, triples = kg_ops.split_mined(mined)
+            self.wh.write_table(with_part_id(mentions, self.n_buckets),
+                                "mentions", partition_by=("part_id",))
+            self.wh.write_table(with_part_id(triples, self.n_buckets),
+                                "triples", partition_by=("part_id",))
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            ledger += self._stage_rows(run_id, "mine", "mentions", wall_ms)
+
+            t0 = time.monotonic()
+            self.wh.write_table(
+                with_part_id(kg_ops.mined_links(mined), self.n_buckets),
+                "entity_links", partition_by=("part_id",))
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            ledger += self._stage_rows(run_id, "link", "entity_links",
+                                       wall_ms)
+        finally:
+            mined.unpersist()
+            gaz.destroy()
         mentions = self.wh.read_table("mentions")
         triples = self.wh.read_table("triples")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record_stage(run_id, "mine", per_part(mentions.select("url")),
-                           wall_ms)
-
-        t0 = time.monotonic()
-        links = kg_ops.link_entities(mentions, self.aliases, salt=self.salt)
-        self.wh.write_table(with_part_id(links, self.n_buckets),
-                            "entity_links", partition_by=("part_id",))
         links = self.wh.read_table("entity_links")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record_stage(run_id, "link", per_part(links.select("url")),
-                           wall_ms)
 
         t0 = time.monotonic()
         # CC convergence telemetry (round-4 verdict item 8): every
@@ -191,7 +204,6 @@ class KgBuildJob:
         # n_rows => a deep component, shrinking => raise max_iter).
         # The driver-sized local union-find path has no rounds and
         # records nothing.
-        cc_rounds: list = []
         t_round = [time.monotonic()]
 
         def record_cc_round(round_idx: int, n_changed: int,
@@ -199,20 +211,15 @@ class KgBuildJob:
             # per-ROUND wall, not the cumulative stage wall: the whole
             # point of the trajectory is seeing WHICH rounds were slow
             now_s = time.monotonic()
-            cc_rounds.append(
-                (round_idx, n_changed, int((now_s - t_round[0]) * 1000)))
+            ledger.append((run_id, round_idx, "cc_round", "ok", n_changed,
+                           int((now_s - t_round[0]) * 1000),
+                           datetime.datetime.now()))
             t_round[0] = now_s
 
         cmap = kg_ops.connected_components(
             kg_ops.coreference_edges(links),
             local_solve_threshold=self.cc_local_solve_threshold,
             on_round=record_cc_round)
-        if cc_rounds:
-            now = datetime.datetime.now()
-            self._append_lineage([
-                (run_id, int(rnd), "cc_round", "ok", int(n_changed),
-                 wall_round, now)
-                for rnd, n_changed, wall_round in cc_rounds])
         self.wh.write_table(cmap, "canonical_map")
         cmap = self.wh.read_table("canonical_map")
         nodes = kg_ops.build_kg_nodes(cmap, mentions, self.aliases)
@@ -220,8 +227,10 @@ class KgBuildJob:
         self.wh.write_table(nodes, "kg_nodes")
         self.wh.write_table(edges, "kg_edges")
         wall_ms = int((time.monotonic() - t0) * 1000)
-        n_nodes = self.wh.read_table("kg_nodes").count()
-        self._record_stage(run_id, "graph", [(GLOBAL_PART, n_nodes)], wall_ms)
+        n_nodes = sum(self.wh.manifest("kg_nodes")["record_counts"].values())
+        ledger.append((run_id, GLOBAL_PART, "graph", "ok", n_nodes, wall_ms,
+                       datetime.datetime.now()))
+        self._append_lineage(ledger)
 
         return {name: self.wh.read_table(name) for name in (
             "markdown_docs", "mentions", "triples", "entity_links",

@@ -47,11 +47,7 @@ def run_oracle(pages: Iterable[Tuple[str, str]],
     gaz = rules.Gazetteer(gaz_entries)
 
     markdown_docs, mentions, triples, links = [], [], [], []
-
-    # alias lookup: normalized surface -> [(alias, entity_id, prior)]
-    alias_by_norm: Dict[str, list] = defaultdict(list)
-    for alias, eid, _canon, _etype, prior in alias_rows:
-        alias_by_norm[rules.norm_surface(alias)].append((alias, eid, prior))
+    link_of = rules.best_links(alias_rows)
 
     for url, html_text in pages:
         res = extract_page(url, html_text, config)
@@ -67,18 +63,11 @@ def run_oracle(pages: Iterable[Tuple[str, str]],
         for sid, subj, pred, obj, conf in rules.extract_triples(sentences):
             triples.append((url, sid, subj, pred, obj, conf))
 
-        # best link per mention: max score, tie -> lowest entity_id
+        # best link per mention: every surface is an alias, so its
+        # link is the dictionary's best link for that surface
         for sid, start, end, surface, mtype in doc_mentions:
-            cands = alias_by_norm.get(rules.norm_surface(surface), [])
-            best = None
-            for alias, eid, prior in cands:
-                score = rules.link_score(surface, alias, prior)
-                key = (-score, eid)
-                if best is None or key < best[0]:
-                    best = (key, eid, score)
-            if best is not None:
-                mention_key = f"{url}#{sid}#{start}"
-                links.append((url, mention_key, best[1], best[2]))
+            eid, score = link_of[surface]
+            links.append((url, f"{url}#{sid}#{start}", eid, score))
 
     # canonicalization: CC over surface<->entity winning-link graph
     uf = UnionFind()

@@ -90,14 +90,22 @@ class Gazetteer:
     Both word tests go through ``re`` so Unicode word characters
     classify exactly as ``\\b`` does."""
 
-    def __init__(self, entries: Iterable[Tuple[str, str]]):
+    def __init__(self, entries: Iterable[Tuple[str, str]],
+                 links: Optional[Dict[str, Tuple[int, float]]] = None):
         """entries: (alias_surface, mtype); the first mtype seen for a
         surface wins.  Empty surfaces can never match and are dropped
-        (a caller-supplied alias dictionary may carry a blank alias)."""
+        (a caller-supplied alias dictionary may carry a blank alias).
+
+        links: optional :func:`best_links` of the same dictionary.  A
+        linked gazetteer's ``types`` values (and the fourth field of
+        each ``find`` match) are ``(mtype, entity_id, score)`` instead
+        of the bare mtype, so the link rides the matcher's own dict."""
+        self.linked = links is not None
         self.types: Dict[str, str] = {}
         for surface, mtype in entries:
             if surface and surface not in self.types:
-                self.types[surface] = mtype
+                self.types[surface] = (mtype, *links[surface]) \
+                    if self.linked else mtype
         lengths: Dict[str, set] = {}
         for s in self.types:
             run = _WORD_RUN_RE.match(s)
@@ -114,7 +122,8 @@ class Gazetteer:
         self._starts = re.compile(rf"\w+|[{non_word}]" if non_word else r"\w+")
 
     def find(self, sentence: str) -> List[Tuple[int, int, str, str]]:
-        """Non-overlapping mentions: (start, end, surface, mtype)."""
+        """Non-overlapping mentions: (start, end, surface, mtype), or
+        (start, end, surface, (mtype, entity_id, score)) when linked."""
         types, word_final = self.types, self._word_final
         buckets, word_at = self._buckets, _WORD_RE.match
         out = []
@@ -208,6 +217,36 @@ def link_score(surface: str, alias: str, prior: float) -> float:
     is discounted.  Mirrored exactly by the Spark column expression in
     operators/kg.py (and the DuckDB oracle SQL)."""
     return prior if surface == alias else 0.7 * prior
+
+
+def best_links(rows: Iterable[tuple]) -> Dict[str, Tuple[int, Optional[float]]]:
+    """{alias: (entity_id, score)}: the best link of a mention whose
+    surface is that alias.  rows: alias-dictionary rows (alias,
+    entity_id, canonical, etype, prior).
+
+    A mention's surface is always one of the dictionary's aliases, so
+    its best link depends on the surface alone: max ``link_score`` over
+    the aliases with the same ``norm_surface``, tie -> lowest
+    entity_id.  A null prior scores null and loses to any scored
+    candidate (Spark's null-lowest struct order in ``link_entities``).
+    Null aliases never match and are skipped."""
+    by_norm: Dict[str, list] = {}
+    for alias, eid, _canon, _etype, prior in rows:
+        if alias is not None:
+            by_norm.setdefault(norm_surface(alias), []).append(
+                (alias, eid, prior))
+    out: Dict[str, Tuple[int, Optional[float]]] = {}
+    for cands in by_norm.values():
+        for surface in {alias for alias, _eid, _prior in cands}:
+            best = None
+            for alias, eid, prior in cands:
+                score = (None if prior is None
+                         else link_score(surface, alias, prior))
+                key = (score is not None, score or 0.0, -eid)
+                if best is None or key > best[0]:
+                    best = (key, eid, score)
+            out[surface] = best[1:]
+    return out
 
 
 # ---------------------------------------------------------------------------

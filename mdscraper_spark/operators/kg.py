@@ -2,20 +2,23 @@
 
 Stage map (BASELINE.json:6):
   markdown_docs --mapInPandas--> mentions, triples      (narrow, no shuffle)
-  mentions x alias_dict --broadcast/salted join--> entity_links
+      entity_links scored in the same mining pass (linked gazetteer)
   entity_links --iterative min-label propagation--> canonical_map
   canonical_map + mentions/triples --shuffle agg--> kg_nodes, kg_edges
 
 Scale notes:
-* the alias dictionary is broadcast by default (it is small); past the
-  broadcast threshold the auto path takes a plain shuffle sort-merge
-  join and lets AQE's skew split absorb hub aliases (measured 4x
-  faster than hand-salting on the skewed bench workload); the explicit
-  salted path remains for AQE-off sessions — salt spreads each hub
-  alias over S shuffle partitions without changing any output value;
-* best-link-per-mention is a max_by aggregate with a TOTAL order key
-  (score desc, entity_id asc): partial map-side aggregation collapses
-  candidates before the shuffle, and results are partition-invariant;
+* a mention's surface is always an alias, so its best link is a
+  function of the dictionary alone (rules.best_links): the batch job
+  broadcasts one linked gazetteer per executor and the mining pass
+  emits each mention's entity_id/score — no join, no shuffle;
+* ``link_entities`` is the join form of the same rule, for mention
+  streams mined without links: a broadcast hash join by default; past
+  the broadcast threshold a plain shuffle sort-merge join that lets
+  AQE's skew split absorb hub aliases (measured 4x faster than
+  hand-salting on the skewed bench workload); the explicit salted
+  path remains for AQE-off sessions.  Its best-link-per-mention is a
+  max_by aggregate with a TOTAL order key (score desc, entity_id asc),
+  so results are partition-invariant;
 * canonicalization is size-gated (AQE-style): the distinct co-reference
   graph is a vocabulary graph, far smaller than the corpus — a driver
   union-find solves it in one collect when it fits; otherwise
@@ -30,6 +33,7 @@ from typing import Iterator, Optional, Union
 
 import pandas as pd
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -78,20 +82,30 @@ MINE_COMBINED_SCHEMA = StructType([
     StructField("pred", StringType(), True),
     StructField("obj", StringType(), True),
     StructField("conf", DoubleType(), True),
+    StructField("entity_id", LongType(), True),  # mention's best link
+    StructField("score", DoubleType(), True),
 ])
 
 
-def mine_kg_combined(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
+def mine_kg_combined(markdown_docs: DataFrame,
+                     gazetteer: Union[tuple, Broadcast]) -> DataFrame:
     """Mentions AND triples in ONE pass over the markdown: each
     document crosses the Arrow boundary and is sentence-split once.
-    The token-keyed gazetteer is built once per executor process
-    (rules.cached_gazetteer), amortized across Arrow batches.  Split
-    back out with :func:`split_mined`."""
+    Split back out with :func:`split_mined` (and :func:`mined_links`).
+
+    ``gazetteer`` is either the (alias, etype) entry tuple — the
+    token-keyed gazetteer is then built once per executor process
+    (rules.cached_gazetteer) and mention rows carry no link — or a
+    Broadcast of a linked ``rules.Gazetteer`` (built with
+    ``rules.best_links``), shipped once per executor; each mention row
+    then carries its best link's entity_id and score."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = rules.cached_gazetteer(gaz_entries)
+        gaz = (gazetteer.value if isinstance(gazetteer, Broadcast)
+               else rules.cached_gazetteer(gazetteer))
         cols = ("url", "kind", "sent_id", "span_start", "span_end",
-                "surface", "mtype", "subj", "pred", "obj", "conf")
+                "surface", "mtype", "subj", "pred", "obj", "conf",
+                "entity_id", "score")
         for pdf in batches:
             rows = {k: [] for k in cols}
 
@@ -103,16 +117,22 @@ def mine_kg_combined(markdown_docs: DataFrame, gaz_entries: tuple) -> DataFrame:
                 if markdown is None:
                     continue
                 sentences = rules.split_sentences(markdown)
-                for sid, start, end, surface, mtype in rules.detect_mentions(
+                for sid, start, end, surface, found in rules.detect_mentions(
                         sentences, gaz):
+                    mtype, eid, score = (found if gaz.linked
+                                         else (found, None, None))
                     emit(url=url, kind="mention", sent_id=sid,
                          span_start=start, span_end=end, surface=surface,
-                         mtype=mtype)
+                         mtype=mtype, entity_id=eid, score=score)
                 for sid, subj, pred, obj, conf in rules.extract_triples(
                         sentences):
                     emit(url=url, kind="triple", sent_id=sid, subj=subj,
                          pred=pred, obj=obj, conf=conf)
-            yield pd.DataFrame(rows)
+            out = pd.DataFrame(rows)
+            # nullable Int64: a float64 NaN column would round ids
+            # past 2**53
+            out["entity_id"] = pd.array(rows["entity_id"], dtype="Int64")
+            yield out
 
     return (markdown_docs.filter(F.col("status") == "ok")
             .select("url", "markdown")
@@ -132,6 +152,18 @@ def split_mined(mined: DataFrame) -> tuple:
     triples = (mined.filter(F.col("kind") == "triple")
                .select("url", "sent_id", "subj", "pred", "obj", "conf"))
     return mentions, triples
+
+
+def mined_links(mined: DataFrame) -> DataFrame:
+    """entity_links(url, mention_key, entity_id, surface, score) of a
+    pass mined with a linked gazetteer: a narrow projection of its
+    mention rows, ``mention_key = url#sent_id#span_start``."""
+    return (mined.filter((F.col("kind") == "mention")
+                         & F.col("entity_id").isNotNull())
+            .select("url",
+                    F.concat_ws("#", "url", "sent_id", "span_start")
+                    .alias("mention_key"),
+                    "entity_id", "surface", "score"))
 
 
 # ---------------------------------------------------------------------------
@@ -213,7 +245,16 @@ def decide_salt(aliases: DataFrame) -> Optional[int]:
 
 def link_entities(mentions: DataFrame, aliases: DataFrame,
                   salt: Union[int, str, None] = "auto") -> DataFrame:
-    """Best entity link per mention.
+    """Best entity link per mention, as a join against the dictionary.
+
+    The batch job does not call this: it scores links in the mining
+    pass (:func:`mine_kg_combined` with a linked gazetteer).  The two
+    agree except in the surface normalization: this join keys on
+    :func:`_norm_col` (Spark ``lower()``, ASCII whitespace), the
+    mining pass on ``rules.norm_surface`` (Python ``casefold()``,
+    Unicode whitespace), so aliases that only casefold together
+    (``Straße`` / ``STRASSE``) are candidates of each other in the
+    mining pass and not here.
 
     ``salt="auto"`` (default) calls :func:`decide_salt`: broadcast hash
     join while the dictionary fits the broadcast threshold; beyond it a

@@ -43,6 +43,7 @@ import shutil
 import uuid
 from typing import Dict, List, Optional, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -82,6 +83,12 @@ class Warehouse:
         keeping every previous file visible.  Earlier snapshots' data
         files are never touched — time travel stays exact until
         ``expire_snapshots``.
+
+        The manifest's ``record_counts`` maps each partition key this
+        write produced (``""`` when unpartitioned) to its row count:
+        the rows of THIS snapshot only — an append or a dynamic
+        overwrite lists just the partitions it wrote, an empty write
+        lists none.
 
         ``properties`` (JSON-able dict) is committed INSIDE the new
         snapshot manifest — the Iceberg snapshot-properties analog that
@@ -127,15 +134,17 @@ class Warehouse:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(str(data_dir))
 
-        # discover the partition keys this snapshot wrote (leaf dirs
-        # with data files, relative to the snapshot dir)
-        written: List[str] = []
-        if partition_by:
-            for leaf in sorted({p.parent.relative_to(data_dir).as_posix()
-                                for p in data_dir.rglob("*.parquet")}):
-                written.append(leaf)
-        elif any(data_dir.rglob("*.parquet")):
-            written.append("")
+        # the partition keys this snapshot wrote (leaf dirs with data
+        # files, relative to the snapshot dir) and their row counts,
+        # read from the new files' parquet footers — the manifest's
+        # per-file record_count, at no extra Spark job
+        record_counts: Dict[str, int] = {}
+        for f in sorted(data_dir.rglob("*.parquet")):
+            key = (f.parent.relative_to(data_dir).as_posix()
+                   if partition_by else "")
+            record_counts[key] = (record_counts.get(key, 0)
+                                  + pq.read_metadata(f).num_rows)
+        written = sorted(record_counts)
 
         parent = parent_m
         partitions: Dict[str, List[str]] = {}
@@ -162,6 +171,7 @@ class Warehouse:
             "partition_by": list(partition_by),
             "write_mode": mode,
             "partitions": partitions,
+            "record_counts": record_counts,
             "properties": dict(properties or {}),
             "bucket_by": list(bucket_by) if bucket_by is not None else None,
         }

@@ -23,10 +23,10 @@ def test_parser_full_flag_surface():
         "--prepend-source-link", "--root-url", "https://x/docs",
         "--exclude-pages", "skip*", "--exclude-selectors", ".ads", "#nav",
         "--extra-heading-space", "2,3", "--resume", "--n-buckets", "64",
-        "--salt", "8", "--run-id", "r9",
+        "--run-id", "r9",
     ])
     assert a.synthesize == 10 and a.content == ["zone-a", "zone-b"]
-    assert a.exclude_selectors == [".ads", "#nav"] and a.salt == 8
+    assert a.exclude_selectors == [".ads", "#nav"]
 
 
 def test_settings_yaml_and_json(tmp_path):

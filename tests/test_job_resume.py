@@ -99,6 +99,28 @@ def test_lineage_metrics_recorded(spark, tmp_path):
     assert all(r.wall_ms >= 0 for r in lineage.collect())
 
 
+def test_lineage_counts_equal_table_recounts(spark, tmp_path):
+    """Stage counts come from the writes' manifests, not from
+    re-scanning the tables; they must still equal a groupBy re-count
+    of each table, with one graph row carrying the node count."""
+    pages = bulk_pages_df(spark, N_PAGES)
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=N_BUCKETS)
+    tables = job.run(pages, run_id="r1")
+    got = sorted(tuple(r) for r in tables["lineage"]
+                 .select("stage", "part_id", "n_rows").collect())
+
+    def recount(stage, table):
+        return [(stage, r.part_id, r.n) for r in tables[table]
+                .groupBy("part_id").agg(F.count("*").alias("n")).collect()]
+
+    want = sorted(recount("extract", "markdown_docs")
+                  + recount("mine", "mentions")
+                  + recount("link", "entity_links")
+                  + [("graph", -1, tables["kg_nodes"].count())])
+    assert got == want
+    assert len(got) > 3 * 2
+
+
 def test_empty_corpus_flows_through_all_stages(spark, tmp_path):
     """A corpus with zero gazetteer hits/triples must still complete:
     empty partitioned writes leave no parquet files, so read_table must

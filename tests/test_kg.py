@@ -407,3 +407,130 @@ def test_pmi_cooccurrence_hand_graph(spark):
         ("cA", "cB"): (2, round(math.log(2 * 3 / (3 * 2)), 6)),
         ("cA", "cC"): (1, round(math.log(1 * 3 / (3 * 1)), 6)),
     }
+
+
+def _pipeline_tables(spark, docs, aliases, gaz_entries):
+    """The join-form reference: mine without links, then link_entities."""
+    mentions, triples = kg_ops.split_mined(
+        kg_ops.mine_kg_combined(docs, gaz_entries))
+    links = kg_ops.link_entities(mentions, aliases)
+    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
+    return {"entity_links": links, "canonical_map": cmap,
+            "kg_nodes": kg_ops.build_kg_nodes(cmap, mentions, aliases),
+            "kg_edges": kg_ops.build_kg_edges(triples, cmap)}
+
+
+def _rows(df):
+    cols = [c for c in df.columns if c != "part_id"]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _assert_job_equals_pipeline(job_tables, want):
+    for name, df in want.items():
+        assert _rows(job_tables[name]) == _rows(df), name
+    assert _rows(job_tables["entity_links"]), "no links scored"
+
+
+def test_job_links_in_mining_pass_equal_join_pipeline(spark_kg, spark,
+                                                      tmp_path):
+    """The job scores links inside the mining pass; its entity_links,
+    canonical_map, kg_nodes and kg_edges equal the mine + link_entities
+    join pipeline over the fixture dictionary."""
+    from mdscraper_spark.jobs.kg_build import KgBuildJob
+
+    tables = KgBuildJob(spark, str(tmp_path / "wh"), CFG).run(
+        bulk_pages_df(spark, N_PAGES))
+    _assert_job_equals_pipeline(tables, {
+        "entity_links": spark_kg["links"], "canonical_map": spark_kg["cmap"],
+        "kg_nodes": spark_kg["nodes"], "kg_edges": spark_kg["edges"]})
+
+
+def _custom_pages(spark, sentences):
+    import datetime
+
+    html = ("<div class='content'>"
+            + "".join(f"<p>{s}</p>" for s in sentences) + "</div>")
+    return spark.createDataFrame(
+        [(f"https://c{i}.test/p{i}", datetime.datetime(2025, 6, 14),
+          html.encode(), None, "en") for i in range(4)],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+
+
+_ALIAS_DDL = ("alias string, entity_id long, canonical string, "
+              "etype string, prior double")
+
+
+def test_job_links_equal_join_pipeline_custom_dictionary(spark, tmp_path):
+    """Edge cases of the mining-pass link rule against link_entities:
+    one alias shared by two entities at equal prior (tie -> lowest
+    entity_id), upper/lower-case variants of one alias (exact match
+    beats the discounted case-folded one, and vice versa by prior), a
+    null etype (first in Spark's sort, so it wins the mtype), and a
+    null prior (scores null, loses to any scored candidate)."""
+    from mdscraper_spark.jobs.kg_build import KgBuildJob
+
+    rows = [("Zorblax Corp", 907, "Zorblax Corporation", "ORG", 0.9),
+            ("Zorblax Corp", 903, "Zorblax Holdings", "ORG", 0.9),
+            ("ZORBLAX CORP", 905, "Zorblax Shouting", "ORG", 0.5),
+            ("Quuxana Vel", 901, "Quuxana Vel", "PERSON", 0.4),
+            ("quuxana vel", 902, "Quuxana V.", "PERSON", 1.0),
+            ("Plimbo", 910, "Plimbo Inc", "ORG", 1.0),
+            ("Plimbo", 911, "Plimbo Ltd", None, 1.0),
+            ("Grelt", 920, "Grelt Unscored", "ORG", None),
+            ("grelt", 921, "Grelt Scored", "ORG", 0.2),
+            ("Vosk", 930, "Vosk Null", "ORG", None),
+            ("Vosk", 931, "Vosk Null Too", "ORG", None)]
+    aliases = spark.createDataFrame(rows, _ALIAS_DDL)
+    pages = _custom_pages(spark, [
+        "Quuxana Vel works for Zorblax Corp.",
+        "quuxana vel works for ZORBLAX CORP.",
+        "Plimbo acquired Grelt.", "Vosk founded grelt."])
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                     aliases=aliases)
+    tables = job.run(pages)
+
+    gaz_entries = tuple(sorted(
+        ((a, t) for a, _e, _c, t, _p in rows),
+        key=lambda e: (e[0], e[1] is not None, e[1] or "")))
+    assert job._gazetteer_entries() == gaz_entries
+    _assert_job_equals_pipeline(tables, _pipeline_tables(
+        spark, tables["markdown_docs"], aliases, gaz_entries))
+
+    best = {(r.surface, r.entity_id, r.score)
+            for r in tables["entity_links"].collect()}
+    assert best == {("Zorblax Corp", 903, 0.9), ("ZORBLAX CORP", 903,
+                                                 0.9 * 0.7),
+                    ("Quuxana Vel", 902, 0.7), ("quuxana vel", 902, 1.0),
+                    ("Plimbo", 910, 1.0), ("Grelt", 921, 0.2 * 0.7),
+                    ("grelt", 921, 0.2), ("Vosk", 930, None)}
+    assert {r.mtype for r in tables["mentions"]
+            .filter("surface = 'Plimbo'").collect()} == {None}
+
+
+def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
+    """The mining pass normalizes surfaces with rules.norm_surface
+    (casefold), as run_oracle does; link_entities' Spark key is lower().
+    'Straße' and 'STRASSE' casefold together but do not lower together,
+    so the two link forms disagree here — the job follows the oracle."""
+    from mdscraper_spark.jobs.kg_build import KgBuildJob
+
+    rows = [("Straße", 1, "Strasse AG", "ORG", 1.0),
+            ("STRASSE", 2, "STRASSE GmbH", "ORG", 0.5),
+            ("Quuxana Vel", 3, "Quuxana Vel", "PERSON", 1.0)]
+    sentences = ["Quuxana Vel works for STRASSE.",
+                 "Quuxana Vel works for Straße."]
+    pages = _custom_pages(spark, sentences)
+    tables = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                        aliases=spark.createDataFrame(rows, _ALIAS_DDL)
+                        ).run(pages)
+    got = sorted((r.url, r.mention_key, r.entity_id, r.score)
+                 for r in tables["entity_links"].collect())
+    oracle = run_oracle([(r.url, r.html.decode()) for r in pages.collect()],
+                        rows, CFG)
+    assert got == oracle["entity_links"]
+    assert {(r[2], r[3]) for r in got} == {(1, 1.0), (1, 0.7), (3, 1.0)}
+    joined = kg_ops.link_entities(tables["mentions"].drop("part_id"),
+                                  spark.createDataFrame(rows, _ALIAS_DDL))
+    assert {r.entity_id for r in joined.filter("surface = 'STRASSE'")
+            .collect()} == {2}

@@ -226,3 +226,48 @@ def test_changes_across_schema_evolution(spark, wh):
     rows = {(r.k, r.v, r.tag, r._change_type) for r in
             wh.changes("t", s1, s2, key_cols=("k",)).collect()}
     assert rows == {("b", 2, "new", "insert")}
+
+
+def test_manifest_record_counts_per_written_partition(spark, wh):
+    """Each snapshot manifest carries the rows it wrote per partition
+    key, read from the new files' parquet footers: only the
+    partitions a dynamic overwrite or append wrote, {} for an empty
+    partitioned write, and the whole table again after compaction."""
+    from pyspark.sql.types import LongType, StringType, StructField, \
+        StructType
+
+    wh.write_table(_df(spark, [(0, "a", 1), (1, "b", 2), (1, "c", 3),
+                               (2, "d", 4)]), "t", partition_by=("part_id",))
+    assert wh.manifest("t")["record_counts"] == {
+        "part_id=0": 1, "part_id=1": 2, "part_id=2": 1}
+    # dynamic overwrite: only the partitions this write produced
+    wh.write_table(_df(spark, [(1, "B", 5), (1, "C", 6), (1, "D", 7)]), "t",
+                   partition_by=("part_id",))
+    assert wh.manifest("t")["record_counts"] == {"part_id=1": 3}
+    # append: this snapshot's rows, not the partition total
+    wh.write_table(_df(spark, [(0, "e", 8), (3, "f", 9)]), "t",
+                   partition_by=("part_id",), mode="append")
+    assert wh.manifest("t")["record_counts"] == {"part_id=0": 1,
+                                                 "part_id=3": 1}
+    # compaction rewrites every partition: counts equal a re-count
+    for _ in range(2):
+        wh.compact("t")
+        want = {f"part_id={r.part_id}": r.n for r in wh.read_table("t")
+                .groupBy("part_id").agg(F.count("*").alias("n")).collect()}
+        assert wh.manifest("t")["record_counts"] == want == {
+            "part_id=0": 2, "part_id=1": 3, "part_id=2": 1, "part_id=3": 1}
+
+    # unpartitioned: one "" key, also through compaction
+    wh.write_table(_df(spark, [(0, "a", 1), (5, "b", 2)]), "u")
+    assert wh.manifest("u")["record_counts"] == {"": 2}
+    wh.write_table(_df(spark, [(0, "c", 3)]), "u", mode="append")
+    assert wh.manifest("u")["record_counts"] == {"": 1}
+    wh.compact("u")
+    assert wh.manifest("u")["record_counts"] == {"": 3}
+
+    # empty partitioned write: no files, no counts
+    schema = StructType([StructField("part_id", LongType()),
+                         StructField("k", StringType())])
+    wh.write_table(spark.createDataFrame([], schema), "e",
+                   partition_by=("part_id",))
+    assert wh.manifest("e")["record_counts"] == {}
