@@ -5,8 +5,16 @@ Stage pipeline (SURVEY.md §3.2), driven as one batch job:
   pages -> [extract] markdown_docs          resumable per url-host bucket
         -> [mine]    mentions, triples      narrow Arrow stages
         -> [link]    entity_links           scored in the mining pass
-        -> [canon]   canonical_map          iterative CC
-        -> [graph]   kg_nodes, kg_edges     shuffle agg + write
+        -> [canon]   canonical_map          driver union-find over
+                                            mentioned surfaces
+        -> [graph]   kg_nodes, kg_edges     driver counts; edges one
+                                            shuffle agg
+
+Canonicalization runs no Spark job: every mention surface is an alias
+of the job's dictionary, so one groupBy of the mined mentions per
+surface (at most |dictionary| rows) reaches the driver, which builds
+canonical_map and kg_nodes (kg_ops.canonicalize_surfaces) and writes
+them, and the lineage, with pyarrow (Warehouse.write_rows).
 
 Stage row counts in the lineage come from the writes themselves (the
 warehouse manifest's ``record_counts``), never from re-scanning a
@@ -20,14 +28,15 @@ bucket universe against lineage rows with status='ok' and re-extracts
 only missing buckets; writes are dynamic-partition overwrites, so
 re-running a bucket is idempotent.  Downstream stages are recomputed
 from the (then complete) markdown_docs table — they are global
-(connected components cross every partition boundary) and cheap
-relative to extraction.
+(one canonical map and one node count over every bucket's mentions)
+and cheap relative to extraction.
 """
 
 from __future__ import annotations
 
 import datetime
 import time
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +57,7 @@ from mdscraper_spark.operators.extract_udfs import (extract_markdown,
                                                     with_doc_path)
 from mdscraper_spark.sources import fixtures
 from mdscraper_spark.sources.pages import with_part_id
-from mdscraper_spark.sources.tables import Warehouse
+from mdscraper_spark.sources.tables import Warehouse, write_parquet_rows
 
 LINEAGE_SCHEMA = StructType([
     StructField("run_id", StringType(), False),
@@ -64,24 +73,20 @@ GLOBAL_PART = -1  # lineage part_id for non-bucketed (global) stages
 
 
 class KgBuildJob:
-    # the job scores links in the mining pass; kept for callers that
-    # replay its stages through kg_ops.link_entities
+    # the job scores links in the mining pass and canonicalizes on the
+    # driver; both kept for callers that replay its stages through
+    # kg_ops.link_entities and kg_ops.connected_components
     salt = "auto"
+    cc_local_solve_threshold = 2_000_000
 
     def __init__(self, spark: SparkSession, warehouse_path: str,
                  config: Optional[ExtractConfig] = None,
                  n_buckets: int = 16,
-                 aliases: Optional[DataFrame] = None,
-                 cc_local_solve_threshold: int = 2_000_000) -> None:
+                 aliases: Optional[DataFrame] = None) -> None:
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_path)
         self.config = config or ExtractConfig()
         self.n_buckets = n_buckets
-        # size gate for canonicalization (passed straight to
-        # connected_components); 0 forces the distributed
-        # label-propagation path — production web-scale behavior, and
-        # the path whose cc_round telemetry the lineage table records
-        self.cc_local_solve_threshold = cc_local_solve_threshold
         self._custom_aliases = aliases is not None
         self.aliases = aliases if aliases is not None else kg_ops.alias_df(spark)
 
@@ -107,8 +112,12 @@ class KgBuildJob:
 
     # -- lineage -----------------------------------------------------------
     def _append_lineage(self, rows: list) -> None:
-        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        df.write.mode("append").parquet(str(self.wh.table_path("lineage")))
+        """One pyarrow file per append (no Spark job); Spark reads it
+        back next to Spark-written lineage files with the same types."""
+        path = self.wh.table_path("lineage")
+        path.mkdir(parents=True, exist_ok=True)
+        write_parquet_rows(rows, LINEAGE_SCHEMA,
+                           path / f"part-{uuid.uuid4()}.parquet")
 
     def _lineage(self) -> Optional[DataFrame]:
         path = self.wh.table_path("lineage")
@@ -120,7 +129,7 @@ class KgBuildJob:
                     wall_ms: int) -> list:
         """One ok lineage row per part_id the table's last write wrote,
         counted from that write's manifest."""
-        now = datetime.datetime.now()
+        now = datetime.datetime.now(datetime.timezone.utc)
         counts = self.wh.manifest(table)["record_counts"]
         return [(run_id, int(key.removeprefix("part_id=")), stage, "ok", n,
                  wall_ms, now) for key, n in counts.items()]
@@ -167,8 +176,9 @@ class KgBuildJob:
         # empty KG.  One collect feeds both: the matcher carries each
         # surface's best link and ships once per executor.
         rows = self._dictionary()
+        link_of = rules.best_links(rows)
         gaz = self.spark.sparkContext.broadcast(rules.Gazetteer(
-            ((a, t) for a, _e, _c, t, _p in rows), rules.best_links(rows)))
+            ((a, t) for a, _e, _c, t, _p in rows), link_of))
 
         t0 = time.monotonic()
         mined = kg_ops.mine_kg_combined(docs, gaz).persist()
@@ -188,48 +198,27 @@ class KgBuildJob:
             wall_ms = int((time.monotonic() - t0) * 1000)
             ledger += self._stage_rows(run_id, "link", "entity_links",
                                        wall_ms)
+
+            t0 = time.monotonic()
+            # at most |dictionary| rows: every surface is an alias
+            n_by_surface = dict(
+                mentions.groupBy("surface").count().collect())
+            cmap_rows, node_rows = kg_ops.canonicalize_surfaces(
+                n_by_surface, link_of, rows)
+            self.wh.write_rows(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA,
+                               "canonical_map")
+            self.wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA,
+                               "kg_nodes")
+            self.wh.write_table(
+                kg_ops.mined_edges(mined,
+                                   self.wh.read_table("canonical_map")),
+                "kg_edges")
+            wall_ms = int((time.monotonic() - t0) * 1000)
         finally:
             mined.unpersist()
             gaz.destroy()
-        mentions = self.wh.read_table("mentions")
-        triples = self.wh.read_table("triples")
-        links = self.wh.read_table("entity_links")
-
-        t0 = time.monotonic()
-        # CC convergence telemetry (round-4 verdict item 8): every
-        # distributed label-propagation round lands in lineage as
-        # stage='cc_round' with part_id = round index and
-        # n_rows = changed-label count, so a production
-        # non-convergence is diagnosable from the trajectory (flat
-        # n_rows => a deep component, shrinking => raise max_iter).
-        # The driver-sized local union-find path has no rounds and
-        # records nothing.
-        t_round = [time.monotonic()]
-
-        def record_cc_round(round_idx: int, n_changed: int,
-                            n_nodes: int) -> None:
-            # per-ROUND wall, not the cumulative stage wall: the whole
-            # point of the trajectory is seeing WHICH rounds were slow
-            now_s = time.monotonic()
-            ledger.append((run_id, round_idx, "cc_round", "ok", n_changed,
-                           int((now_s - t_round[0]) * 1000),
-                           datetime.datetime.now()))
-            t_round[0] = now_s
-
-        cmap = kg_ops.connected_components(
-            kg_ops.coreference_edges(links),
-            local_solve_threshold=self.cc_local_solve_threshold,
-            on_round=record_cc_round)
-        self.wh.write_table(cmap, "canonical_map")
-        cmap = self.wh.read_table("canonical_map")
-        nodes = kg_ops.build_kg_nodes(cmap, mentions, self.aliases)
-        edges = kg_ops.build_kg_edges(triples, cmap)
-        self.wh.write_table(nodes, "kg_nodes")
-        self.wh.write_table(edges, "kg_edges")
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        n_nodes = sum(self.wh.manifest("kg_nodes")["record_counts"].values())
-        ledger.append((run_id, GLOBAL_PART, "graph", "ok", n_nodes, wall_ms,
-                       datetime.datetime.now()))
+        ledger.append((run_id, GLOBAL_PART, "graph", "ok", len(node_rows),
+                       wall_ms, datetime.datetime.now(datetime.timezone.utc)))
         self._append_lineage(ledger)
 
         return {name: self.wh.read_table(name) for name in (

@@ -3,8 +3,8 @@
 Stage map (BASELINE.json:6):
   markdown_docs --mapInPandas--> mentions, triples      (narrow, no shuffle)
       entity_links scored in the same mining pass (linked gazetteer)
-  entity_links --iterative min-label propagation--> canonical_map
-  canonical_map + mentions/triples --shuffle agg--> kg_nodes, kg_edges
+  mention counts per surface --driver union-find--> canonical_map, kg_nodes
+  canonical_map + triples --shuffle agg--> kg_edges
 
 Scale notes:
 * a mention's surface is always an alias, so its best link is a
@@ -19,12 +19,20 @@ Scale notes:
   path remains for AQE-off sessions.  Its best-link-per-mention is a
   max_by aggregate with a TOTAL order key (score desc, entity_id asc),
   so results are partition-invariant;
-* canonicalization is size-gated (AQE-style): the distinct co-reference
-  graph is a vocabulary graph, far smaller than the corpus — a driver
-  union-find solves it in one collect when it fits; otherwise
-  hash-partitioned min-label propagation with exact changed-label
-  convergence probes (Observation metrics riding each round's action)
-  and localCheckpoint lineage cuts (SURVEY.md §4.3).
+* the batch job canonicalizes on the driver: every mention surface is
+  an alias of the dictionary it already holds, so the co-reference
+  graph has at most |dictionary| surface nodes.  One groupBy of the
+  mined mentions per surface reaches the driver, and
+  :func:`canonicalize_surfaces` builds canonical_map and kg_nodes from
+  it (union-find, no Spark job); kg_edges joins the mined triples'
+  ``rules.surface_node`` ids against the broadcast map;
+* :func:`connected_components` serves the other callers (dedup, graph
+  operators, the registry and the stream), whose graphs are not bounded
+  by a dictionary: size-gated (AQE-style) — a driver union-find in one
+  collect when the distinct edge set fits; otherwise hash-partitioned
+  min-label propagation with exact changed-label convergence probes
+  (Observation metrics riding each round's action) and
+  localCheckpoint lineage cuts (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -84,6 +92,8 @@ MINE_COMBINED_SCHEMA = StructType([
     StructField("conf", DoubleType(), True),
     StructField("entity_id", LongType(), True),  # mention's best link
     StructField("score", DoubleType(), True),
+    StructField("subj_node", StringType(), True),  # rules.surface_node
+    StructField("obj_node", StringType(), True),
 ])
 
 
@@ -98,14 +108,16 @@ def mine_kg_combined(markdown_docs: DataFrame,
     (rules.cached_gazetteer) and mention rows carry no link — or a
     Broadcast of a linked ``rules.Gazetteer`` (built with
     ``rules.best_links``), shipped once per executor; each mention row
-    then carries its best link's entity_id and score."""
+    then carries its best link's entity_id and score.  Triple rows
+    carry their subject's and object's ``rules.surface_node`` ids
+    (``subj_node``/``obj_node``), the ids :func:`mined_edges` joins on."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz = (gazetteer.value if isinstance(gazetteer, Broadcast)
                else rules.cached_gazetteer(gazetteer))
         cols = ("url", "kind", "sent_id", "span_start", "span_end",
                 "surface", "mtype", "subj", "pred", "obj", "conf",
-                "entity_id", "score")
+                "entity_id", "score", "subj_node", "obj_node")
         for pdf in batches:
             rows = {k: [] for k in cols}
 
@@ -127,7 +139,9 @@ def mine_kg_combined(markdown_docs: DataFrame,
                 for sid, subj, pred, obj, conf in rules.extract_triples(
                         sentences):
                     emit(url=url, kind="triple", sent_id=sid, subj=subj,
-                         pred=pred, obj=obj, conf=conf)
+                         pred=pred, obj=obj, conf=conf,
+                         subj_node=rules.surface_node(subj),
+                         obj_node=rules.surface_node(obj))
             out = pd.DataFrame(rows)
             # nullable Int64: a float64 NaN column would round ids
             # past 2**53
@@ -325,6 +339,19 @@ def link_entities(mentions: DataFrame, aliases: DataFrame,
 # I5 — canonicalization: connected components by min-label propagation
 # ---------------------------------------------------------------------------
 
+CANONICAL_MAP_SCHEMA = StructType([
+    StructField("node_id", StringType(), False),
+    StructField("canon_id", StringType(), False),
+])
+
+# the schema build_kg_nodes' plan gives kg_nodes
+KG_NODES_SCHEMA = StructType([
+    StructField("canon_id", StringType(), True),
+    StructField("label", StringType(), True),
+    StructField("n_mentions", LongType(), True),
+])
+
+
 def coreference_edges(entity_links: DataFrame) -> DataFrame:
     """Winning links induce the surface<->entity co-reference graph."""
     s_node = F.concat(F.lit("s:"), _norm_col(F.col("surface")))
@@ -355,6 +382,40 @@ def _local_union_find(pairs) -> list:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo                    # min root wins
     return [(n, find(n)) for n in sorted(nodes)]
+
+
+def canonicalize_surfaces(n_by_surface: dict, link_of: dict,
+                          dictionary_rows) -> tuple:
+    """Driver-side canonicalization of one mining pass: (canonical_map
+    rows, kg_nodes rows), equal to :func:`connected_components` over
+    the pass's links followed by :func:`build_kg_nodes`.
+
+    n_by_surface: {surface: mentions} of the pass; link_of:
+    ``rules.best_links(dictionary_rows)``.  Every mention surface is
+    an alias, so the co-reference graph is the union-find over the
+    distinct (surface node, best-link entity node) pairs of at most
+    |dictionary| surfaces.  Node counts are summed per canon id; an
+    entity root is labelled with each distinct canonical name the
+    dictionary gives it (one row per name, as the label join emits),
+    a surface root with its bare surface."""
+    cmap_rows = _local_union_find({
+        (rules.surface_node(s), rules.entity_node(link_of[s][0]))
+        for s in n_by_surface if link_of[s][0] is not None})
+    canon_of = dict(cmap_rows)
+    n_by_canon: dict = {}
+    for surface, n in n_by_surface.items():
+        node = rules.surface_node(surface)
+        canon = canon_of.get(node, node)
+        n_by_canon[canon] = n_by_canon.get(canon, 0) + n
+    names: dict = {}
+    for _alias, eid, canonical, _etype, _prior in dictionary_rows:
+        names.setdefault(rules.entity_node(eid), set()).add(canonical)
+    node_rows = [
+        (cid, cid[2:] if name is None else name, n)
+        for cid, n in sorted(n_by_canon.items())
+        for name in sorted(names.get(cid, {None}),
+                           key=lambda c: (c is not None, c or ""))]
+    return cmap_rows, node_rows
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
@@ -402,12 +463,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
                 # partition — pathological for a small wide df)
                 rows = _local_union_find(
                     (r[0], r[1]) for r in dedup.collect())
-                spark = edges.sparkSession
-                schema = StructType([
-                    StructField("node_id", StringType(), False),
-                    StructField("canon_id", StringType(), False),
-                ])
-                out = spark.createDataFrame(rows, schema)
+                out = edges.sparkSession.createDataFrame(
+                    rows, CANONICAL_MAP_SCHEMA)
                 out._mdscraper_local = True   # driver-sized by the gate
                 return out
             # distributed path: build the undirected set FROM the
@@ -555,22 +612,28 @@ def build_kg_nodes_from_counts(canonical_map: DataFrame,
     return _label_nodes(counted, aliases)
 
 
+def _surface_nodes(triples: DataFrame) -> DataFrame:
+    """subj_node/obj_node of raw (subj, pred, obj) triples mined
+    without them, keyed like :func:`coreference_edges` keys surfaces."""
+    return (triples
+            .withColumn("subj_node",
+                        F.concat(F.lit("s:"), _norm_col(F.col("subj"))))
+            .withColumn("obj_node",
+                        F.concat(F.lit("s:"), _norm_col(F.col("obj")))))
+
+
 def _canonicalized_triples(triples: DataFrame,
                            canonical_map: DataFrame) -> DataFrame:
-    """Shared front half of the edge builders: map raw (subj, pred,
-    obj) surfaces onto canonical ids via two left joins on the
-    canonical_map (broadcast-hinted only when the size gate proved it
-    driver-sized); unlinked surfaces keep their surface node id.
-    Passes every other input column (url, sent_id, conf, warc_ts,
-    n_support, ...) through for downstream aggregation."""
+    """Shared front half of the edge builders: map triples' subj_node/
+    obj_node onto canonical ids via two left joins on the canonical_map
+    (broadcast-hinted only when the size gate proved it driver-sized);
+    unlinked surfaces keep their surface node id.  Passes every other
+    input column (url, sent_id, conf, warc_ts, n_support, ...) through
+    for downstream aggregation."""
     cmap = _maybe_broadcast(canonical_map)
-    subj_node = F.concat(F.lit("s:"), _norm_col(F.col("subj")))
-    obj_node = F.concat(F.lit("s:"), _norm_col(F.col("obj")))
-    t = (triples
-         .withColumn("subj_node", subj_node)
-         .withColumn("obj_node", obj_node))
-    t = (t.join(cmap.withColumnRenamed("node_id", "subj_node")
-                .withColumnRenamed("canon_id", "src_canon"), "subj_node", "left")
+    t = (triples.join(cmap.withColumnRenamed("node_id", "subj_node")
+                      .withColumnRenamed("canon_id", "src_canon"),
+                      "subj_node", "left")
          .join(cmap.withColumnRenamed("node_id", "obj_node")
                .withColumnRenamed("canon_id", "dst_canon"), "obj_node", "left"))
     return (t.withColumn("src", F.coalesce("src_canon", "subj_node"))
@@ -581,8 +644,9 @@ def _canonicalized_triples(triples: DataFrame,
 def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
                      n_support, *extra_aggs) -> DataFrame:
     """The one edge aggregation every edge builder shares: canonicalize
-    the triples, then a single groupBy shuffle on (src, pred, dst) with
-    ``n_support`` and any extra aggregates riding it."""
+    the triples (which carry subj_node/obj_node), then a single groupBy
+    shuffle on (src, pred, dst) with ``n_support`` and any extra
+    aggregates riding it."""
     return (_canonicalized_triples(triples, canonical_map)
             .groupBy("src", "pred", "dst")
             .agg(n_support.alias("n_support"), *extra_aggs))
@@ -591,7 +655,19 @@ def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
 def build_kg_edges(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
     """kg_edges(src, pred, dst, n_support): triples mapped onto canonical
     ids, deduped by support count."""
-    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)))
+    return _aggregate_edges(_surface_nodes(triples), canonical_map,
+                            F.count(F.lit(1)))
+
+
+def mined_edges(mined: DataFrame, canonical_map: DataFrame) -> DataFrame:
+    """kg_edges of a mining pass's triple rows, joined on the
+    ``rules.surface_node`` ids the pass put on them.  The canonical map
+    is driver-sized (:func:`canonicalize_surfaces`), so it is
+    broadcast."""
+    triples = (mined.filter(F.col("kind") == "triple")
+               .select("subj_node", "pred", "obj_node"))
+    return _aggregate_edges(triples, F.broadcast(canonical_map),
+                            F.count(F.lit(1)))
 
 
 def build_kg_edges_with_provenance(triples: DataFrame,
@@ -602,7 +678,8 @@ def build_kg_edges_with_provenance(triples: DataFrame,
     supporting url.  Same single shuffle as build_kg_edges (the extra
     aggregates ride the same groupBy); countDistinct is exact here
     because the group key already co-locates each edge's rows."""
-    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)),
+    return _aggregate_edges(_surface_nodes(triples), canonical_map,
+                            F.count(F.lit(1)),
                             F.countDistinct("url").alias("n_docs"),
                             F.min("url").alias("first_url"),
                             F.max("url").alias("last_url"))
@@ -621,7 +698,8 @@ def build_kg_edges_with_time_windows(triples: DataFrame,
     n_support (support always equals build_kg_edges); it just leaves
     the window untouched.  Min/max ride the SAME single groupBy
     shuffle as the flagship edge build."""
-    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)),
+    return _aggregate_edges(_surface_nodes(triples), canonical_map,
+                            F.count(F.lit(1)),
                             F.min("warc_ts").alias("first_seen"),
                             F.max("warc_ts").alias("last_seen"))
 
@@ -635,7 +713,8 @@ def build_kg_edges_from_support(support: DataFrame,
     accumulated support instead of re-counting rows.  Identical output
     to build_kg_edges over the union of the batches' triples (support
     counting is associative)."""
-    return _aggregate_edges(support, canonical_map, F.sum("n_support"))
+    return _aggregate_edges(_surface_nodes(support), canonical_map,
+                            F.sum("n_support"))
 
 
 # ---------------------------------------------------------------------------

@@ -43,8 +43,23 @@ import shutil
 import uuid
 from typing import Dict, List, Optional, Sequence
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def write_parquet_rows(rows: Sequence[tuple], schema: StructType,
+                       path: pathlib.Path) -> None:
+    """One parquet file of driver-held rows, typed the way Spark types
+    ``schema`` in Arrow (TimestampType as tz-aware UTC, which Spark
+    reads back as TimestampType, not TimestampNTZ)."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    pq.write_table(pa.Table.from_pydict(dict(zip(arrow_schema.names,
+                                                 columns)),
+                                        schema=arrow_schema), path)
 
 
 class Warehouse:
@@ -134,6 +149,33 @@ class Warehouse:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(str(data_dir))
 
+        return self._commit(name, snapshot_id, parent_m, df.schema,
+                            partition_by, mode, properties, bucket_by)
+
+    def write_rows(self, rows: Sequence[tuple], schema: StructType,
+                   name: str) -> str:
+        """Full overwrite of an unpartitioned table from driver-held
+        rows, written as one parquet file with pyarrow — no Spark job.
+        The manifest is the one ``write_table`` commits for the same
+        rows (schema, ``partitions``, ``record_counts``; an empty write
+        still leaves one empty file, so ``record_counts`` is
+        ``{"": 0}`` as Spark's write gives).  Returns the snapshot id."""
+        snapshot_id = uuid.uuid4().hex
+        data_dir = self._snap_data_dir(name, snapshot_id)
+        data_dir.mkdir(parents=True)
+        write_parquet_rows(rows, schema,
+                           data_dir / f"part-00000-{uuid.uuid4()}.parquet")
+        return self._commit(name, snapshot_id, self.manifest(name), schema,
+                            (), "overwrite", None, None)
+
+    def _commit(self, name: str, snapshot_id: str,
+                parent: Optional[dict], schema: StructType,
+                partition_by: Sequence[str], mode: str,
+                properties: Optional[dict],
+                bucket_by: Optional[list]) -> str:
+        """Advance the snapshot chain over the files a write just put
+        in the snapshot's data dir."""
+        data_dir = self._snap_data_dir(name, snapshot_id)
         # the partition keys this snapshot wrote (leaf dirs with data
         # files, relative to the snapshot dir) and their row counts,
         # read from the new files' parquet footers — the manifest's
@@ -146,7 +188,6 @@ class Warehouse:
                                   + pq.read_metadata(f).num_rows)
         written = sorted(record_counts)
 
-        parent = parent_m
         partitions: Dict[str, List[str]] = {}
         if parent is not None and (mode == "append" or
                                    (partition_by and mode == "overwrite")):
@@ -167,7 +208,7 @@ class Warehouse:
             "parent_snapshot": parent["snapshot_id"] if parent else None,
             "committed_at":
                 datetime.datetime.now(datetime.timezone.utc).isoformat(),
-            "schema": json.loads(df.schema.json()),
+            "schema": json.loads(schema.json()),
             "partition_by": list(partition_by),
             "write_mode": mode,
             "partitions": partitions,
@@ -217,8 +258,6 @@ class Warehouse:
         if not m.get("bucket_by"):
             return [self.read_table(name)]
         n_buckets, col = m["bucket_by"]
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(m["schema"])
         ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                         for f in schema.fields)
@@ -247,8 +286,6 @@ class Warehouse:
         tables readable.  Partition values are recovered from the
         directory layout per owning snapshot (basePath)."""
         from functools import reduce
-
-        from pyspark.sql.types import StructType
 
         m = self.manifest(name, snapshot_id)
         if m is None:

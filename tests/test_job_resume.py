@@ -165,3 +165,38 @@ def test_custom_alias_dictionary_drives_mining_too(spark, tmp_path):
     assert len(edges) > 0                      # custom surfaces mined
     nodes = {r.label for r in tables["kg_nodes"].collect()}
     assert "Zorblax Corporation" in nodes      # linked + canonicalized
+
+
+def test_lineage_upgrade_spark_file_then_pyarrow_appends(spark, tmp_path):
+    """A lineage directory written by Spark (the format of earlier
+    runs) followed by the job's pyarrow appends reads back with
+    LINEAGE_SCHEMA's types (ts as TimestampType, not TimestampNTZ), and
+    resume still skips the buckets the Spark-written rows mark done."""
+    from pyspark.sql.types import TimestampType
+
+    from mdscraper_spark.jobs.kg_build import LINEAGE_SCHEMA
+
+    pages = bulk_pages_df(spark, N_PAGES)
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=N_BUCKETS)
+    job.run(pages, run_id="r1")
+    path = job.wh.table_path("lineage")
+    rows = [tuple(r) for r in spark.read.parquet(str(path)).collect()]
+    shutil.rmtree(path)
+    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.parquet(str(path))
+    assert list(path.glob("part-*-c000*.parquet"))   # Spark's file names
+
+    manifest_before = job.wh.manifest("markdown_docs")
+    job.run(pages, run_id="r2", resume=True)
+    job.run(pages, run_id="r3", resume=True)
+    assert job.wh.manifest("markdown_docs")["snapshot_id"] == \
+        manifest_before["snapshot_id"]
+
+    lineage = job.wh.read_table("lineage")
+    assert [(f.name, f.dataType) for f in lineage.schema.fields] == \
+        [(f.name, f.dataType) for f in LINEAGE_SCHEMA.fields]
+    assert lineage.schema["ts"].dataType == TimestampType()
+    got = lineage.collect()
+    assert {r.run_id for r in got if r.stage == "extract"} == {"r1"}
+    assert {r.run_id for r in got if r.stage == "graph"} == {"r1", "r2", "r3"}
+    assert len(got) == len(rows) + 2 * sum(1 for r in rows
+                                           if r[2] != "extract")

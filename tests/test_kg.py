@@ -354,32 +354,6 @@ def test_cc_local_path_never_calls_on_round(spark):
     assert calls == []
 
 
-def test_kg_build_records_cc_round_lineage(spark, tmp_path):
-    """Production diagnosability (round-4 verdict item 8): with the
-    distributed CC path forced, the job's lineage table carries one
-    stage='cc_round' row per label-propagation round (part_id = round
-    index, n_rows = changed-label count, last one 0)."""
-    from pyspark.sql import functions as F
-
-    from mdscraper_spark.jobs.kg_build import KgBuildJob
-
-    job = KgBuildJob(spark, str(tmp_path / "wh"),
-                     cc_local_solve_threshold=0)
-    tables = job.run(bulk_pages_df(spark, 60))
-    rows = sorted((r["part_id"], r["n_rows"]) for r in
-                  tables["lineage"].filter(F.col("stage") == "cc_round")
-                  .collect())
-    assert rows, "no cc_round lineage rows recorded"
-    assert [p for p, _n in rows] == list(range(len(rows)))
-    assert rows[-1][1] == 0
-    # edges must be identical to the default (local-solve) job's
-    wh2 = str(tmp_path / "wh2")
-    t2 = KgBuildJob(spark, wh2).run(bulk_pages_df(spark, 60))
-    assert sorted(map(tuple, tables["kg_edges"].collect())) == \
-        sorted(map(tuple, t2["kg_edges"].collect()))
-    assert t2["lineage"].filter(F.col("stage") == "cc_round").count() == 0
-
-
 def test_pmi_cooccurrence_hand_graph(spark):
     """3 sentences: (A,B) together twice, (A,C) once, D unlinked.
     N=3 linked sentences; pmi(A,B)=ln(2*3/(3*2)), pmi(A,C)=ln(1*3/(3*1))
@@ -509,17 +483,22 @@ def test_job_links_equal_join_pipeline_custom_dictionary(spark, tmp_path):
 
 
 def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
-    """The mining pass normalizes surfaces with rules.norm_surface
-    (casefold), as run_oracle does; link_entities' Spark key is lower().
+    """The job normalizes surfaces with rules.norm_surface (casefold),
+    as run_oracle does, in its links AND its canonical ids; the Spark
+    key of link_entities and coreference_edges is lower().
     'Straße' and 'STRASSE' casefold together but do not lower together,
-    so the two link forms disagree here — the job follows the oracle."""
+    so the two forms disagree here — the job follows the oracle in
+    every table, including the edges of triples whose subject is one
+    of the two spellings."""
     from mdscraper_spark.jobs.kg_build import KgBuildJob
 
     rows = [("Straße", 1, "Strasse AG", "ORG", 1.0),
             ("STRASSE", 2, "STRASSE GmbH", "ORG", 0.5),
             ("Quuxana Vel", 3, "Quuxana Vel", "PERSON", 1.0)]
     sentences = ["Quuxana Vel works for STRASSE.",
-                 "Quuxana Vel works for Straße."]
+                 "Quuxana Vel works for Straße.",
+                 "Straße acquired Quuxana Vel.",
+                 "STRASSE is based in Berlin."]
     pages = _custom_pages(spark, sentences)
     tables = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
                         aliases=spark.createDataFrame(rows, _ALIAS_DDL)
@@ -530,6 +509,12 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
                         rows, CFG)
     assert got == oracle["entity_links"]
     assert {(r[2], r[3]) for r in got} == {(1, 1.0), (1, 0.7), (3, 1.0)}
+    for name in ("canonical_map", "kg_nodes", "kg_edges"):
+        assert _rows(tables[name]) == sorted(oracle[name]), name
+    assert ("s:strasse", "e:1") in oracle["canonical_map"]
+    assert ("e:1", "acquired", "e:3") in {e[:3] for e in oracle["kg_edges"]}
+    assert ("e:1", "based_in", "s:berlin") in {
+        e[:3] for e in oracle["kg_edges"]}
     joined = kg_ops.link_entities(tables["mentions"].drop("part_id"),
                                   spark.createDataFrame(rows, _ALIAS_DDL))
     assert {r.entity_id for r in joined.filter("surface = 'STRASSE'")

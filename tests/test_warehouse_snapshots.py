@@ -271,3 +271,63 @@ def test_manifest_record_counts_per_written_partition(spark, wh):
     wh.write_table(spark.createDataFrame([], schema), "e",
                    partition_by=("part_id",))
     assert wh.manifest("e")["record_counts"] == {}
+
+
+_ROWS_SCHEMA = "k string not null, v long, tag string"
+
+
+def _comparable(m):
+    """A manifest without its ids and commit time."""
+    sid = m["snapshot_id"]
+    out = {k: v for k, v in m.items()
+           if k not in ("table", "snapshot_id", "parent_snapshot",
+                        "committed_at")}
+    out["partitions"] = {k: ["<self>" if s == sid else s for s in v]
+                         for k, v in m["partitions"].items()}
+    return out
+
+
+@pytest.mark.parametrize("rows", [[("a", 1, "x"), ("b", None, None)], []],
+                         ids=["rows", "empty"])
+def test_write_rows_manifest_equals_write_table(spark, wh, rows):
+    """The pyarrow path commits the manifest Spark's write commits for
+    the same rows: schema, partitions and record_counts ({"": 0} for no
+    rows: one empty file either way)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(_ROWS_SCHEMA)
+    wh.write_table(spark.createDataFrame(rows, schema), "spark_t")
+    wh.write_rows(rows, schema, "arrow_t")
+    assert _comparable(wh.manifest("arrow_t")) == \
+        _comparable(wh.manifest("spark_t"))
+    assert wh.manifest("arrow_t")["record_counts"] == {"": len(rows)}
+    assert grab(wh.read_table("arrow_t")) == grab(wh.read_table("spark_t"))
+    assert wh.read_table("arrow_t").schema == wh.read_table("spark_t").schema
+
+
+def test_write_rows_time_travel_and_maintenance(spark, wh):
+    """Snapshots written from driver rows time-travel, compact and
+    expire like Spark-written ones."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(_ROWS_SCHEMA)
+    s1 = wh.write_rows([("a", 1, "x"), ("b", 2, None)], schema, "t")
+    s2 = wh.write_rows([("c", 3, "y")], schema, "t")
+    assert wh.manifest("t")["parent_snapshot"] == s1
+    assert grab(wh.read_table("t")) == [("c", 3, "y")]
+    assert grab(wh.read_table("t", snapshot_id=s1)) == \
+        [("a", 1, "x"), ("b", 2, None)]
+    assert grab(wh.read_table("t", snapshot_id=s2)) == [("c", 3, "y")]
+
+    stats = wh.compact("t")
+    assert stats["files_before"] == stats["files_after"] == 1
+    assert grab(wh.read_table("t")) == [("c", 3, "y")]
+    assert wh.manifest("t")["record_counts"] == {"": 1}
+    assert grab(wh.read_table("t", snapshot_id=s1)) == \
+        [("a", 1, "x"), ("b", 2, None)]
+
+    out = wh.expire_snapshots("t", keep_last=1)
+    assert out == {"kept": 1, "expired": 2, "data_dirs_deleted": 2}
+    assert grab(wh.read_table("t")) == [("c", 3, "y")]
+    with pytest.raises(ValueError, match="not found"):
+        wh.read_table("t", snapshot_id=s2)
