@@ -1,9 +1,10 @@
 """Per-round benchmark harness (driver contract).
 
 Runs the headline suite at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit": "sec",
-"queries": {name: sec}, "sf", plus kg-throughput extras}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's CPU count) and prints ONE JSON line: {"metric", "value" (total
+sec), "unit": "sec", "queries": {name: sec}, "sf", plus kg-throughput
+extras}.
 
 The KG end-to-end bench is the north-star metric: pages/sec over a
 pre-materialized synthetic crawl (generation is NOT timed; the
@@ -58,8 +59,8 @@ HEADLINE = (
 
 
 # round-5 registry additions, timed for the record but EXCLUDED from
-# headline_suite_total (same rule as the salt trio: rounds <= 4 had no
-# such entries, and the total must stay comparable round-over-round).
+# headline_suite_total (rounds <= 4 had no such entries, and the
+# total must stay comparable round-over-round).
 # CLOSED at 22 entries: tests/test_bench_contract.py's worst-case
 # synthesis shows a 23rd key would push the headline line past the
 # 1800-char guard (driver tail is 2000).  Later registry rows
@@ -90,17 +91,6 @@ EXTRAS = (
     "doc_lexical_diversity",
 )
 
-# the skew/salt evidence trio (three forced placements of one join);
-# module-level so tests/test_bench_contract.py counts these keys in
-# the worst-case headline-length guard — they land in the same
-# `queries` dict as everything else
-SALT_TRIO = (
-    "kg_link_broadcast",
-    "kg_link_skew_shuffle",
-    "kg_link_salted",
-)
-
-
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -118,9 +108,7 @@ def materialize_pages(spark, n_pages: int, path: str,
     df.write.mode("overwrite").parquet(path)
 
 
-def run_kg_pipeline(spark, pages_path: str, salt=None) -> dict:
-    from pyspark import StorageLevel
-
+def run_kg_pipeline(spark, pages_path: str) -> dict:
     from mdscraper_spark.config import ExtractConfig
     from mdscraper_spark.operators import kg as kg_ops
     from mdscraper_spark.operators.extract_udfs import extract_markdown
@@ -128,128 +116,31 @@ def run_kg_pipeline(spark, pages_path: str, salt=None) -> dict:
 
     pages = spark.read.parquet(pages_path)
     cfg = ExtractConfig(exclude_selectors=(".ads", "#nav"))
-    # markdown_docs feeds two mining branches; persist so extraction
-    # runs once (production writes it to the warehouse instead)
-    docs = extract_markdown(pages, cfg)
-    aliases = kg_ops.alias_df(spark)
-    gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    # one Arrow pass mines mentions + triples; persist the (small) mined
-    # rows so the two consumers don't re-run extraction
-    mined = kg_ops.mine_kg_combined(docs, gaz) \
-                  .persist(StorageLevel.MEMORY_AND_DISK)
-    mentions, triples = kg_ops.split_mined(mined)
-    links = kg_ops.link_entities(mentions, aliases, salt=salt)
-    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    edges = kg_ops.build_kg_edges(triples, cmap)
-    try:
+    # the batch job's composition; its persisted mined rows feed both
+    # canonicalization and the edges, so extraction runs once
+    with kg_ops.KgBuild(extract_markdown(pages, cfg), alias_rows()) as kg:
+        cmap_rows, _node_rows = kg.canonicalize()
+        edges = kg.edges(spark.createDataFrame(
+            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
         return {"n_edges": edges.count()}
-    finally:
-        mined.unpersist()
 
 
-def materialize_salt_bench(spark, n_mentions: int, dict_reps: int,
-                           workdir: str) -> tuple:
-    """Inputs for the skew/salt bench (generation is NOT timed).
-
-    The fixture alias dictionary is broadcast-sized, so the production
-    pipeline never exercises the salted join under time; this builds the
-    case the salted path exists for (verdict-r4 item 3):
-
-    * dictionary: fixture aliases x ``dict_reps`` suffixed replicas
-      (~150k rows, ~12 MiB by decide_salt's estimator -> over the
-      10 MiB broadcast threshold, so salt="auto" leaves broadcast:
-      shuffle+AQE with skew handling on, salted with it off);
-      rep 0 keeps the original surfaces so mentions still match.
-    * mentions: ``n_mentions`` rows where 80% share ONE hub surface —
-      an unsalted shuffle join piles those onto a single partition.
-    """
-    from pyspark.sql import functions as F
-
-    from mdscraper_spark.operators import kg as kg_ops
-    from mdscraper_spark.sources import fixtures
-
-    aliases = kg_ops.alias_df(spark)
-    big = (aliases
-           .withColumn("rep", F.explode(
-               F.sequence(F.lit(0), F.lit(dict_reps - 1))))
-           .select(
-               F.when(F.col("rep") == 0, F.col("alias"))
-                .otherwise(F.concat_ws("_", "alias", "rep"))
-                .alias("alias"),
-               "entity_id", "canonical", "etype", "prior"))
-    dict_path = str(pathlib.Path(workdir) / "salt_dict")
-    big.write.mode("overwrite").parquet(dict_path)
-
-    hub = " ".join(fixtures.org_name(0).split()[:2])   # shared hub alias
-    tail = [fixtures.org_name(k) for k in range(1, 33)]
-    mentions = (spark.range(n_mentions, numPartitions=64)
-                .select(
-                    F.concat(F.lit("https://bench.example/p"),
-                             F.col("id")).alias("url"),
-                    F.lit(0).alias("sent_id"),
-                    (F.col("id") % 7).cast("int").alias("span_start"),
-                    ((F.col("id") % 7) + 9).cast("int").alias("span_end"),
-                    F.when(F.col("id") % 10 < 8, F.lit(hub))
-                     .otherwise(F.element_at(
-                         F.array(*[F.lit(t) for t in tail]),
-                         (F.col("id") % 32 + 1).cast("int")))
-                     .alias("surface"),
-                    F.lit("ORG").alias("mtype")))
-    mentions_path = str(pathlib.Path(workdir) / "salt_mentions")
-    mentions.write.mode("overwrite").parquet(mentions_path)
-    return dict_path, mentions_path
-
-
-def run_salt_bench(spark, timed_min, timings: dict, sf: float,
-                   cpus: int, weather: dict) -> None:
-    """Timed broadcast-vs-salted evidence on the skewed workload.
-
-    Three placements of the same join, byte-identical outputs
-    (tests/test_kg.py pins that); recorded names:
-      kg_link_broadcast    salt=None  (forced broadcast hash join)
-      kg_link_skew_shuffle salt=1     (shuffle join, hub key unsalted —
-                                       the failure mode salting fixes;
-                                       AQE's skew split is ON, so this
-                                       also measures the AQE fallback)
-      kg_link_salted       salt=cpus  (hub spread over `cpus` partitions)
-    """
-    from mdscraper_spark.operators import kg as kg_ops
-
-    n_mentions = max(200_000, int(20_000_000 * sf))
-    workdir = tempfile.mkdtemp(prefix="bench_salt_")
-    try:
-        # 384 reps x 500 fixture aliases ~= 15 MiB by decide_salt's
-        # estimator — comfortably past the 10 MiB broadcast threshold
-        dict_path, mentions_path = materialize_salt_bench(
-            spark, n_mentions, dict_reps=384, workdir=workdir)
-        big_dict = spark.read.parquet(dict_path)
-        big_dict._mdscraper_salt_key = f"bench_salt_dict_{n_mentions}"
-        mentions = spark.read.parquet(mentions_path)
-        # sanity: the auto path must see an over-threshold dictionary
-        # (None would mean broadcast fits and the bench is vacuous);
-        # with AQE skew handling on it picks the plain shuffle (1)
-        auto = kg_ops.decide_salt(big_dict)
-        weather["salt_auto_decision"] = auto
-        assert auto is not None, "salt bench dictionary under threshold"
-        for name, salt in zip(SALT_TRIO, (None, 1, min(cpus, 32))):
-            fn = lambda s=salt: force(
-                kg_ops.link_entities(mentions, big_dict, salt=s))
-            fn()                                   # warm-up
-            timings[name] = round(timed_min(name, fn), 3)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+def driver_mem(cpus: int) -> str:
+    """Default driver heap for ``local[cpus]``: in local mode the driver
+    heap IS the executor heap, and 8g with 32 task threads chewing HTML
+    strings is GC-bound, so 1g per task thread, never below 8g."""
+    return f"{max(8, cpus)}g"
 
 
 def main() -> None:
+    from mdscraper_spark.session import default_parallelism, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # local mode: driver heap IS the executor heap; 8g with 32 task
-    # threads chewing HTML strings is GC-bound (box has 128 GiB)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    cpus = default_parallelism()
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", driver_mem(cpus))
     sf = float(pathlib.Path(sf_dir).name.replace("sf", "") or 0.1)
 
     from mdscraper_spark.queries import REGISTRY
-    from mdscraper_spark.session import get_spark
 
     spark = get_spark("bench", master=f"local[{cpus}]",
                       shuffle_partitions=2 * cpus,
@@ -309,10 +200,6 @@ def main() -> None:
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
-    # -- skew/salt join evidence (verdict-r4 item 3) ---------------------
-    extra_weather: dict = {}
-    run_salt_bench(spark, timed_min, timings, sf, cpus, extra_weather)
-
     # -- headline registry queries --------------------------------------
     for name in HEADLINE:
         fn, _sql = REGISTRY[name]
@@ -329,15 +216,10 @@ def main() -> None:
         timings[name] = round(
             timed_min(name, lambda: force(fn(spark, sf_dir))), 3)
 
-    # The salt-bench trio times three FORCED placements of one join on
-    # a purpose-built skewed workload — evidence, not headline work
-    # (two of the three are deliberately wrong placements).  Keep their
-    # per-query walls visible but exclude them AND the round-5 extras
-    # from the suite total so headline_suite_total stays comparable
-    # round-over-round (rounds <= 4 had neither).
-    excluded = set(SALT_TRIO) | set(EXTRAS)
+    # the round-5 extras stay out of the suite total so
+    # headline_suite_total stays comparable round-over-round
     total = round(sum(v for k, v in timings.items()
-                      if k not in excluded), 3)
+                      if k not in EXTRAS), 3)
     # Weather report (per-rep walls + host-busy fraction around each
     # rep + loadavg at exit) goes on its OWN line, printed FIRST: the
     # driver keeps only the last 2000 chars of stdout and parses the
@@ -352,7 +234,6 @@ def main() -> None:
             "rep_times": rep_times,
             "rep_host_busy": rep_busy,
             "loadavg": [round(x, 1) for x in os.getloadavg()],
-            **extra_weather,
         }
     }))
     headline = json.dumps({

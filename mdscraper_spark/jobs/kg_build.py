@@ -10,10 +10,12 @@ Stage pipeline (SURVEY.md §3.2), driven as one batch job:
         -> [graph]   kg_nodes, kg_edges     driver counts; edges one
                                             shuffle agg
 
+Mine through graph is kg_ops.KgBuild, the composition every KG caller
+shares; the job adds the writes, stage timings and lineage around it.
 Canonicalization runs no Spark job: every mention surface is an alias
 of the job's dictionary, so one groupBy of the mined mentions per
 surface (at most |dictionary| rows) reaches the driver, which builds
-canonical_map and kg_nodes (kg_ops.canonicalize_surfaces) and writes
+canonical_map and kg_nodes (KgBuild.canonicalize); the job writes
 them, and the lineage, with pyarrow (Warehouse.write_rows).
 
 Stage row counts in the lineage come from the writes themselves (the
@@ -51,7 +53,6 @@ from pyspark.sql.types import (
 )
 
 from mdscraper_spark.config import ExtractConfig
-from mdscraper_spark.kg import rules
 from mdscraper_spark.operators import kg as kg_ops
 from mdscraper_spark.operators.extract_udfs import (extract_markdown,
                                                     with_doc_path)
@@ -73,10 +74,12 @@ GLOBAL_PART = -1  # lineage part_id for non-bucketed (global) stages
 
 
 class KgBuildJob:
-    # the job scores links in the mining pass and canonicalizes on the
-    # driver; both kept for callers that replay its stages through
-    # kg_ops.link_entities and kg_ops.connected_components
-    salt = "auto"
+    # The job runs kg_ops.KgBuild: links scored in the mining pass,
+    # canonicalization on the driver.  Both attributes are read only by
+    # perfbench/spans.py, whose traced replay still calls
+    # kg_ops.link_entities(salt=...) and kg_ops.connected_components;
+    # they go when the replay does (ROADMAP item 3).
+    salt = None
     cc_local_solve_threshold = 2_000_000
 
     def __init__(self, spark: SparkSession, warehouse_path: str,
@@ -173,50 +176,32 @@ class KgBuildJob:
         # The mining gazetteer comes from the SAME dictionary the links
         # are scored against — a caller-injected dictionary must drive
         # mention detection too, or custom aliases silently produce an
-        # empty KG.  One collect feeds both: the matcher carries each
-        # surface's best link and ships once per executor.
-        rows = self._dictionary()
-        link_of = rules.best_links(rows)
-        gaz = self.spark.sparkContext.broadcast(rules.Gazetteer(
-            ((a, t) for a, _e, _c, t, _p in rows), link_of))
-
-        t0 = time.monotonic()
-        mined = kg_ops.mine_kg_combined(docs, gaz).persist()
-        try:
-            mentions, triples = kg_ops.split_mined(mined)
-            self.wh.write_table(with_part_id(mentions, self.n_buckets),
+        # empty KG.
+        with kg_ops.KgBuild(docs, self._dictionary()) as kg:
+            t0 = time.monotonic()
+            self.wh.write_table(with_part_id(kg.mentions, self.n_buckets),
                                 "mentions", partition_by=("part_id",))
-            self.wh.write_table(with_part_id(triples, self.n_buckets),
+            self.wh.write_table(with_part_id(kg.triples, self.n_buckets),
                                 "triples", partition_by=("part_id",))
             wall_ms = int((time.monotonic() - t0) * 1000)
             ledger += self._stage_rows(run_id, "mine", "mentions", wall_ms)
 
             t0 = time.monotonic()
-            self.wh.write_table(
-                with_part_id(kg_ops.mined_links(mined), self.n_buckets),
-                "entity_links", partition_by=("part_id",))
+            self.wh.write_table(with_part_id(kg.links, self.n_buckets),
+                                "entity_links", partition_by=("part_id",))
             wall_ms = int((time.monotonic() - t0) * 1000)
             ledger += self._stage_rows(run_id, "link", "entity_links",
                                        wall_ms)
 
             t0 = time.monotonic()
-            # at most |dictionary| rows: every surface is an alias
-            n_by_surface = dict(
-                mentions.groupBy("surface").count().collect())
-            cmap_rows, node_rows = kg_ops.canonicalize_surfaces(
-                n_by_surface, link_of, rows)
+            cmap_rows, node_rows = kg.canonicalize()
             self.wh.write_rows(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA,
                                "canonical_map")
             self.wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA,
                                "kg_nodes")
-            self.wh.write_table(
-                kg_ops.mined_edges(mined,
-                                   self.wh.read_table("canonical_map")),
-                "kg_edges")
+            self.wh.write_table(kg.edges(self.wh.read_table("canonical_map")),
+                                "kg_edges")
             wall_ms = int((time.monotonic() - t0) * 1000)
-        finally:
-            mined.unpersist()
-            gaz.destroy()
         ledger.append((run_id, GLOBAL_PART, "graph", "ok", len(node_rows),
                        wall_ms, datetime.datetime.now(datetime.timezone.utc)))
         self._append_lineage(ledger)

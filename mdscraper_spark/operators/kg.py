@@ -8,24 +8,22 @@ Stage map (BASELINE.json:6):
 
 Scale notes:
 * a mention's surface is always an alias, so its best link is a
-  function of the dictionary alone (rules.best_links): the batch job
-  broadcasts one linked gazetteer per executor and the mining pass
-  emits each mention's entity_id/score — no join, no shuffle;
-* ``link_entities`` is the join form of the same rule, for mention
-  streams mined without links: a broadcast hash join by default; past
-  the broadcast threshold a plain shuffle sort-merge join that lets
-  AQE's skew split absorb hub aliases (measured 4x faster than
-  hand-salting on the skewed bench workload); the explicit salted
-  path remains for AQE-off sessions.  Its best-link-per-mention is a
-  max_by aggregate with a TOTAL order key (score desc, entity_id asc),
-  so results are partition-invariant;
-* the batch job canonicalizes on the driver: every mention surface is
-  an alias of the dictionary it already holds, so the co-reference
-  graph has at most |dictionary| surface nodes.  One groupBy of the
-  mined mentions per surface reaches the driver, and
+  function of the dictionary alone (rules.best_links): one linked
+  gazetteer is broadcast per executor and the mining pass emits each
+  mention's entity_id/score — no join on the alias key, so no skew on
+  it and no salting;
+* :class:`KgBuild` is that composition, shared by the batch job, the
+  registry, the stream and the bench tools: one persisted mining pass,
+  driver canonicalization and the edge aggregation.  Every mention
+  surface is an alias of the dictionary it already holds, so the
+  co-reference graph has at most |dictionary| surface nodes.  One
+  groupBy of the mined mentions per surface reaches the driver, and
   :func:`canonicalize_surfaces` builds canonical_map and kg_nodes from
   it (union-find, no Spark job); kg_edges joins the mined triples'
   ``rules.surface_node`` ids against the broadcast map;
+* ``link_entities`` (a broadcast join on the lower()-normalized alias)
+  and ``build_kg_nodes`` remain only for perfbench's traced replay of
+  the job's stages;
 * :func:`connected_components` serves the other callers (dedup, graph
   operators, the registry and the stream), whose graphs are not bounded
   by a dictionary: size-gated (AQE-style) — a driver union-find in one
@@ -37,7 +35,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Union
+from typing import Iterator, Union
 
 import pandas as pd
 
@@ -66,12 +64,7 @@ def alias_df(spark: SparkSession) -> DataFrame:
         StructField("etype", StringType(), False),
         StructField("prior", DoubleType(), False),
     ])
-    df = spark.createDataFrame(fixtures.alias_rows(), schema)
-    # stable identity tag: lets decide_salt cache its broadcast-vs-salt
-    # decision across pipeline runs (the decision is a property of the
-    # dictionary, not of the mention batch)
-    df._mdscraper_salt_key = "fixture_alias_v1"
-    return df
+    return spark.createDataFrame(fixtures.alias_rows(), schema)
 
 
 # ---------------------------------------------------------------------------
@@ -181,7 +174,7 @@ def mined_links(mined: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# I4 — entity-link scoring (broadcast or salted join)
+# I4 — entity-link scoring (join form, for the traced replay)
 # ---------------------------------------------------------------------------
 
 def _norm_col(col):
@@ -190,103 +183,26 @@ def _norm_col(col):
     return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
 
 
-_SALT_DECISIONS: dict = {}
-
-
-def decide_salt(aliases: DataFrame) -> Optional[int]:
-    """Auto-trigger for the salted entity-link join: measure the alias
-    dictionary (one cheap agg over the DIM side only — never a stats
-    pass over the 10^12-row mentions stream) and compare against the
-    session's autoBroadcastJoinThreshold.
-
-    * dict fits the broadcast threshold -> None (broadcast hash join;
-      skew is irrelevant because nothing shuffles on the alias key);
-    * dict too big AND AQE skew-join handling is on (the production
-      default) -> 1: a plain shuffle sort-merge join with no salt
-      overhead, relying on AQE's OptimizeSkewedJoin to split a hub
-      key's oversized partition at runtime.  Measured on the bench
-      workload (2M mentions, 80% on one hub alias, 15 MiB dict,
-      local[32], quiet host): shuffle+AQE 1.45 s vs explicit salt=32
-      6.45 s vs forced broadcast 2.54 s — salting paid a 32x dict
-      replication and a fatter shuffle for skew AQE already absorbs
-      (BENCH/BASELINE.md "skew/salt join" section);
-    * dict too big and AQE skew handling OFF -> a salt factor sized to
-      the cluster (defaultParallelism clamped to [4, 64]) so one hub
-      alias's rows spread over S partitions — the only regime where
-      hand-salting still earns its replication cost.
-
-    Note: this runs ONE eager Spark action at plan-build time (the
-    dim-side agg) — deliberate: the dictionary is the small side, and
-    the decision must precede join construction.  When the dictionary
-    carries an identity tag (``_mdscraper_salt_key``, set by
-    :func:`alias_df` or any caller that knows its dict is stable) the
-    decision is cached per (tag, broadcast threshold, parallelism,
-    AQE-skew flag), so repeated pipeline runs over the same dictionary
-    pay the probe agg once instead of once per batch."""
-    spark = aliases.sparkSession
-    tag = getattr(aliases, "_mdscraper_salt_key", None)
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                             "10485760"))
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-    low = raw.lower().removesuffix("b")
-    mult = units.get(low[-1:], 1)
-    threshold = int(low[:-1] if mult > 1 else low) * mult
-    if threshold < 0:           # -1 disables broadcast entirely
-        threshold = 0
-    par = spark.sparkContext.defaultParallelism
-    aqe_skew = (
-        str(spark.conf.get("spark.sql.adaptive.enabled", "true")).lower()
-        == "true"
-        and str(spark.conf.get("spark.sql.adaptive.skewJoin.enabled",
-                               "true")).lower() == "true")
-    cache_key = ((tag, threshold, par, aqe_skew)
-                 if tag is not None else None)
-    if cache_key is not None and cache_key in _SALT_DECISIONS:
-        return _SALT_DECISIONS[cache_key]
-    est = aliases.agg(
-        F.sum(F.octet_length(F.col("alias").cast("string")) + 64)
-    ).first()[0] or 0
-    if est <= threshold:
-        decision = None
-    elif aqe_skew:
-        decision = 1
-    else:
-        decision = max(4, min(64, par))
-    if cache_key is not None:
-        _SALT_DECISIONS[cache_key] = decision
-    return decision
-
-
 def link_entities(mentions: DataFrame, aliases: DataFrame,
-                  salt: Union[int, str, None] = "auto") -> DataFrame:
-    """Best entity link per mention, as a join against the dictionary.
+                  salt=None) -> DataFrame:
+    """Best entity link per mention, as a broadcast join against the
+    dictionary.
 
-    The batch job does not call this: it scores links in the mining
-    pass (:func:`mine_kg_combined` with a linked gazetteer).  The two
-    agree except in the surface normalization: this join keys on
+    No caller of the library builds links this way: :class:`KgBuild`
+    scores them in the mining pass (:func:`mine_kg_combined` with a
+    linked gazetteer), which already holds the whole dictionary, so no
+    join on the alias key remains to skew.  This join form stays for
+    perfbench's traced replay of the job's stages.  The two agree
+    except in the surface normalization: this join keys on
     :func:`_norm_col` (Spark ``lower()``, ASCII whitespace), the
     mining pass on ``rules.norm_surface`` (Python ``casefold()``,
     Unicode whitespace), so aliases that only casefold together
     (``Straße`` / ``STRASSE``) are candidates of each other in the
-    mining pass and not here.
-
-    ``salt="auto"`` (default) calls :func:`decide_salt`: broadcast hash
-    join while the dictionary fits the broadcast threshold; beyond it a
-    plain shuffle join (salt=1) when AQE skew handling is on, an
-    explicitly salted join only when it is off.  ``salt=None`` forces
-    broadcast; ``salt=S``
-    forces the salted path: both sides carry a salt key — mentions a
-    deterministic pmod of their url hash, aliases exploded xS — so one
-    hub alias's rows spread over S shuffle partitions.  Salt never
-    reaches the output: values are identical under every placement
-    (tests/test_kg.py pins byte-identity across all three paths).
-    """
-    if salt == "auto":
-        salt = decide_salt(aliases)
-    elif salt is not None and (not isinstance(salt, int) or salt < 1):
-        # salt=0 would pmod to NULL and match nothing — fail loudly
-        raise ValueError(f"salt must be a positive int, None, or 'auto': "
-                         f"{salt!r}")
+    mining pass and not here.  ``salt`` is accepted only as ``None``,
+    the value the replay passes."""
+    if salt is not None:
+        raise ValueError(f"salt must be None (the join is always "
+                         f"broadcast): {salt!r}")
     m = (mentions
          .withColumn("mention_key",
                      F.concat_ws("#", "url", "sent_id", "span_start"))
@@ -295,23 +211,7 @@ def link_entities(mentions: DataFrame, aliases: DataFrame,
 
     score = F.when(F.col("surface") == F.col("alias"), F.col("prior")) \
              .otherwise(F.col("prior") * F.lit(0.7))
-
-    if salt is None:
-        joined = m.join(F.broadcast(a), m.surface_norm == a.alias_norm, "inner")
-    elif salt == 1:
-        # the "plain shuffle, AQE handles skew" placement: a salt of 1
-        # is algebraically a no-op (pmod(x,1)=0 both sides), so skip
-        # the per-row hash, the dict explode, and the widened join key
-        # entirely — the join IS the plain sort-merge join the
-        # decide_salt docstring promises
-        joined = m.join(a, m.surface_norm == a.alias_norm, "inner")
-    else:
-        m = m.withColumn("salt_key",
-                         F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
-        a = a.withColumn("salt_key",
-                         F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        joined = m.join(a, (m.surface_norm == a.alias_norm)
-                        & (m.salt_key == a.salt_key), "inner")
+    joined = m.join(F.broadcast(a), m.surface_norm == a.alias_norm, "inner")
 
     scored = joined.select(
         "url", "mention_key", "entity_id", "surface", "mtype",
@@ -565,12 +465,8 @@ def _label_nodes(counted: DataFrame, aliases: DataFrame) -> DataFrame:
     ent_labels = (aliases.select(
         F.concat(F.lit("e:"), F.col("entity_id").cast("string")).alias("canon_id"),
         F.col("canonical")).distinct())
-    # the broadcast hint follows the same measurement the link join
-    # uses: decide_salt already knows (and caches) whether this alias
-    # dictionary fits the broadcast threshold
-    if decide_salt(aliases) is None:
-        ent_labels = F.broadcast(ent_labels)
-    return (counted.join(ent_labels, "canon_id", "left")
+    # the dictionary is broadcast for mining anyway
+    return (counted.join(F.broadcast(ent_labels), "canon_id", "left")
             .withColumn(
                 "label",
                 F.coalesce("canonical", F.substring(F.col("canon_id"), 3, 10000)))
@@ -668,6 +564,52 @@ def mined_edges(mined: DataFrame, canonical_map: DataFrame) -> DataFrame:
                .select("subj_node", "pred", "obj_node"))
     return _aggregate_edges(triples, F.broadcast(canonical_map),
                             F.count(F.lit(1)))
+
+
+class KgBuild:
+    """The dictionary-to-edges step every KG caller runs: one persisted
+    mining pass with a broadcast linked gazetteer, its ``mentions``,
+    ``triples`` and ``links`` frames, driver canonicalization and the
+    edge aggregation.
+
+    dictionary_rows: alias rows (alias, entity_id, canonical, etype,
+    prior), in the order whose first etype per alias wins.  A context
+    manager; :meth:`close` releases the mined rows and the broadcast,
+    after which the frames must not be read."""
+
+    def __init__(self, docs: DataFrame, dictionary_rows) -> None:
+        self._rows = list(dictionary_rows)
+        # one matcher carries each surface's best link; shipped once
+        # per executor
+        self._link_of = rules.best_links(self._rows)
+        self._gaz = docs.sparkSession.sparkContext.broadcast(
+            rules.Gazetteer(((a, t) for a, _e, _c, t, _p in self._rows),
+                            self._link_of))
+        self.mined = mine_kg_combined(docs, self._gaz).persist()
+        self.mentions, self.triples = split_mined(self.mined)
+        self.links = mined_links(self.mined)
+
+    def canonicalize(self) -> tuple:
+        """(canonical_map rows, kg_nodes rows) of the pass: one
+        mentions-per-surface collect (at most |dictionary| rows, as
+        every surface is an alias), then :func:`canonicalize_surfaces`."""
+        n_by_surface = dict(self.mentions.groupBy("surface").count().collect())
+        return canonicalize_surfaces(n_by_surface, self._link_of, self._rows)
+
+    def edges(self, canonical_map: DataFrame) -> DataFrame:
+        """kg_edges of the pass against a canonical map built from
+        :meth:`canonicalize`'s rows."""
+        return mined_edges(self.mined, canonical_map)
+
+    def close(self) -> None:
+        self.mined.unpersist()
+        self._gaz.destroy()
+
+    def __enter__(self) -> "KgBuild":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def build_kg_edges_with_provenance(triples: DataFrame,

@@ -2546,45 +2546,44 @@ def kg_flagship(spark, sf_dir):
     signature, so the one static SQL string picks the right expected
     edges for whichever sf the driver registered, and an unknown corpus
     fails loudly with zero oracle rows."""
-    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_edges(triples, cmap)
+    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
+    return kg.edges(cmap)
 
 
 _KG_PARTS_CACHE: dict = {}
 
 
 def _kg_pipeline_parts(spark, sf_dir):
-    """Shared pipeline prefix of the KG registry rows (pages ->
-    extract -> one combined mining pass -> links -> connected
-    components) -> (mentions, triples, aliases, canonical_map); ONE
-    definition so the edges/nodes oracle rows cannot silently
-    diverge.
+    """Shared pipeline prefix of the KG registry rows: pages ->
+    extract -> ``kg_ops.KgBuild`` over the fixture dictionary ->
+    (build, canonical_map, kg_nodes), the maps as DataFrames of the
+    build's driver-side rows.  ONE definition, the composition the
+    batch job runs, so the edges/nodes oracle rows cannot silently
+    diverge from it.
 
-    Memoized per (Spark application, sf_dir) with the mined rows
-    localCheckpointed: every KG registry row consumes this prefix,
-    and without the cache each would re-run extraction + mining +
-    linking + CC from scratch.  Keyed by applicationId so a
-    fresh session (whose checkpoints are gone) rebuilds instead of
-    replaying dead references."""
+    Memoized per (Spark application, sf_dir) and never closed: every
+    KG registry row consumes the build's persisted mined rows, and
+    without the cache each would re-run extraction + mining from
+    scratch.  Keyed by applicationId so a fresh session (whose cached
+    rows and broadcast are gone) rebuilds instead of replaying dead
+    references."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir)
     if key in _KG_PARTS_CACHE:
         return _KG_PARTS_CACHE[key]
-    # evict entries from dead sessions: their checkpointed frames pin
-    # unusable JVM references, and a long-lived driver process cycling
+    # evict entries from dead sessions: their frames pin unusable JVM
+    # references, and a long-lived driver process cycling
     # SparkSessions would otherwise grow the cache without bound
     for stale in [k for k in _KG_PARTS_CACHE if k[0] != app_id]:
         del _KG_PARTS_CACHE[stale]
     pages = docs_to_kg_pages(load(spark, sf_dir, "documents",
                                   fan_out=True))
-    docs = extract_markdown(pages, ExtractConfig())
-    aliases = kg_ops.alias_df(spark)
-    gaz_entries = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions, triples = kg_ops.split_mined(
-        kg_ops.mine_kg_combined(docs, gaz_entries).localCheckpoint())
-    links = kg_ops.link_entities(mentions, aliases)
-    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    parts = (mentions, triples, aliases, cmap)
+    kg = kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
+                        alias_rows())
+    cmap_rows, node_rows = kg.canonicalize()
+    parts = (kg,
+             spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA),
+             spark.createDataFrame(node_rows, kg_ops.KG_NODES_SCHEMA))
     _KG_PARTS_CACHE[key] = parts
     return parts
 
@@ -2635,8 +2634,7 @@ def kg_nodes_check(spark, sf_dir):
     """I6 node side of the graph materialize, hash-checked against the
     frozen single-threaded oracle's kg_nodes (canon_id, label,
     n_mentions) — the edges twin is `kg_flagship`."""
-    mentions, _triples, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_nodes(cmap, mentions, aliases)
+    return _kg_pipeline_parts(spark, sf_dir)[2]
 
 
 @register("kg_triple_pr", f"""
@@ -2721,10 +2719,8 @@ def kg_lambda_parity(spark, sf_dir):
                 F.pmod(F.xxhash64("url"), F.lit(3)) == F.lit(b))
             apply_kg_batch(spark, batch, b, workdir, stream_id=workdir)
         nodes_acc, edges_acc = canonicalize_accumulated(spark, workdir)
-        mentions, triples, aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-        edges_one = kg_ops.build_kg_edges(triples, cmap).localCheckpoint()
-        nodes_one = kg_ops.build_kg_nodes(
-            cmap, mentions, aliases).localCheckpoint()
+        kg, cmap, nodes_one = _kg_pipeline_parts(spark, sf_dir)
+        edges_one = kg.edges(cmap).localCheckpoint()
         n_nodes, n_edges = nodes_one.count(), edges_one.count()
         nodes_ok = (nodes_acc.count() == n_nodes and
                     nodes_acc.join(nodes_one, nodes_one.columns,
@@ -2876,13 +2872,11 @@ def kg_snapshot_diff(spark, sf_dir):
     docs_sub = (load(spark, sf_dir, "documents", fan_out=True)
                 .filter(F.col("doc_id") % 10 != 0))
     pages = docs_to_kg_pages(docs_sub)
-    docs = extract_markdown(pages, ExtractConfig())
-    gaz_entries = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions, triples = kg_ops.split_mined(
-        kg_ops.mine_kg_combined(docs, gaz_entries).localCheckpoint())
-    links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
-    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    sub = kg_ops.build_kg_edges(triples, cmap)
+    with kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
+                        alias_rows()) as kg:
+        cmap_rows, _node_rows = kg.canonicalize()
+        sub = kg.edges(spark.createDataFrame(
+            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)).localCheckpoint()
     return snapshot_diff(full, sub)
 
 
@@ -3103,8 +3097,8 @@ def kg_pmi_cooccurrence(spark, sf_dir):
     by mentions-per-sentence, never corpus size."""
     from mdscraper_spark.operators.kg import pmi_cooccurrence
 
-    mentions, _triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return pmi_cooccurrence(mentions, cmap)
+    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
+    return pmi_cooccurrence(kg.mentions, cmap)
 
 
 @register("kg_edge_provenance", """
@@ -3122,8 +3116,8 @@ def kg_edge_provenance(spark, sf_dir):
     shuffle as the flagship edge build (extra aggregates ride the same
     groupBy); verified against the frozen single-threaded oracle's
     identical derivation."""
-    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_edges_with_provenance(triples, cmap)
+    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
+    return kg_ops.build_kg_edges_with_provenance(kg.triples, cmap)
 
 
 @register("kg_edge_time_windows", """
@@ -3145,13 +3139,13 @@ def kg_edge_time_windows(spark, sf_dir):
     Min/max ride the SAME single groupBy shuffle as the flagship edge
     build.  Verified against the frozen single-threaded oracle's
     identical derivation (tools/freeze_kg_oracle.py kg_tw fixtures)."""
-    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
     warc_ts = F.expr(
         "timestamp'2025-06-14 00:00:00' + make_interval(0, 0, 0, 0, "
         "CAST(CAST(substring_index(url, '/', -1) AS BIGINT) % 97 AS INT), "
         "0, 0)")
     return kg_ops.build_kg_edges_with_time_windows(
-        triples.withColumn("warc_ts", warc_ts), cmap)
+        kg.triples.withColumn("warc_ts", warc_ts), cmap)
 
 
 def _nt_sql_frag_expr(c: str) -> str:
@@ -3235,9 +3229,9 @@ def kg_export_provenance(spark, sf_dir):
     verified line-for-line against the same reification over the FROZEN
     single-threaded oracle's provenance edges.  Projection + explode
     only: the export adds zero shuffles at any scale."""
-    _mentions, triples, _aliases, cmap = _kg_pipeline_parts(spark, sf_dir)
+    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
     return kg_ops.provenance_to_ntriples(
-        kg_ops.build_kg_edges_with_provenance(triples, cmap))
+        kg_ops.build_kg_edges_with_provenance(kg.triples, cmap))
 
 
 @register("warc_roundtrip", """

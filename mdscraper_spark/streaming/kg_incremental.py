@@ -144,43 +144,38 @@ def apply_kg_batch(spark: SparkSession, batch_df, batch_id: int,
     from mdscraper_spark.sources.fixtures import alias_rows
 
     config = config or ExtractConfig()
-    docs = extract_markdown(batch_df, config)
-    gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    # ONE Arrow pass mines mentions + triples; materialize once —
-    # three accumulated tables consume it and Spark does not dedupe
-    # common subtrees (without the checkpoint the extraction +
-    # mining would re-run per consumer)
-    mined = kg_ops.mine_kg_combined(docs, gaz).localCheckpoint()
-    mentions, triples = kg_ops.split_mined(mined)
-    wh = Warehouse(spark, warehouse_path)
+    # ONE persisted Arrow pass mines mentions + triples + links; three
+    # accumulated tables consume it
+    with kg_ops.KgBuild(extract_markdown(batch_df, config),
+                        alias_rows()) as kg:
+        wh = Warehouse(spark, warehouse_path)
 
-    # (1) per-triple support — the edge side of the lambda split
-    batch_edges = (triples.groupBy(*EDGE_KEYS)
-                   .agg(F.count(F.lit(1)).alias("n_support")))
-    merge_edge_support(wh, batch_edges, int(batch_id),
-                       stream_id=stream_id)
+        # (1) per-triple support — the edge side of the lambda split
+        batch_edges = (kg.triples.groupBy(*EDGE_KEYS)
+                       .agg(F.count(F.lit(1)).alias("n_support")))
+        merge_edge_support(wh, batch_edges, int(batch_id),
+                           stream_id=stream_id)
 
-    # (2) co-reference VOCABULARY edges (distinct surface<->entity
-    # winning links).  Per-mention link winners depend only on the
-    # mention's own surface + the alias dict, so the union of the
-    # batches' distinct pairs equals the one-shot batch build's —
-    # which is what makes the periodic canonicalization exact.
-    links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
-    coref = _with_bucket(
-        kg_ops.coreference_edges(links)
-        .withColumn("n_seen", F.lit(1).cast("long")), "src")
-    merge_accumulate(wh, RAW_COREF, coref,
-                     ("bucket", "src", "dst"), "n_seen",
-                     int(batch_id), partition_by=("bucket",),
-                     stream_id=stream_id)
+        # (2) co-reference VOCABULARY edges (distinct surface<->entity
+        # winning links).  Per-mention link winners depend only on the
+        # mention's own surface + the alias dict, so the union of the
+        # batches' distinct pairs equals the one-shot batch build's —
+        # which is what makes the periodic canonicalization exact.
+        coref = _with_bucket(
+            kg_ops.coreference_edges(kg.links)
+            .withColumn("n_seen", F.lit(1).cast("long")), "src")
+        merge_accumulate(wh, RAW_COREF, coref,
+                         ("bucket", "src", "dst"), "n_seen",
+                         int(batch_id), partition_by=("bucket",),
+                         stream_id=stream_id)
 
-    # (3) per-surface-node mention counts — feeds kg_nodes
-    merge_accumulate(wh, RAW_MENTIONS,
-                     _with_bucket(kg_ops.mention_node_counts(mentions),
-                                  "node_id"),
-                     ("bucket", "node_id"), "n_mentions",
-                     int(batch_id), partition_by=("bucket",),
-                     stream_id=stream_id)
+        # (3) per-surface-node mention counts — feeds kg_nodes
+        merge_accumulate(wh, RAW_MENTIONS,
+                         _with_bucket(kg_ops.mention_node_counts(kg.mentions),
+                                      "node_id"),
+                         ("bucket", "node_id"), "n_mentions",
+                         int(batch_id), partition_by=("bucket",),
+                         stream_id=stream_id)
 
 
 def stream_kg_update(spark: SparkSession, input_dir: str,

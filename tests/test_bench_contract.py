@@ -27,11 +27,6 @@ def _headline_names() -> list[str]:
     me = re.search(r"EXTRAS = \((.*?)\)", src, re.S)
     assert me, "EXTRAS tuple not found in bench.py"
     names += re.findall(r'"([^"]+)"', me.group(1))
-    ms = re.search(r"SALT_TRIO = \((.*?)\)", src, re.S)
-    assert ms, "SALT_TRIO tuple not found in bench.py"
-    salt_names = re.findall(r'"([^"]+)"', ms.group(1))
-    assert len(salt_names) == 3, salt_names
-    names += salt_names
     # keys timed outside the HEADLINE loop (grep the source so a new
     # timed_min/timings[...] site can't silently outgrow this test)
     extra = set(re.findall(r'timings\["([a-z0-9_]+)"\]', src))
@@ -92,3 +87,18 @@ def test_last_line_parses_alone():
     parsed = json.loads(last)
     assert parsed["metric"] == "headline_suite_total"
     assert set(parsed["queries"]) == set(names)
+
+
+def test_scaling_levels_follow_cpu_count():
+    """tools/scaling_bench.py runs local[N] and local[4N] with
+    N = cpu_count // 4, and refuses a host too small for the pair."""
+    import pytest
+
+    from tools.scaling_bench import levels
+
+    assert levels(4) == (1, 4)
+    assert levels(6) == (1, 4)
+    assert levels(32) == (8, 32)
+    for small in (1, 3):
+        with pytest.raises(SystemExit, match="at least 4 CPUs"):
+            levels(small)

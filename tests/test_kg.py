@@ -1,9 +1,12 @@
 """KG back-end tests: distributed pipeline vs single-threaded oracle.
 
 The oracle (kg/oracle.py) runs the same rules sequentially; the Spark
-pipeline must match it exactly (triples P/R gate target 1.0 >= 0.95,
-canonical components set-equal) regardless of partitioning, and the
-salted join must equal the broadcast join.
+pipeline — ``kg_ops.KgBuild``, the composition the batch job, the
+registry, the stream and the bench tools share — must match it exactly
+(triples P/R gate target 1.0 >= 0.95, canonical components set-equal)
+regardless of partitioning.  The join form (``link_entities`` +
+``connected_components``), kept for perfbench's traced replay, must
+equal the job on ASCII dictionaries.
 """
 
 import pytest
@@ -29,20 +32,17 @@ def oracle():
 @pytest.fixture(scope="module")
 def spark_kg(spark):
     pages = bulk_pages_df(spark, N_PAGES).repartition(5)
-    docs = extract_markdown(pages, CFG)
-    aliases = kg_ops.alias_df(spark)
-    gaz_entries = tuple((a, t) for a, _e, _c, t, _p in fixtures.alias_rows())
-    mentions, triples = kg_ops.split_mined(
-        kg_ops.mine_kg_combined(docs, gaz_entries))
-    links = kg_ops.link_entities(mentions, aliases)
-    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    nodes = kg_ops.build_kg_nodes(cmap, mentions, aliases)
-    edges = kg_ops.build_kg_edges(triples, cmap)
-    return {
-        "docs": docs, "aliases": aliases, "mentions": mentions,
-        "triples": triples, "links": links, "cmap": cmap,
-        "nodes": nodes, "edges": edges,
-    }
+    with kg_ops.KgBuild(extract_markdown(pages, CFG),
+                        fixtures.alias_rows()) as kg:
+        cmap_rows, node_rows = kg.canonicalize()
+        cmap = spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)
+        yield {
+            "mentions": kg.mentions, "triples": kg.triples,
+            "links": kg.links, "cmap": cmap,
+            "nodes": spark.createDataFrame(node_rows,
+                                           kg_ops.KG_NODES_SCHEMA),
+            "edges": kg.edges(cmap),
+        }
 
 
 def test_mentions_match_oracle(spark_kg, oracle):
@@ -86,14 +86,6 @@ def test_entity_links_match_oracle(spark_kg, oracle):
            for r in spark_kg["links"].collect()}
     want = {(u, mk, e, round(s, 9)) for (u, mk, e, s) in oracle["entity_links"]}
     assert got == want
-
-
-def test_salted_join_equals_broadcast_join(spark_kg):
-    salted = kg_ops.link_entities(spark_kg["mentions"], spark_kg["aliases"],
-                                  salt=4)
-    a = {tuple(r) for r in salted.collect()}
-    b = {tuple(r) for r in spark_kg["links"].collect()}
-    assert a == b
 
 
 def _components(pairs):
@@ -146,75 +138,13 @@ def test_rules_units():
     assert not any(m[3] == "Alice" for m in ments)
 
 
-def test_auto_salt_triggers_on_big_dict_and_stays_byte_identical(spark_kg, spark):
-    """I7 auto-trigger: with the dict under the broadcast threshold the
-    auto path broadcasts (decide_salt -> None); with the threshold
-    squeezed below the dict size (the hub-alias / giant-dictionary
-    regime) the salted shuffle path kicks in — and both produce
-    byte-identical links."""
-    mentions, aliases = spark_kg["mentions"], spark_kg["aliases"]
-    assert kg_ops.decide_salt(aliases) is None  # fixture dict fits
-
-    base = {tuple(r) for r in spark_kg["links"].collect()}
-    auto_small = kg_ops.link_entities(mentions, aliases, salt="auto")
-    assert {tuple(r) for r in auto_small.collect()} == base
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_skew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled",
-                              "true")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64b")
-        # AQE skew handling on (production default): the over-threshold
-        # dict takes the PLAIN shuffle join — AQE splits a hub key's
-        # partition at runtime, and explicit salting measured 4x slower
-        # (decide_salt docstring / BENCH/BASELINE.md)
-        s = kg_ops.decide_salt(aliases)
-        assert s == 1
-        auto_big = kg_ops.link_entities(mentions, aliases, salt="auto")
-        assert {tuple(r) for r in auto_big.collect()} == base
-
-        # AQE skew handling OFF: hand-salting is the only skew defense
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        s_off = kg_ops.decide_salt(aliases)
-        assert s_off is not None and s_off >= 4
-        salted = kg_ops.link_entities(mentions, aliases, salt="auto")
-        plan = salted._jdf.queryExecution().executedPlan().toString()
-        assert "salt_key" in plan           # salted keys in the join
-        assert {tuple(r) for r in salted.collect()} == base
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", old_skew)
-
-
-def test_decide_salt_cached_per_dict_identity(spark):
-    """The broadcast-vs-salt decision is a property of the dictionary,
-    not of the batch: tagged dicts pay the probe agg once per
-    (tag, threshold, parallelism); untagged dicts never cache."""
-    from unittest import mock
-
-    kg_ops._SALT_DECISIONS.clear()
-    a = kg_ops.alias_df(spark)
-    d1 = kg_ops.decide_salt(a)
-    assert len(kg_ops._SALT_DECISIONS) == 1
-    # second call must hit the cache: poison DataFrame.agg to prove no
-    # probe action runs
-    a2 = kg_ops.alias_df(spark)
-    with mock.patch.object(type(a2), "agg",
-                           side_effect=AssertionError("probe re-ran")):
-        assert kg_ops.decide_salt(a2) == d1
-    # an untagged dict (no identity) probes every time, never caches
-    bare = spark.createDataFrame(a.collect(), a.schema)
-    kg_ops.decide_salt(bare)
-    assert len(kg_ops._SALT_DECISIONS) == 1
-
-
-def test_forced_salt_must_be_positive(spark_kg):
-    import pytest as _pytest
-
-    for bad in (0, -3, 2.5):
-        with _pytest.raises(ValueError, match="salt"):
-            kg_ops.link_entities(spark_kg["mentions"], spark_kg["aliases"],
-                                 salt=bad)
+def test_forced_salt_must_be_positive(spark_kg, spark):
+    """The salted join is gone: ``link_entities`` keeps its ``salt``
+    keyword for perfbench's replay, and any value but None raises."""
+    aliases = kg_ops.alias_df(spark)
+    for bad in (0, -3, 1, 4, 2.5, "auto"):
+        with pytest.raises(ValueError, match="salt"):
+            kg_ops.link_entities(spark_kg["mentions"], aliases, salt=bad)
 
 
 def test_gazetteer_skips_empty_alias():
@@ -405,8 +335,7 @@ def _assert_job_equals_pipeline(job_tables, want):
     assert _rows(job_tables["entity_links"]), "no links scored"
 
 
-def test_job_links_in_mining_pass_equal_join_pipeline(spark_kg, spark,
-                                                      tmp_path):
+def test_job_links_in_mining_pass_equal_join_pipeline(spark, tmp_path):
     """The job scores links inside the mining pass; its entity_links,
     canonical_map, kg_nodes and kg_edges equal the mine + link_entities
     join pipeline over the fixture dictionary."""
@@ -414,9 +343,9 @@ def test_job_links_in_mining_pass_equal_join_pipeline(spark_kg, spark,
 
     tables = KgBuildJob(spark, str(tmp_path / "wh"), CFG).run(
         bulk_pages_df(spark, N_PAGES))
-    _assert_job_equals_pipeline(tables, {
-        "entity_links": spark_kg["links"], "canonical_map": spark_kg["cmap"],
-        "kg_nodes": spark_kg["nodes"], "kg_edges": spark_kg["edges"]})
+    gaz_entries = tuple((a, t) for a, _e, _c, t, _p in fixtures.alias_rows())
+    _assert_job_equals_pipeline(tables, _pipeline_tables(
+        spark, tables["markdown_docs"], kg_ops.alias_df(spark), gaz_entries))
 
 
 def _custom_pages(spark, sentences):
@@ -519,3 +448,14 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
                                   spark.createDataFrame(rows, _ALIAS_DDL))
     assert {r.entity_id for r in joined.filter("surface = 'STRASSE'")
             .collect()} == {2}
+
+    # the composition alone, with no job, follows the oracle too
+    with kg_ops.KgBuild(extract_markdown(pages, CFG), rows) as kg:
+        assert sorted((r.url, r.mention_key, r.entity_id, r.score)
+                      for r in kg.links.collect()) == oracle["entity_links"]
+        cmap_rows, node_rows = kg.canonicalize()
+        assert sorted(cmap_rows) == sorted(oracle["canonical_map"])
+        assert sorted(node_rows) == sorted(oracle["kg_nodes"])
+        edges = kg.edges(spark.createDataFrame(
+            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
+        assert _rows(edges) == sorted(oracle["kg_edges"])

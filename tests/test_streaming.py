@@ -190,17 +190,12 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     # one-shot batch build over the same 40 pages
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
-    gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
-    mentions, triples = kg_ops.split_mined(
-        kg_ops.mine_kg_combined(docs, gaz))
-    links = kg_ops.link_entities(mentions, kg_ops.alias_df(spark))
-    cmap = kg_ops.connected_components(kg_ops.coreference_edges(links))
-    want_edges = {(r.src, r.pred, r.dst): r.n_support
-                  for r in kg_ops.build_kg_edges(triples, cmap).collect()}
-    want_nodes = {r.canon_id: (r.label, r.n_mentions)
-                  for r in kg_ops.build_kg_nodes(cmap, mentions,
-                                                 kg_ops.alias_df(spark))
-                  .collect()}
+    with kg_ops.KgBuild(docs, alias_rows()) as kg:
+        cmap_rows, node_rows = kg.canonicalize()
+        want_edges = {(r.src, r.pred, r.dst): r.n_support
+                      for r in kg.edges(spark.createDataFrame(
+                          cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)).collect()}
+    want_nodes = {canon_id: (label, n) for canon_id, label, n in node_rows}
 
     assert got_edges == want_edges and len(got_edges) > 0
     assert got_nodes == want_nodes and len(got_nodes) > 0

@@ -29,10 +29,11 @@ CASES = [
      "ONE ArrowEvalPython stage over a narrow projected scan — the "
      "whole extraction front end is a single vectorized pass"),
     ("kg_flagship",
-     "scan of the checkpointed mined triples (the one Arrow mining "
-     "pass is shared by every KG row) -> two broadcast canonical-map "
-     "joins -> edge aggregation; no shuffle on the big side until the "
-     "final groupBy"),
+     "InMemoryTableScan of the persisted mined rows (the one Arrow "
+     "mining pass of kg_ops.KgBuild, shared by every KG row) -> two "
+     "broadcast joins with the driver-built canonical map -> edge "
+     "aggregation; no shuffle on the big side until the final "
+     "groupBy"),
     ("near_dedup_groups",
      "banded LSH self-join on the bucket key (never all-pairs), CC on "
      "the pair graph only, one corpus left join at the end"),
