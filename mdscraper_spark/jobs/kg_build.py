@@ -75,10 +75,12 @@ GLOBAL_PART = -1  # lineage part_id for non-bucketed (global) stages
 
 class KgBuildJob:
     # The job runs kg_ops.KgBuild: links scored in the mining pass,
-    # canonicalization on the driver.  Both attributes are read only by
+    # canonicalization on the driver, every surface keyed by the
+    # rules.surface_node ids the pass writes on mentions (node_id) and
+    # triples (subj_node, obj_node).  Both attributes are read only by
     # perfbench/spans.py, whose traced replay still calls
-    # kg_ops.link_entities(salt=...) and kg_ops.connected_components;
-    # they go when the replay does (ROADMAP item 3).
+    # kg_ops.link_entities(salt=...) and kg_ops.connected_components
+    # over those tables; they go when the replay does (ROADMAP item 3).
     salt = None
     cc_local_solve_threshold = 2_000_000
 

@@ -1,12 +1,12 @@
 """Standing-ingest job: the spark-submit entry for the KG lambda loop.
 
 ``--ingest`` drains currently-available page files into the accumulated
-raw_edges / raw_coref / raw_mentions tables (availableNow trigger +
-checkpoint = one exactly-once incremental ingest per invocation — run
-it from a scheduler for a standing pipeline); ``--canonicalize`` runs
-the periodic batch half (connected components over the accumulated
-co-reference vocabulary, kg_nodes/kg_edges materialized to the
-warehouse).  Both may be combined in one invocation.
+raw_edges / raw_mentions tables (availableNow trigger + checkpoint =
+one exactly-once incremental ingest per invocation — run it from a
+scheduler for a standing pipeline); ``--canonicalize`` runs the
+periodic batch half (the accumulated mention counts canonicalized on
+the driver with the batch job's rule, kg_nodes/kg_edges materialized
+to the warehouse).  Both may be combined in one invocation.
 
     spark-submit --py-files dist/mdscraper_spark.zip \\
         mdscraper_spark/jobs/kg_stream.py \\
@@ -38,18 +38,14 @@ def main(argv=None) -> None:
                    help="drain available page files into the "
                         "accumulated tables")
     p.add_argument("--canonicalize", action="store_true",
-                   help="run the periodic batch canonicalization and "
-                        "materialize kg_nodes/kg_edges")
+                   help="canonicalize the accumulated mention counts on "
+                        "the driver and materialize kg_nodes/kg_edges")
     p.add_argument("--exclude-selectors", nargs="*", default=())
     p.add_argument("--expire-keep", type=int, default=None, metavar="N",
                    help="after the run, expire accumulated-table "
                         "snapshots down to the newest N (a standing "
                         "ingest commits one snapshot per table per "
                         "micro-batch — unbounded without expiry)")
-    p.add_argument("--cc-max-iter", type=int, default=25,
-                   help="connected-components round budget for "
-                        "--canonicalize (raise for corpora with deep "
-                        "co-reference chains)")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
     if not (args.ingest or args.canonicalize):
@@ -69,19 +65,18 @@ def main(argv=None) -> None:
                          input_format=args.input_format)
         out["ingested"] = True
     if args.canonicalize:
-        nodes, edges = canonicalize_accumulated(
-            spark, args.warehouse, cc_max_iter=args.cc_max_iter)
+        nodes, edges = canonicalize_accumulated(spark, args.warehouse)
         out["n_nodes"] = nodes.count()
         out["n_edges"] = edges.count()
     if args.expire_keep is not None:
         from mdscraper_spark.sources.tables import Warehouse
         from mdscraper_spark.streaming.kg_incremental import (
-            RAW_COREF, RAW_EDGES, RAW_MENTIONS)
+            RAW_EDGES, RAW_MENTIONS)
 
         wh = Warehouse(spark, args.warehouse)
         out["expired"] = {
             t: wh.expire_snapshots(t, keep_last=args.expire_keep)
-            for t in (RAW_EDGES, RAW_COREF, RAW_MENTIONS)
+            for t in (RAW_EDGES, RAW_MENTIONS)
             if wh.exists(t)}
     print(json.dumps(out))
 

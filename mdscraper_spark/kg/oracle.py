@@ -8,6 +8,7 @@ deliberately simple (dicts + union-find) so it is obviously correct.
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 from typing import Dict, Iterable, List, Optional, Tuple
 
@@ -130,3 +131,46 @@ def run_oracle(pages: Iterable[Tuple[str, str]],
         "kg_edges": kg_edges,
         "kg_edge_prov": kg_edge_prov,
     }
+
+
+def edge_time_windows(derived: dict, ts_of) -> list:
+    """kg_edge_time_windows rows (src, pred, dst, n_support, first_seen,
+    last_seen) of :func:`run_oracle`'s output: its triples mapped onto
+    its canonical map, with the min/max ``ts_of(url)`` of the
+    supporting pages."""
+    canon_of = dict(derived["canonical_map"])
+    windows: Dict[tuple, tuple] = {}
+    for url, _sid, subj, pred, obj, _conf in derived["triples"]:
+        s, o = rules.surface_node(subj), rules.surface_node(obj)
+        key = (canon_of.get(s, s), pred, canon_of.get(o, o))
+        ts = ts_of(url)
+        n, first, last = windows.get(key, (0, ts, ts))
+        windows[key] = (n + 1, min(first, ts), max(last, ts))
+    return sorted(key + w for key, w in windows.items())
+
+
+def pmi_cooccurrence(derived: dict) -> list:
+    """kg_pmi_cooccurrence rows (canon_a, canon_b, n_pair, pmi) of
+    :func:`run_oracle`'s output: sentence-level co-occurrence of the
+    mentions' canonical ids.  Unlinked surfaces drop out, a canon twice
+    in one sentence counts once, N = sentences with >= 1 linked
+    mention; pmi rounded to 6."""
+    canon_of = dict(derived["canonical_map"])
+    sent_canons: Dict[tuple, set] = defaultdict(set)
+    for url, sid, _start, _end, surface, _t in derived["mentions"]:
+        node = rules.surface_node(surface)
+        if node in canon_of:
+            sent_canons[(url, sid)].add(canon_of[node])
+    n_sent = float(len(sent_canons))
+    n_single: Dict[str, int] = defaultdict(int)
+    n_pair: Dict[tuple, int] = defaultdict(int)
+    for canons in sent_canons.values():
+        ordered = sorted(canons)
+        for i, ca in enumerate(ordered):
+            n_single[ca] += 1
+            for cb in ordered[i + 1:]:
+                n_pair[(ca, cb)] += 1
+    return sorted(
+        (ca, cb, n,
+         round(math.log(n * n_sent / (n_single[ca] * n_single[cb])), 6))
+        for (ca, cb), n in n_pair.items())

@@ -204,7 +204,7 @@ def extract_triples(sentences: List[str]) -> List[Tuple[int, str, str, str, floa
 
 
 # ---------------------------------------------------------------------------
-# I4 — entity-link scoring (rule shared with the Spark join expression)
+# I4 — entity-link scoring
 # ---------------------------------------------------------------------------
 
 def norm_surface(surface: str) -> str:
@@ -214,8 +214,7 @@ def norm_surface(surface: str) -> str:
 
 def link_score(surface: str, alias: str, prior: float) -> float:
     """Exact surface match scores the full prior; casefolded-only match
-    is discounted.  Mirrored exactly by the Spark column expression in
-    operators/kg.py (and the DuckDB oracle SQL)."""
+    is discounted."""
     return prior if surface == alias else 0.7 * prior
 
 
@@ -228,8 +227,9 @@ def best_links(rows: Iterable[tuple]) -> Dict[str, Tuple[int, Optional[float]]]:
     its best link depends on the surface alone: max ``link_score`` over
     the aliases with the same ``norm_surface``, tie -> lowest
     entity_id.  A null prior scores null and loses to any scored
-    candidate (Spark's null-lowest struct order in ``link_entities``).
-    Null aliases never match and are skipped."""
+    candidate.  Null aliases never match and are skipped.  The mining
+    pass's linked gazetteer and ``operators.kg.link_entities`` both
+    take their links from here."""
     by_norm: Dict[str, list] = {}
     for alias, eid, _canon, _etype, prior in rows:
         if alias is not None:

@@ -6,6 +6,13 @@ Stage map (BASELINE.json:6):
   mention counts per surface --driver union-find--> canonical_map, kg_nodes
   canonical_map + triples --shuffle agg--> kg_edges
 
+One surface rule: a surface's node id is ``rules.surface_node``
+(casefold + whitespace collapse), computed once in the mining pass and
+carried on every row that names a surface — ``node_id`` on mentions,
+``subj_node``/``obj_node`` on triples.  Every consumer (edges,
+provenance, time windows, PMI, nodes, the stream's state) keys on
+those ids, so no Spark expression re-derives them.
+
 Scale notes:
 * a mention's surface is always an alias, so its best link is a
   function of the dictionary alone (rules.best_links): one linked
@@ -19,14 +26,14 @@ Scale notes:
   co-reference graph has at most |dictionary| surface nodes.  One
   groupBy of the mined mentions per surface reaches the driver, and
   :func:`canonicalize_surfaces` builds canonical_map and kg_nodes from
-  it (union-find, no Spark job); kg_edges joins the mined triples'
-  ``rules.surface_node`` ids against the broadcast map;
-* ``link_entities`` (a broadcast join on the lower()-normalized alias)
-  and ``build_kg_nodes`` remain only for perfbench's traced replay of
-  the job's stages;
-* :func:`connected_components` serves the other callers (dedup, graph
-  operators, the registry and the stream), whose graphs are not bounded
-  by a dictionary: size-gated (AQE-style) — a driver union-find in one
+  it (union-find, no Spark job); every edge builder joins the triples'
+  node ids against the broadcast map;
+* ``link_entities``, ``coreference_edges`` and ``build_kg_nodes``
+  remain only for perfbench's traced replay of the job's stages, and
+  follow the same rule;
+* :func:`connected_components` serves the other callers (dedup, the
+  graph operators and the replay), whose graphs are not bounded by a
+  dictionary: size-gated (AQE-style) — a driver union-find in one
   collect when the distinct edge set fits; otherwise hash-partitioned
   min-label propagation with exact changed-label convergence probes
   (Observation metrics riding each round's action) and
@@ -85,7 +92,9 @@ MINE_COMBINED_SCHEMA = StructType([
     StructField("conf", DoubleType(), True),
     StructField("entity_id", LongType(), True),  # mention's best link
     StructField("score", DoubleType(), True),
-    StructField("subj_node", StringType(), True),  # rules.surface_node
+    # rules.surface_node of the mention's surface / triple's subj, obj
+    StructField("node_id", StringType(), True),
+    StructField("subj_node", StringType(), True),
     StructField("obj_node", StringType(), True),
 ])
 
@@ -101,16 +110,16 @@ def mine_kg_combined(markdown_docs: DataFrame,
     (rules.cached_gazetteer) and mention rows carry no link — or a
     Broadcast of a linked ``rules.Gazetteer`` (built with
     ``rules.best_links``), shipped once per executor; each mention row
-    then carries its best link's entity_id and score.  Triple rows
-    carry their subject's and object's ``rules.surface_node`` ids
-    (``subj_node``/``obj_node``), the ids :func:`mined_edges` joins on."""
+    then carries its best link's entity_id and score.  Every row
+    carries the ``rules.surface_node`` ids of the surfaces it names:
+    ``node_id`` on mentions, ``subj_node``/``obj_node`` on triples."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz = (gazetteer.value if isinstance(gazetteer, Broadcast)
                else rules.cached_gazetteer(gazetteer))
         cols = ("url", "kind", "sent_id", "span_start", "span_end",
                 "surface", "mtype", "subj", "pred", "obj", "conf",
-                "entity_id", "score", "subj_node", "obj_node")
+                "entity_id", "score", "node_id", "subj_node", "obj_node")
         for pdf in batches:
             rows = {k: [] for k in cols}
 
@@ -128,7 +137,8 @@ def mine_kg_combined(markdown_docs: DataFrame,
                                          else (found, None, None))
                     emit(url=url, kind="mention", sent_id=sid,
                          span_start=start, span_end=end, surface=surface,
-                         mtype=mtype, entity_id=eid, score=score)
+                         mtype=mtype, entity_id=eid, score=score,
+                         node_id=rules.surface_node(surface))
                 for sid, subj, pred, obj, conf in rules.extract_triples(
                         sentences):
                     emit(url=url, kind="triple", sent_id=sid, subj=subj,
@@ -149,15 +159,17 @@ def mine_kg_combined(markdown_docs: DataFrame,
 def split_mined(mined: DataFrame) -> tuple:
     """combined rows -> (mentions, triples).
 
-    mentions: (url, sent_id, span_start, span_end, surface, mtype);
-    triples: (url, sent_id, subj, pred, obj, conf)."""
+    mentions: (url, sent_id, span_start, span_end, surface, mtype,
+    node_id); triples: (url, sent_id, subj, pred, obj, conf, subj_node,
+    obj_node)."""
     mentions = (mined.filter(F.col("kind") == "mention")
                 .select("url", "sent_id",
                         F.col("span_start").cast("int").alias("span_start"),
                         F.col("span_end").cast("int").alias("span_end"),
-                        "surface", "mtype"))
+                        "surface", "mtype", "node_id"))
     triples = (mined.filter(F.col("kind") == "triple")
-               .select("url", "sent_id", "subj", "pred", "obj", "conf"))
+               .select("url", "sent_id", "subj", "pred", "obj", "conf",
+                       "subj_node", "obj_node"))
     return mentions, triples
 
 
@@ -177,62 +189,32 @@ def mined_links(mined: DataFrame) -> DataFrame:
 # I4 — entity-link scoring (join form, for the traced replay)
 # ---------------------------------------------------------------------------
 
-def _norm_col(col):
-    """Spark twin of rules.norm_surface: casefold approximated by
-    lower() (fixture surfaces are ASCII; documented contract)."""
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
-
-
 def link_entities(mentions: DataFrame, aliases: DataFrame,
                   salt=None) -> DataFrame:
     """Best entity link per mention, as a broadcast join against the
-    dictionary.
+    dictionary's best links.
 
     No caller of the library builds links this way: :class:`KgBuild`
     scores them in the mining pass (:func:`mine_kg_combined` with a
-    linked gazetteer), which already holds the whole dictionary, so no
-    join on the alias key remains to skew.  This join form stays for
-    perfbench's traced replay of the job's stages.  The two agree
-    except in the surface normalization: this join keys on
-    :func:`_norm_col` (Spark ``lower()``, ASCII whitespace), the
-    mining pass on ``rules.norm_surface`` (Python ``casefold()``,
-    Unicode whitespace), so aliases that only casefold together
-    (``Straße`` / ``STRASSE``) are candidates of each other in the
-    mining pass and not here.  ``salt`` is accepted only as ``None``,
-    the value the replay passes."""
+    linked gazetteer).  This join form stays for perfbench's traced
+    replay of the job's stages and applies the same rule: every
+    mention surface is an alias, so ``rules.best_links`` of the
+    collected alias rows (the bounded broadcast side) gives each
+    surface's link, joined on the exact surface.  ``salt`` is accepted
+    only as ``None``, the value the replay passes."""
     if salt is not None:
         raise ValueError(f"salt must be None (the join is always "
                          f"broadcast): {salt!r}")
-    m = (mentions
-         .withColumn("mention_key",
-                     F.concat_ws("#", "url", "sent_id", "span_start"))
-         .withColumn("surface_norm", _norm_col(F.col("surface"))))
-    a = aliases.withColumn("alias_norm", _norm_col(F.col("alias")))
-
-    score = F.when(F.col("surface") == F.col("alias"), F.col("prior")) \
-             .otherwise(F.col("prior") * F.lit(0.7))
-    joined = m.join(F.broadcast(a), m.surface_norm == a.alias_norm, "inner")
-
-    scored = joined.select(
-        "url", "mention_key", "entity_id", "surface", "mtype",
-        score.alias("score"),
-    )
-    # Best candidate per mention via max_by with a TOTAL order key
-    # (score desc, entity_id asc — encoded as max over (score,
-    # -entity_id) struct): partial map-side aggregation collapses the
-    # candidates before the shuffle, where the equivalent row_number
-    # window would shuffle + sort every candidate row.  Winner is
-    # partition-invariant because the order key is total.
-    best = F.max_by(
-        F.struct(F.col("entity_id"), F.col("surface"),
-                 F.col("score").cast("double").alias("score")),
-        F.struct(F.col("score"), (-F.col("entity_id")).alias("tie")))
-    return (scored.groupBy("url", "mention_key")
-            .agg(best.alias("best"))
-            .select("url", "mention_key",
-                    F.col("best.entity_id").alias("entity_id"),
-                    F.col("best.surface").alias("surface"),
-                    F.col("best.score").alias("score")))
+    rows = aliases.select("alias", "entity_id", "canonical", "etype",
+                          "prior").collect()
+    best = mentions.sparkSession.createDataFrame(
+        [(s, *link) for s, link in rules.best_links(rows).items()],
+        "surface string, entity_id long, score double")
+    return (mentions.join(F.broadcast(best), "surface")
+            .select("url",
+                    F.concat_ws("#", "url", "sent_id", "span_start")
+                    .alias("mention_key"),
+                    "entity_id", "surface", "score"))
 
 
 # ---------------------------------------------------------------------------
@@ -253,10 +235,14 @@ KG_NODES_SCHEMA = StructType([
 
 
 def coreference_edges(entity_links: DataFrame) -> DataFrame:
-    """Winning links induce the surface<->entity co-reference graph."""
-    s_node = F.concat(F.lit("s:"), _norm_col(F.col("surface")))
-    e_node = F.concat(F.lit("e:"), F.col("entity_id").cast("string"))
-    return entity_links.select(s_node.alias("src"), e_node.alias("dst")).distinct()
+    """Winning links induce the surface<->entity co-reference graph:
+    its distinct (surface node, entity node) pairs, built on the
+    driver — a surface has one best link, so there are at most
+    |dictionary| of them, as in :func:`canonicalize_surfaces`."""
+    pairs = {(rules.surface_node(s), rules.entity_node(eid)) for s, eid in
+             entity_links.select("surface", "entity_id").distinct().collect()}
+    return entity_links.sparkSession.createDataFrame(
+        sorted(pairs), "src string, dst string")
 
 
 def _local_union_find(pairs) -> list:
@@ -458,75 +444,38 @@ def _maybe_broadcast(canonical_map: DataFrame):
     return canonical_map
 
 
-def _label_nodes(counted: DataFrame, aliases: DataFrame) -> DataFrame:
-    """(canon_id, n_mentions) -> kg_nodes(canon_id, label, n_mentions):
+def build_kg_nodes(canonical_map: DataFrame, mentions: DataFrame,
+                   aliases: DataFrame) -> DataFrame:
+    """kg_nodes(canon_id, label, n_mentions): mentions counted per
+    ``node_id``, mapped onto canonical ids and summed.  Node label: the
     canonical entity name when the component root is an entity node,
     else the bare surface."""
+    counted = (mentions.groupBy("node_id")
+               .agg(F.count(F.lit(1)).alias("n_mentions"))
+               .join(canonical_map, "node_id", "left")
+               .withColumn("canon_id", F.coalesce("canon_id", "node_id"))
+               .groupBy("canon_id")
+               .agg(F.sum("n_mentions").alias("n_mentions")))
     ent_labels = (aliases.select(
         F.concat(F.lit("e:"), F.col("entity_id").cast("string")).alias("canon_id"),
         F.col("canonical")).distinct())
     # the dictionary is broadcast for mining anyway
     return (counted.join(F.broadcast(ent_labels), "canon_id", "left")
-            .withColumn(
-                "label",
-                F.coalesce("canonical", F.substring(F.col("canon_id"), 3, 10000)))
-            .select("canon_id", "label", "n_mentions"))
+            .select("canon_id",
+                    F.coalesce("canonical", F.substring(F.col("canon_id"), 3,
+                                                        10000)).alias("label"),
+                    "n_mentions"))
 
 
-def mention_node_counts(mentions: DataFrame) -> DataFrame:
-    """(node_id, n_mentions): per-surface-node mention occurrences —
-    the accumulable mention statistic (sums across batches), keyed by
-    the same normalized surface-node id the co-reference graph uses."""
-    s_node = F.concat(F.lit("s:"), _norm_col(F.col("surface")))
-    return (mentions.select(s_node.alias("node_id"))
-            .groupBy("node_id")
-            .agg(F.count(F.lit(1)).alias("n_mentions")))
-
-
-def build_kg_nodes(canonical_map: DataFrame, mentions: DataFrame,
-                   aliases: DataFrame) -> DataFrame:
-    """kg_nodes(canon_id, label, n_mentions).  Node label: the canonical
-    entity name when the component root is an entity node, else the
-    bare surface."""
-    return build_kg_nodes_from_counts(canonical_map,
-                                      mention_node_counts(mentions),
-                                      aliases)
-
-
-def build_kg_nodes_from_counts(canonical_map: DataFrame,
-                               mention_counts: DataFrame,
-                               aliases: DataFrame) -> DataFrame:
-    """kg_nodes from PRE-AGGREGATED per-node mention counts
-    (node_id, n_mentions) — the standing-ingest path, where counts
-    accumulate across micro-batches and only their SUM reaches the
-    periodic canonicalization job.  Identical output to build_kg_nodes
-    over the union of the batches' mentions (counting is associative)."""
-    counted = (mention_counts.join(canonical_map, "node_id", "left")
-               .withColumn("canon_id", F.coalesce("canon_id", "node_id"))
-               .groupBy("canon_id")
-               .agg(F.sum("n_mentions").alias("n_mentions")))
-    return _label_nodes(counted, aliases)
-
-
-def _surface_nodes(triples: DataFrame) -> DataFrame:
-    """subj_node/obj_node of raw (subj, pred, obj) triples mined
-    without them, keyed like :func:`coreference_edges` keys surfaces."""
-    return (triples
-            .withColumn("subj_node",
-                        F.concat(F.lit("s:"), _norm_col(F.col("subj"))))
-            .withColumn("obj_node",
-                        F.concat(F.lit("s:"), _norm_col(F.col("obj")))))
-
-
-def _canonicalized_triples(triples: DataFrame,
-                           canonical_map: DataFrame) -> DataFrame:
-    """Shared front half of the edge builders: map triples' subj_node/
-    obj_node onto canonical ids via two left joins on the canonical_map
-    (broadcast-hinted only when the size gate proved it driver-sized);
-    unlinked surfaces keep their surface node id.  Passes every other
-    input column (url, sent_id, conf, warc_ts, n_support, ...) through
-    for downstream aggregation."""
-    cmap = _maybe_broadcast(canonical_map)
+def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
+                     n_support, *extra_aggs) -> DataFrame:
+    """The one edge aggregation every edge builder shares: map the
+    triples' subj_node/obj_node onto canonical ids via two left joins
+    on the canonical map (driver-built, so broadcast; unlinked surfaces
+    keep their surface node id), then a single groupBy shuffle on
+    (src, pred, dst) with ``n_support`` and any extra aggregates riding
+    it over the other input columns (url, warc_ts, n_support, ...)."""
+    cmap = F.broadcast(canonical_map)
     t = (triples.join(cmap.withColumnRenamed("node_id", "subj_node")
                       .withColumnRenamed("canon_id", "src_canon"),
                       "subj_node", "left")
@@ -534,16 +483,6 @@ def _canonicalized_triples(triples: DataFrame,
                .withColumnRenamed("canon_id", "dst_canon"), "obj_node", "left"))
     return (t.withColumn("src", F.coalesce("src_canon", "subj_node"))
             .withColumn("dst", F.coalesce("dst_canon", "obj_node"))
-            .drop("subj_node", "obj_node", "src_canon", "dst_canon"))
-
-
-def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
-                     n_support, *extra_aggs) -> DataFrame:
-    """The one edge aggregation every edge builder shares: canonicalize
-    the triples (which carry subj_node/obj_node), then a single groupBy
-    shuffle on (src, pred, dst) with ``n_support`` and any extra
-    aggregates riding it."""
-    return (_canonicalized_triples(triples, canonical_map)
             .groupBy("src", "pred", "dst")
             .agg(n_support.alias("n_support"), *extra_aggs))
 
@@ -551,19 +490,7 @@ def _aggregate_edges(triples: DataFrame, canonical_map: DataFrame,
 def build_kg_edges(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
     """kg_edges(src, pred, dst, n_support): triples mapped onto canonical
     ids, deduped by support count."""
-    return _aggregate_edges(_surface_nodes(triples), canonical_map,
-                            F.count(F.lit(1)))
-
-
-def mined_edges(mined: DataFrame, canonical_map: DataFrame) -> DataFrame:
-    """kg_edges of a mining pass's triple rows, joined on the
-    ``rules.surface_node`` ids the pass put on them.  The canonical map
-    is driver-sized (:func:`canonicalize_surfaces`), so it is
-    broadcast."""
-    triples = (mined.filter(F.col("kind") == "triple")
-               .select("subj_node", "pred", "obj_node"))
-    return _aggregate_edges(triples, F.broadcast(canonical_map),
-                            F.count(F.lit(1)))
+    return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)))
 
 
 class KgBuild:
@@ -599,7 +526,7 @@ class KgBuild:
     def edges(self, canonical_map: DataFrame) -> DataFrame:
         """kg_edges of the pass against a canonical map built from
         :meth:`canonicalize`'s rows."""
-        return mined_edges(self.mined, canonical_map)
+        return build_kg_edges(self.triples, canonical_map)
 
     def close(self) -> None:
         self.mined.unpersist()
@@ -620,7 +547,7 @@ def build_kg_edges_with_provenance(triples: DataFrame,
     supporting url.  Same single shuffle as build_kg_edges (the extra
     aggregates ride the same groupBy); countDistinct is exact here
     because the group key already co-locates each edge's rows."""
-    return _aggregate_edges(_surface_nodes(triples), canonical_map,
+    return _aggregate_edges(triples, canonical_map,
                             F.count(F.lit(1)),
                             F.countDistinct("url").alias("n_docs"),
                             F.min("url").alias("first_url"),
@@ -640,7 +567,7 @@ def build_kg_edges_with_time_windows(triples: DataFrame,
     n_support (support always equals build_kg_edges); it just leaves
     the window untouched.  Min/max ride the SAME single groupBy
     shuffle as the flagship edge build."""
-    return _aggregate_edges(_surface_nodes(triples), canonical_map,
+    return _aggregate_edges(triples, canonical_map,
                             F.count(F.lit(1)),
                             F.min("warc_ts").alias("first_seen"),
                             F.max("warc_ts").alias("last_seen"))
@@ -649,13 +576,13 @@ def build_kg_edges_with_time_windows(triples: DataFrame,
 def build_kg_edges_from_support(support: DataFrame,
                                 canonical_map: DataFrame) -> DataFrame:
     """kg_edges from PRE-AGGREGATED raw triple support
-    (subj, pred, obj, n_support) — the standing-ingest path: the
-    streaming job accumulates per-surface-triple support sums, and the
+    (subj_node, pred, obj_node, n_support) — the standing-ingest path:
+    the streaming job accumulates per-surface-triple support sums, and the
     periodic canonicalization maps them onto canonical ids, SUMMING the
     accumulated support instead of re-counting rows.  Identical output
     to build_kg_edges over the union of the batches' triples (support
     counting is associative)."""
-    return _aggregate_edges(_surface_nodes(support), canonical_map,
+    return _aggregate_edges(support, canonical_map,
                             F.sum("n_support"))
 
 
@@ -666,8 +593,8 @@ def build_kg_edges_from_support(support: DataFrame,
 # The W3C IRIREF production (n-triples grammar) excludes
 # [#x00-#x20] < > " { } | ^ ` \ — ALL of them are percent-encoded, not
 # just the original five (round-4 ADVICE: backslash etc. survive
-# _norm_col, which only collapses \s whitespace, so un-escaped they
-# would render invalid N-Triples lines).  '%' stays FIRST so the
+# rules.norm_surface, which only collapses whitespace, so un-escaped
+# they would render invalid N-Triples lines).  '%' stays FIRST so the
 # mangling is injective: no later replacement can fabricate an escape.
 _NT_ESCAPES = (("%", "%25"),) + tuple(
     (ch, "%%%02X" % ord(ch))
@@ -783,8 +710,7 @@ def pmi_cooccurrence(mentions: DataFrame, cmap: DataFrame) -> DataFrame:
     and a canon appearing twice in a sentence counts once (distinct).
 
     Scale shape: the mention->canon hookup is one key join on the
-    surface node id (the map is the CC output — big but
-    join-partitioned); the pair build is a per-sentence self-join
+    mentions' ``node_id``; the pair build is a per-sentence self-join
     whose blow-up is bounded by mentions-per-sentence (single digits
     in prose — the per-key quadratic is on sentence size, never corpus
     size); singles/pairs are map-side-combined groupBys.  The linked
@@ -792,8 +718,7 @@ def pmi_cooccurrence(mentions: DataFrame, cmap: DataFrame) -> DataFrame:
     sides), so it is localCheckpoint-ed once — the join+distinct runs
     a single time instead of once per consumer.
     Rounded to 6 so both engines' double ln agrees at the hash."""
-    s_node = F.concat(F.lit("s:"), _norm_col(F.col("surface")))
-    linked = (mentions.select("url", "sent_id", s_node.alias("node_id"))
+    linked = (mentions.select("url", "sent_id", "node_id")
               .join(cmap, "node_id")
               .select("url", "sent_id", "canon_id")
               .distinct()

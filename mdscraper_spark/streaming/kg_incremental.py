@@ -3,7 +3,7 @@ mining -> MERGE-accumulated edge-support table, exactly-once.
 
 The batch flagship rebuilds the graph from a snapshot; this is the
 standing-ingest analog: each micro-batch of new pages is extracted and
-mined with the SAME operators, its (subj, pred, obj) support counts are
+mined with the SAME operators, its per-triple support counts are
 summed into the warehouse's ``raw_edges`` table through
 ``Warehouse.merge_table`` (upsert keyed on the triple, PARTITIONED by
 pred so a batch rewrites only the predicates it touches, not the
@@ -17,18 +17,19 @@ the snapshot manifest (Iceberg snapshot-properties analog) atomically
 with the data, so a replayed batch is detected and skipped instead of
 double-counted.
 
-Canonicalization stays a periodic batch job (connected components is
-global by nature; running it per micro-batch would recompute the world
-every few seconds — the standard lambda-architecture split for KG
-builds).  To make that batch half EXACT, the stream accumulates three
-tables: ``raw_edges`` (per-triple support sums), ``raw_coref`` (the
-distinct surface<->entity winning-link vocabulary — per-mention link
-winners depend only on the mention's own surface and the alias dict,
-so the batched union equals the one-shot set) and ``raw_mentions``
-(per-surface-node mention counts).  ``canonicalize_accumulated`` then
-reproduces the one-shot batch build bit-for-bit from those three
-accumulations alone — pinned end-to-end (including a mid-stream
-restart) by tests/test_streaming.py.
+Canonicalization stays a periodic batch job (the lambda-architecture
+split for KG builds).  The stream accumulates two tables, both keyed by
+what the mining pass emits: ``raw_edges`` (per-triple support sums by
+(subj_node, pred, obj_node), the ``rules.surface_node`` ids) and
+``raw_mentions`` (per-surface mention counts by exact surface).  Every
+mention surface is an alias of the ingest dictionary, so the set of
+mentioned surfaces already determines the co-reference links:
+``canonicalize_accumulated`` collects the per-surface sums (at most
+|dictionary| rows) and canonicalizes them on the driver with the batch
+rule (``kg_ops.canonicalize_surfaces``), then maps the accumulated
+support onto canonical ids.  The result equals the one-shot batch
+build over every page ever ingested — pinned end-to-end (including a
+mid-stream restart) by tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -37,28 +38,34 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mdscraper_spark.config import ExtractConfig
+from mdscraper_spark.kg import rules
 from mdscraper_spark.operators import kg as kg_ops
 from mdscraper_spark.operators.extract_udfs import extract_markdown
+from mdscraper_spark.sources import fixtures
 from mdscraper_spark.sources.pages import PAGES_SCHEMA
 from mdscraper_spark.sources.tables import Warehouse
 
 RAW_EDGES = "raw_edges"
-RAW_COREF = "raw_coref"
 RAW_MENTIONS = "raw_mentions"
-EDGE_KEYS = ("subj", "pred", "obj")
+EDGE_KEYS = ("subj_node", "pred", "obj_node")
+MENTION_KEYS = ("bucket", "surface")
 N_ACC_BUCKETS = 16
 
 
-def _with_bucket(df, col: str):
-    """Deterministic accumulate-bucket column: raw_coref/raw_mentions
-    have no natural low-cardinality partition key (unlike raw_edges's
-    pred), so they hash-bucket on their leading key — included in the
-    merge keys so the key determines the partition and merge_table
-    stays partition-SCOPED (each micro-batch rewrites only touched
-    buckets, never the whole accumulated history)."""
-    return df.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(col), F.lit(N_ACC_BUCKETS)).cast("int"))
+def _check_state_format(wh: Warehouse) -> None:
+    """Refuse state accumulated in the older format, whose keys Spark
+    ``lower()`` derived: a ``raw_coref`` table, or a raw_edges /
+    raw_mentions manifest schema without today's keys.  Merging into
+    it would silently mix two surface rules.  Reads manifests only."""
+    stale = ["raw_coref"] if wh.exists("raw_coref") else []
+    for table, keys in ((RAW_EDGES, EDGE_KEYS), (RAW_MENTIONS, MENTION_KEYS)):
+        m = wh.manifest(table)
+        if m and not set(keys) <= {f["name"] for f in m["schema"]["fields"]}:
+            stale.append(table)
+    if stale:
+        raise RuntimeError(
+            f"{wh.root}: accumulated table(s) {stale} have an older "
+            "format — re-ingest into a fresh warehouse")
 
 
 def merge_accumulate(wh: Warehouse, table: str, batch_df, keys,
@@ -136,46 +143,36 @@ def apply_kg_batch(spark: SparkSession, batch_df, batch_id: int,
                    warehouse_path: str, stream_id: str,
                    config: ExtractConfig | None = None) -> None:
     """One micro-batch of the KG ingest half of the lambda split:
-    extract + mine ``batch_df`` (pages) and fold the results into the
-    three accumulated tables.  This IS the foreachBatch body of
-    ``stream_kg_update`` (module-level so the registry parity row
-    ``kg_lambda_parity`` replays the identical code path on static
-    splits — not a reimplementation that could drift)."""
-    from mdscraper_spark.sources.fixtures import alias_rows
-
+    extract + mine ``batch_df`` (pages) over the fixture dictionary and
+    fold the results into the two accumulated tables.  This IS the
+    foreachBatch body of ``stream_kg_update`` (module-level so the
+    registry parity row ``kg_lambda_parity`` replays the identical code
+    path on static splits — not a reimplementation that could drift)."""
     config = config or ExtractConfig()
-    # ONE persisted Arrow pass mines mentions + triples + links; three
+    wh = Warehouse(spark, warehouse_path)
+    _check_state_format(wh)
+    # ONE persisted Arrow pass mines mentions + triples; both
     # accumulated tables consume it
     with kg_ops.KgBuild(extract_markdown(batch_df, config),
-                        alias_rows()) as kg:
-        wh = Warehouse(spark, warehouse_path)
-
-        # (1) per-triple support — the edge side of the lambda split
+                        fixtures.alias_rows()) as kg:
+        # per-triple support — the edge side of the lambda split
         batch_edges = (kg.triples.groupBy(*EDGE_KEYS)
                        .agg(F.count(F.lit(1)).alias("n_support")))
         merge_edge_support(wh, batch_edges, int(batch_id),
                            stream_id=stream_id)
 
-        # (2) co-reference VOCABULARY edges (distinct surface<->entity
-        # winning links).  Per-mention link winners depend only on the
-        # mention's own surface + the alias dict, so the union of the
-        # batches' distinct pairs equals the one-shot batch build's —
-        # which is what makes the periodic canonicalization exact.
-        coref = _with_bucket(
-            kg_ops.coreference_edges(kg.links)
-            .withColumn("n_seen", F.lit(1).cast("long")), "src")
-        merge_accumulate(wh, RAW_COREF, coref,
-                         ("bucket", "src", "dst"), "n_seen",
-                         int(batch_id), partition_by=("bucket",),
-                         stream_id=stream_id)
-
-        # (3) per-surface-node mention counts — feeds kg_nodes
-        merge_accumulate(wh, RAW_MENTIONS,
-                         _with_bucket(kg_ops.mention_node_counts(kg.mentions),
-                                      "node_id"),
-                         ("bucket", "node_id"), "n_mentions",
-                         int(batch_id), partition_by=("bucket",),
-                         stream_id=stream_id)
+        # per-surface mention counts — canonical_map and kg_nodes.  No
+        # natural low-cardinality partition key (unlike raw_edges's
+        # pred), so a hash bucket of the surface leads the merge keys:
+        # each micro-batch rewrites only the buckets it touches
+        mentions = (kg.mentions.groupBy("surface")
+                    .agg(F.count(F.lit(1)).alias("n_mentions"))
+                    .withColumn("bucket",
+                                F.pmod(F.xxhash64("surface"),
+                                       F.lit(N_ACC_BUCKETS)).cast("int")))
+        merge_accumulate(wh, RAW_MENTIONS, mentions, MENTION_KEYS,
+                         "n_mentions", int(batch_id),
+                         partition_by=("bucket",), stream_id=stream_id)
 
 
 def stream_kg_update(spark: SparkSession, input_dir: str,
@@ -213,39 +210,36 @@ def stream_kg_update(spark: SparkSession, input_dir: str,
     query.awaitTermination()
 
 
-def canonicalize_accumulated(spark: SparkSession, warehouse_path: str,
-                             aliases=None, cc_max_iter: int = 25):
+def canonicalize_accumulated(spark: SparkSession, warehouse_path: str):
     """The PERIODIC BATCH half of the lambda split: canonicalize the
-    accumulated vocabulary and materialize kg_nodes / kg_edges.
+    accumulated mentions and materialize kg_nodes / kg_edges.
 
-    Connected components runs over the accumulated co-reference
-    vocabulary graph (distinct (surface, entity) pairs — orders of
-    magnitude smaller than the page stream that produced it), then the
-    accumulated triple support and mention counts are mapped onto
-    canonical ids with SUM aggregation.  Because link winners are
-    per-mention-local and support/mention counting is associative, the
-    result hash-matches the one-shot batch build over every page ever
-    ingested — pinned by tests/test_streaming.py.
+    The per-surface mention sums (at most |dictionary| rows) reach the
+    driver, which canonicalizes them with the batch job's rule over the
+    dictionary ``apply_kg_batch`` ingests with; the accumulated triple
+    support is then mapped onto canonical ids with SUM aggregation.
+    Support and mention counting are associative, so the result equals
+    the one-shot batch build over every page ever ingested — pinned by
+    tests/test_streaming.py.
 
     Returns (nodes_df, edges_df); both are also written to the
     warehouse as ``kg_nodes`` / ``kg_edges`` snapshots."""
     wh = Warehouse(spark, warehouse_path)
-    missing = [t for t in (RAW_EDGES, RAW_COREF, RAW_MENTIONS)
-               if not wh.exists(t)]
+    _check_state_format(wh)
+    missing = [t for t in (RAW_EDGES, RAW_MENTIONS) if not wh.exists(t)]
     if missing:
         raise RuntimeError(
             f"no accumulated ingest in {warehouse_path} yet "
             f"(missing tables: {missing}) — run the --ingest pass first")
-    aliases = aliases if aliases is not None else kg_ops.alias_df(spark)
-    coref = wh.read_table(RAW_COREF).select("src", "dst")
-    cmap = kg_ops.connected_components(coref, max_iter=cc_max_iter)
+    rows = fixtures.alias_rows()
+    n_by_surface = dict(wh.read_table(RAW_MENTIONS)
+                        .select("surface", "n_mentions").collect())
+    cmap_rows, node_rows = kg_ops.canonicalize_surfaces(
+        n_by_surface, rules.best_links(rows), rows)
+    wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA, "kg_nodes")
     edges = kg_ops.build_kg_edges_from_support(
-        wh.read_table(RAW_EDGES), cmap)
-    nodes = kg_ops.build_kg_nodes_from_counts(
-        cmap, wh.read_table(RAW_MENTIONS).select("node_id", "n_mentions"),
-        aliases)
+        wh.read_table(RAW_EDGES),
+        spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
     edges = edges.localCheckpoint()   # materialize before the table
-    nodes = nodes.localCheckpoint()   # writes re-read the plans
-    wh.write_table(edges, "kg_edges")
-    wh.write_table(nodes, "kg_nodes")
-    return nodes, edges
+    wh.write_table(edges, "kg_edges")  # write re-reads the plan
+    return spark.createDataFrame(node_rows, kg_ops.KG_NODES_SCHEMA), edges

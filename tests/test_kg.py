@@ -4,16 +4,22 @@ The oracle (kg/oracle.py) runs the same rules sequentially; the Spark
 pipeline — ``kg_ops.KgBuild``, the composition the batch job, the
 registry, the stream and the bench tools share — must match it exactly
 (triples P/R gate target 1.0 >= 0.95, canonical components set-equal)
-regardless of partitioning.  The join form (``link_entities`` +
-``connected_components``), kept for perfbench's traced replay, must
-equal the job on ASCII dictionaries.
+regardless of partitioning.  Every consumer keys surfaces by the
+``rules.surface_node`` ids the mining pass writes on mentions and
+triples, so the registry's provenance, time-window and PMI rows follow
+the oracle on non-ASCII surfaces too, and the join form
+(``link_entities`` + ``connected_components``), kept for perfbench's
+traced replay, equals the job on every dictionary.
 """
+
+import datetime
 
 import pytest
 
 from mdscraper_spark.config import ExtractConfig
 from mdscraper_spark.kg import rules
-from mdscraper_spark.kg.oracle import run_oracle
+from mdscraper_spark.kg.oracle import (edge_time_windows, pmi_cooccurrence,
+                                       run_oracle)
 from mdscraper_spark.operators import kg as kg_ops
 from mdscraper_spark.operators.extract_udfs import extract_markdown
 from mdscraper_spark.sources import fixtures
@@ -46,14 +52,21 @@ def spark_kg(spark):
 
 
 def test_mentions_match_oracle(spark_kg, oracle):
-    got = {tuple(r) for r in spark_kg["mentions"].collect()}
+    rows = spark_kg["mentions"].collect()
+    got = {(r.url, r.sent_id, r.span_start, r.span_end, r.surface, r.mtype)
+           for r in rows}
     want = set(oracle["mentions"])
     assert got == want
     assert len(want) > N_PAGES  # plenty of mentions planted
+    assert all(r.node_id == rules.surface_node(r.surface) for r in rows)
 
 
 def test_triples_match_oracle_pr_gate(spark_kg, oracle):
-    got = {tuple(r) for r in spark_kg["triples"].collect()}
+    rows = spark_kg["triples"].collect()
+    assert all((r.subj_node, r.obj_node) == (rules.surface_node(r.subj),
+                                             rules.surface_node(r.obj))
+               for r in rows)
+    got = {(r.url, r.sent_id, r.subj, r.pred, r.obj, r.conf) for r in rows}
     want = set(oracle["triples"])
     assert want, "oracle extracted no triples — rules broken"
     tp = len(got & want)
@@ -159,17 +172,15 @@ def test_gazetteer_skips_empty_alias():
 
 def test_cc_max_iter_plumbed_through_dedup_surfaces(spark):
     """ADVICE r03: CC fails loud on round-budget exhaustion, so every
-    production dedup/canonicalize surface must expose the knob."""
+    production dedup surface must expose the knob.  (The KG path runs
+    no CC: it canonicalizes on the driver.)"""
     import inspect
 
     from mdscraper_spark.jobs.dedup import dedup_corpus
     from mdscraper_spark.operators.dedup import (near_dedup_groups,
                                                  resolve_dedup_groups)
-    from mdscraper_spark.streaming.kg_incremental import \
-        canonicalize_accumulated
 
-    for fn in (near_dedup_groups, resolve_dedup_groups, dedup_corpus,
-               canonicalize_accumulated):
+    for fn in (near_dedup_groups, resolve_dedup_groups, dedup_corpus):
         assert "cc_max_iter" in inspect.signature(fn).parameters, fn
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon zeta"),
@@ -181,6 +192,13 @@ def test_cc_max_iter_plumbed_through_dedup_surfaces(spark):
     assert got == {0: True, 1: False, 2: True}
 
 
+def _triples_df(spark, rows, ddl):
+    """Hand-built triples with the node ids the mining pass adds."""
+    return spark.createDataFrame(
+        [r + (rules.surface_node(r[2]), rules.surface_node(r[4]))
+         for r in rows], ddl + ", subj_node string, obj_node string")
+
+
 def test_edge_provenance_counts_and_url_span(spark):
     """Round 4: build_kg_edges_with_provenance = build_kg_edges plus
     exact distinct-doc counts and the lexicographic url span, one
@@ -188,7 +206,8 @@ def test_edge_provenance_counts_and_url_span(spark):
     from mdscraper_spark.operators.kg import (build_kg_edges,
                                               build_kg_edges_with_provenance)
 
-    triples = spark.createDataFrame(
+    triples = _triples_df(
+        spark,
         [("https://d.test/2", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
          ("https://d.test/1", 0, "Ada Lovelace", "works_for", "Acme", 0.9),
          ("https://d.test/1", 1, "Ada Lovelace", "works_for", "Acme", 0.9),
@@ -226,7 +245,8 @@ def test_edge_time_windows(spark):
     def ts(i):
         return t0 + datetime.timedelta(hours=i)
 
-    triples = spark.createDataFrame(
+    triples = _triples_df(
+        spark,
         [("https://d.test/2", 0, "Ada Lovelace", "works_for", "Acme", 0.9,
           ts(2)),
          ("https://d.test/1", 0, "Ada Lovelace", "works_for", "Acme", 0.9,
@@ -294,13 +314,14 @@ def test_pmi_cooccurrence_hand_graph(spark):
     from mdscraper_spark.operators.kg import pmi_cooccurrence
 
     mentions = spark.createDataFrame(
-        [("u1", 0, 0, 1, "Alpha", "ORG"), ("u1", 0, 5, 6, "Beta", "ORG"),
-         ("u1", 0, 9, 10, "alpha", "ORG"),          # same canon, same sent
-         ("u1", 1, 0, 1, "Alpha", "ORG"), ("u1", 1, 5, 6, "Beta", "ORG"),
-         ("u2", 0, 0, 1, "Alpha", "ORG"), ("u2", 0, 5, 6, "Gamma", "ORG"),
-         ("u2", 0, 9, 10, "Unlinked", "ORG")],
+        [r + (rules.surface_node(r[4]),) for r in (
+            ("u1", 0, 0, 1, "Alpha", "ORG"), ("u1", 0, 5, 6, "Beta", "ORG"),
+            ("u1", 0, 9, 10, "alpha", "ORG"),       # same canon, same sent
+            ("u1", 1, 0, 1, "Alpha", "ORG"), ("u1", 1, 5, 6, "Beta", "ORG"),
+            ("u2", 0, 0, 1, "Alpha", "ORG"), ("u2", 0, 5, 6, "Gamma", "ORG"),
+            ("u2", 0, 9, 10, "Unlinked", "ORG"))],
         "url string, sent_id int, span_start int, span_end int, "
-        "surface string, mtype string")
+        "surface string, mtype string, node_id string")
     cmap = spark.createDataFrame(
         [("s:alpha", "cA"), ("s:beta", "cB"), ("s:gamma", "cC"),
          ("e:1", "cA")],
@@ -413,12 +434,11 @@ def test_job_links_equal_join_pipeline_custom_dictionary(spark, tmp_path):
 
 def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
     """The job normalizes surfaces with rules.norm_surface (casefold),
-    as run_oracle does, in its links AND its canonical ids; the Spark
-    key of link_entities and coreference_edges is lower().
-    'Straße' and 'STRASSE' casefold together but do not lower together,
-    so the two forms disagree here — the job follows the oracle in
-    every table, including the edges of triples whose subject is one
-    of the two spellings."""
+    as run_oracle does, in its links AND its canonical ids.  'Straße'
+    and 'STRASSE' casefold together but do not lower() together — the
+    job follows the oracle in every table, including the edges of
+    triples whose subject is one of the two spellings, and so does the
+    replay's join form (link_entities + coreference_edges)."""
     from mdscraper_spark.jobs.kg_build import KgBuildJob
 
     rows = [("Straße", 1, "Strasse AG", "ORG", 1.0),
@@ -429,9 +449,10 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
                  "Straße acquired Quuxana Vel.",
                  "STRASSE is based in Berlin."]
     pages = _custom_pages(spark, sentences)
-    tables = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
-                        aliases=spark.createDataFrame(rows, _ALIAS_DDL)
-                        ).run(pages)
+    aliases = spark.createDataFrame(rows, _ALIAS_DDL)
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                     aliases=aliases)
+    tables = job.run(pages)
     got = sorted((r.url, r.mention_key, r.entity_id, r.score)
                  for r in tables["entity_links"].collect())
     oracle = run_oracle([(r.url, r.html.decode()) for r in pages.collect()],
@@ -445,9 +466,11 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
     assert ("e:1", "based_in", "s:berlin") in {
         e[:3] for e in oracle["kg_edges"]}
     joined = kg_ops.link_entities(tables["mentions"].drop("part_id"),
-                                  spark.createDataFrame(rows, _ALIAS_DDL))
+                                  aliases)
     assert {r.entity_id for r in joined.filter("surface = 'STRASSE'")
-            .collect()} == {2}
+            .collect()} == {1}
+    _assert_job_equals_pipeline(tables, _pipeline_tables(
+        spark, tables["markdown_docs"], aliases, job._gazetteer_entries()))
 
     # the composition alone, with no job, follows the oracle too
     with kg_ops.KgBuild(extract_markdown(pages, CFG), rows) as kg:
@@ -459,3 +482,49 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
         edges = kg.edges(spark.createDataFrame(
             cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
         assert _rows(edges) == sorted(oracle["kg_edges"])
+
+
+# ROADMAP's casefold probe, extended with STRASSE and MASS: non-alias
+# subjects that casefold onto an alias (Straße) or onto each other (Maß)
+_PROBE_ROWS = [("Straße", 1, "Strasse AG", "ORG", 1.0),
+               ("Quuxana Vel", 3, "Quuxana Vel", "PERSON", 1.0)]
+_PROBE_SENTENCES = ["Straße acquired Quuxana Vel.",
+                    "STRASSE acquired Quuxana Vel.",
+                    "Maß is based in Berlin.",
+                    "MASS is based in Berlin.",
+                    "Quuxana Vel works for Maß."]
+# the registry row's crawl-timestamp twin, keyed on the page number
+_PROBE_TS = ("timestamp'2025-06-14 00:00:00' + make_interval(0, 0, 0, 0, "
+             "CAST(substring_index(url, '/p', -1) AS INT), 0, 0)")
+
+
+def _probe_ts(url):
+    return (datetime.datetime(2025, 6, 14)
+            + datetime.timedelta(hours=int(url.rsplit("/p", 1)[1])))
+
+
+def test_casefold_probe_consumers_equal_oracle(spark):
+    """Every consumer of one build keys surfaces like run_oracle: the
+    flagship edges, the provenance and time-window edges and PMI.  A
+    lower() key would give 's:straße' (unlinked) and 's:maß' (apart
+    from 's:mass') and drop every Straße mention from PMI."""
+    from pyspark.sql import functions as F
+
+    pages = _custom_pages(spark, _PROBE_SENTENCES)
+    oracle = run_oracle([(r.url, r.html.decode()) for r in pages.collect()],
+                        _PROBE_ROWS, CFG)
+    edges = {e[:3] for e in oracle["kg_edges"]}
+    assert {("e:1", "acquired", "e:3"), ("s:mass", "based_in", "s:berlin"),
+            ("e:3", "works_for", "s:mass")} == edges
+    want_pmi = pmi_cooccurrence(oracle)
+    assert want_pmi, "probe must co-locate two linked entities"
+    with kg_ops.KgBuild(extract_markdown(pages, CFG), _PROBE_ROWS) as kg:
+        cmap_rows, _node_rows = kg.canonicalize()
+        cmap = spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)
+        assert _rows(kg.edges(cmap)) == sorted(oracle["kg_edges"])
+        assert _rows(kg_ops.build_kg_edges_with_provenance(
+            kg.triples, cmap)) == sorted(oracle["kg_edge_prov"])
+        assert _rows(kg_ops.build_kg_edges_with_time_windows(
+            kg.triples.withColumn("warc_ts", F.expr(_PROBE_TS)), cmap)) \
+            == edge_time_windows(oracle, _probe_ts)
+        assert _rows(kg_ops.pmi_cooccurrence(kg.mentions, cmap)) == want_pmi

@@ -112,7 +112,7 @@ def test_incremental_kg_edge_accumulation(spark, tmp_path):
     stream_kg_update(spark, inp, wh_path, ckpt, CFG)
 
     wh = Warehouse(spark, wh_path)
-    got = {(r.subj, r.pred, r.obj): r.n_support
+    got = {(r.subj_node, r.pred, r.obj_node): r.n_support
            for r in wh.read_table("raw_edges").collect()}
 
     # batch ground truth over the full corpus in one pass
@@ -121,16 +121,16 @@ def test_incremental_kg_edge_accumulation(spark, tmp_path):
     gaz = tuple((a, t) for a, _e, _c, t, _p in alias_rows())
     _mentions, triples = kg_ops.split_mined(
         kg_ops.mine_kg_combined(docs, gaz))
-    want = {(r.subj, r.pred, r.obj): r.n
+    want = {(r.subj_node, r.pred, r.obj_node): r.n
             for r in triples
-            .groupBy("subj", "pred", "obj")
+            .groupBy("subj_node", "pred", "obj_node")
             .agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got == want and len(got) > 0
 
     # no new files -> checkpoint makes the re-run a no-op
     n_snapshots = len(wh.snapshots("raw_edges"))
     stream_kg_update(spark, inp, wh_path, ckpt, CFG)
-    assert {(r.subj, r.pred, r.obj): r.n_support
+    assert {(r.subj_node, r.pred, r.obj_node): r.n_support
             for r in wh.read_table("raw_edges").collect()} == want
     assert len(wh.snapshots("raw_edges")) == n_snapshots
 
@@ -141,22 +141,34 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     increments through the SAME checkpoint — the second invocation IS
     a restart of the standing query), a crash-replay probe against
     every accumulated table, then the periodic batch canonicalization —
-    and the final kg_nodes/kg_edges hash-match the one-shot batch build
-    over every page ever ingested."""
-    from pyspark.sql import functions as F
+    and the final kg_nodes/kg_edges equal the one-shot batch build and
+    run_oracle over every page ever ingested.
 
+    The second increment holds triples whose subjects and objects
+    casefold together but do not lower() together (Straße/STRASSE,
+    Maß/MASS, none of them aliases) next to fixture aliases, so
+    raw_edges must key them by the mining pass's rules.surface_node
+    ids.  The stream ingests only the fixture dictionary (all ASCII),
+    so its mention side meets no such surface; tests/test_kg.py covers
+    non-ASCII mentions through KgBuild."""
+    from mdscraper_spark.kg.oracle import run_oracle
     from mdscraper_spark.operators import kg as kg_ops
     from mdscraper_spark.operators.extract_udfs import extract_markdown
     from mdscraper_spark.sources.fixtures import alias_rows
     from mdscraper_spark.sources.tables import Warehouse
     from mdscraper_spark.streaming.kg_incremental import (
-        RAW_COREF, RAW_EDGES, RAW_MENTIONS, canonicalize_accumulated,
+        EDGE_KEYS, RAW_EDGES, RAW_MENTIONS, canonicalize_accumulated,
         merge_accumulate, stream_kg_update)
 
     inp = str(tmp_path / "lambda_pages_in")
     wh_path = str(tmp_path / "lambda_wh")
     ckpt = str(tmp_path / "lambda_ckpt")
-    all_pages = bulk_pages_df(spark, 40).collect()
+    all_pages = bulk_pages_df(spark, 40).collect() + _sentence_pages(
+        ["Straße acquired Quantum Dynamics 0.",
+         "STRASSE acquired QUANTUM DYNAMICS 0.",
+         "Maß is based in Stellar Dynamics 1.",
+         "MASS is based in Stellar Dynamics.",
+         "Quantum Dynamics works for Maß."], 4)
 
     # increment 1, then a mid-stream restart (same checkpoint) for
     # increment 2
@@ -171,11 +183,11 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     # must not change ANY accumulated table (each tracks its own id)
     wh = Warehouse(spark, wh_path)
     before = {t: sorted(map(tuple, wh.read_table(t).collect()))
-              for t in (RAW_EDGES, RAW_COREF, RAW_MENTIONS)}
+              for t in (RAW_EDGES, RAW_MENTIONS)}
     dummy = spark.createDataFrame(
-        [("zz", "works for", "zz", 9)],
-        "subj string, pred string, obj string, n_support long")
-    merge_accumulate(wh, RAW_EDGES, dummy, ("subj", "pred", "obj"),
+        [("s:zz", "works for", "s:zz", 9)],
+        "subj_node string, pred string, obj_node string, n_support long")
+    merge_accumulate(wh, RAW_EDGES, dummy, EDGE_KEYS,
                      "n_support", batch_id=0, partition_by=("pred",))
     assert sorted(map(tuple, wh.read_table(RAW_EDGES).collect())) \
         == before[RAW_EDGES]
@@ -187,7 +199,7 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     got_nodes = {r.canon_id: (r.label, r.n_mentions)
                  for r in nodes.collect()}
 
-    # one-shot batch build over the same 40 pages
+    # one-shot batch build and oracle over the same pages
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
     with kg_ops.KgBuild(docs, alias_rows()) as kg:
@@ -196,11 +208,50 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
                       for r in kg.edges(spark.createDataFrame(
                           cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)).collect()}
     want_nodes = {canon_id: (label, n) for canon_id, label, n in node_rows}
+    oracle = run_oracle([(r[0], bytes(r[2]).decode()) for r in all_pages],
+                        alias_rows(), CFG)
 
     assert got_edges == want_edges and len(got_edges) > 0
     assert got_nodes == want_nodes and len(got_nodes) > 0
+    assert got_edges == {(s, p, d): n for s, p, d, n in oracle["kg_edges"]}
+    assert got_nodes == {c: (lb, n) for c, lb, n in oracle["kg_nodes"]}
+    assert {("s:strasse", "acquired", "e:1"), ("s:mass", "based_in", "e:2"),
+            ("e:1", "works_for", "s:mass")} <= set(got_edges)
     # the canonicalization also materialized warehouse snapshots
     assert wh.exists("kg_edges") and wh.exists("kg_nodes")
+
+
+def _sentence_pages(sentences, n_pages):
+    """PAGES_SCHEMA rows whose content block holds ``sentences``."""
+    import datetime
+
+    html = "".join(f"<p>{s}</p>" for s in sentences)
+    return [(f"https://c{i}.test/p{i}", datetime.datetime(2025, 6, 14),
+             f"<div class='content'>{html}</div>".encode(), None, "en")
+            for i in range(n_pages)]
+
+
+def test_old_format_state_is_refused(spark, tmp_path):
+    """State accumulated under the older lower()-derived keys — a
+    raw_coref table, or raw_edges keyed by subj/obj — is refused with a
+    clear error by both entry points instead of merged."""
+    import pytest
+
+    from mdscraper_spark.sources.tables import Warehouse
+    from mdscraper_spark.streaming.kg_incremental import (
+        apply_kg_batch, canonicalize_accumulated)
+
+    pages = spark.createDataFrame(_sentence_pages(["None."], 1), PAGES_SCHEMA)
+    for table, ddl in (("raw_coref", "bucket int, src string, dst string"),
+                       ("raw_edges", "subj string, pred string, obj string")):
+        wh_path = str(tmp_path / table)
+        Warehouse(spark, wh_path).write_table(
+            spark.createDataFrame([], ddl + ", n long"), table)
+        msg = f"{table}.*re-ingest into a fresh warehouse"
+        with pytest.raises(RuntimeError, match=msg):
+            apply_kg_batch(spark, pages, 0, wh_path, stream_id="s")
+        with pytest.raises(RuntimeError, match=msg):
+            canonicalize_accumulated(spark, wh_path)
 
 
 def test_kg_stream_cli(spark, tmp_path, capsys):
@@ -250,7 +301,7 @@ def test_exactly_once_survives_compaction(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "compact_wh"))
     edges = spark.createDataFrame(
         [("a", "works for", "X", 2)],
-        "subj string, pred string, obj string, n_support long")
+        "subj_node string, pred string, obj_node string, n_support long")
     merge_edge_support(wh, edges, batch_id=0, stream_id="/ckpt/c")
     wh.compact("raw_edges")
     props = wh.manifest("raw_edges")["properties"]
@@ -289,7 +340,7 @@ def test_merge_accumulate_refuses_foreign_stream_ids(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "sid_wh"))
     edges = spark.createDataFrame(
         [("a", "works for", "X", 1)],
-        "subj string, pred string, obj string, n_support long")
+        "subj_node string, pred string, obj_node string, n_support long")
     merge_edge_support(wh, edges, batch_id=0, stream_id="/ckpt/one")
     merge_edge_support(wh, edges, batch_id=1, stream_id="/ckpt/one")
     with pytest.raises(RuntimeError, match="checkpoint"):
@@ -327,15 +378,15 @@ def test_kg_incremental_batch_replay_is_idempotent(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "replay_wh"))
     edges = spark.createDataFrame(
         [("a", "works for", "X", 2), ("b", "works for", "Y", 1)],
-        "subj string, pred string, obj string, n_support long")
+        "subj_node string, pred string, obj_node string, n_support long")
     merge_edge_support(wh, edges, batch_id=0)
     merge_edge_support(wh, edges, batch_id=0)      # replay: skipped
-    got = {(r.subj, r.obj): r.n_support
+    got = {(r.subj_node, r.obj_node): r.n_support
            for r in wh.read_table("raw_edges").collect()}
     assert got == {("a", "X"): 2, ("b", "Y"): 1}
 
     merge_edge_support(wh, edges, batch_id=1)      # genuine new batch
-    got = {(r.subj, r.obj): r.n_support
+    got = {(r.subj_node, r.obj_node): r.n_support
            for r in wh.read_table("raw_edges").collect()}
     assert got == {("a", "X"): 4, ("b", "Y"): 2}
     # pred-partitioned: the merge is partition-scoped, not full-table

@@ -31,9 +31,9 @@ CASES = [
     ("kg_flagship",
      "InMemoryTableScan of the persisted mined rows (the one Arrow "
      "mining pass of kg_ops.KgBuild, shared by every KG row) -> two "
-     "broadcast joins with the driver-built canonical map -> edge "
-     "aggregation; no shuffle on the big side until the final "
-     "groupBy"),
+     "broadcast joins of the triples' mining-pass node ids with the "
+     "driver-built canonical map -> edge aggregation; no shuffle on "
+     "the big side until the final groupBy"),
     ("near_dedup_groups",
      "banded LSH self-join on the bucket key (never all-pairs), CC on "
      "the pair graph only, one corpus left join at the end"),
@@ -124,9 +124,10 @@ CASES = [
      "-keyed; ws-only rows union AROUND the join; doc rebuild one "
      "hash aggregate — no self-join, no CartesianProduct"),
     ("kg_edge_time_windows",
-     "the flagship edge build's single groupBy shuffle with min/max "
-     "timestamp aggregates riding it; the timestamp a projection on "
-     "each triple row's url (no join)"),
+     "the flagship edge build's plan: two broadcast joins of the "
+     "triples' node ids with the canonical map, one groupBy shuffle "
+     "with min/max timestamp aggregates riding it; the timestamp a "
+     "projection on each triple row's url (no join)"),
 ]
 
 

@@ -27,6 +27,7 @@ Usage: python tools/freeze_kg_oracle.py [sf_dir ...]
 
 from __future__ import annotations
 
+import datetime
 import pathlib
 import sys
 import time
@@ -35,7 +36,8 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 
-from mdscraper_spark.kg.oracle import run_oracle  # noqa: E402
+from mdscraper_spark.kg.oracle import (  # noqa: E402
+    edge_time_windows, pmi_cooccurrence, run_oracle)
 from mdscraper_spark.sources.fixtures import (  # noqa: E402
     _FIRST, _LAST, _ORG_A, _ORG_B, alias_rows)
 
@@ -151,70 +153,23 @@ def freeze(sf_dir: str) -> None:
          for s, p, d, n, nd, fu, lu in derived["kg_edge_prov"]])
     con.execute(f"COPY pv TO '{out_prov}' (FORMAT PARQUET)")
 
-    # temporal edge windows (round 5, J61): same canonicalized-edge
-    # derivation, aggregating min/max crawl timestamp over supporting
-    # pages; ts(url) replays the registry row's deterministic
-    # make_interval expression — base + (doc_id % 97) hours
-    import datetime as _dt
-
-    from mdscraper_spark.kg import rules as _rules
-
-    _canon = dict(derived["canonical_map"])
-    _base = _dt.datetime(2025, 6, 14, 0, 0, 0)
-
-    def _ts(url: str) -> _dt.datetime:
-        return _base + _dt.timedelta(hours=int(url.rsplit("/", 1)[1]) % 97)
-
-    tw_support: dict = {}
-    tw_first: dict = {}
-    tw_last: dict = {}
-    for url, _sid, subj, pred, obj, _conf in derived["triples"]:
-        s_node = _rules.surface_node(subj)
-        o_node = _rules.surface_node(obj)
-        key = (_canon.get(s_node, s_node), pred, _canon.get(o_node, o_node))
-        ts = _ts(url)
-        tw_support[key] = tw_support.get(key, 0) + 1
-        tw_first[key] = min(tw_first.get(key, ts), ts)
-        tw_last[key] = max(tw_last.get(key, ts), ts)
+    # temporal edge windows (round 5, J61): ts(url) replays the
+    # registry row's deterministic make_interval expression — base +
+    # (doc_id % 97) hours
+    base = datetime.datetime(2025, 6, 14, 0, 0, 0)
+    tw_rows = edge_time_windows(derived, lambda url: base + datetime.timedelta(
+        hours=int(url.rsplit("/", 1)[1]) % 97))
     out_tw = OUT_DIR / f"kg_tw_{fsig}.parquet"
     con.execute("CREATE TABLE tw (src VARCHAR, pred VARCHAR, dst VARCHAR, "
                 "n_support BIGINT, first_seen TIMESTAMP, "
                 "last_seen TIMESTAMP, corpus_sig VARCHAR)")
-    con.executemany(
-        "INSERT INTO tw VALUES (?, ?, ?, ?, ?, ?, ?)",
-        [(s, p, d, int(n), tw_first[(s, p, d)], tw_last[(s, p, d)], sig)
-         for (s, p, d), n in sorted(tw_support.items())])
+    con.executemany("INSERT INTO tw VALUES (?, ?, ?, ?, ?, ?, ?)",
+                    [(s, p, d, int(n), fs, ls, sig)
+                     for s, p, d, n, fs, ls in tw_rows])
     con.execute(f"COPY tw TO '{out_tw}' (FORMAT PARQUET)")
 
-    # sentence-level PMI co-occurrence, replayed single-threaded from
-    # the SAME mentions + canonical map (for kg_pmi_cooccurrence):
-    # unlinked surfaces drop out, a canon twice in one sentence counts
-    # once, N = sentences with >= 1 linked mention
-    import math
-    from collections import defaultdict
-
-    from mdscraper_spark.kg import rules
-
-    canon_of = dict(derived["canonical_map"])
-    sent_nodes = defaultdict(set)
-    for url, sid, _start, _end, surface, _t in derived["mentions"]:
-        node = rules.surface_node(surface)
-        if node in canon_of:
-            sent_nodes[(url, sid)].add(canon_of[node])
-    n_sent = float(len(sent_nodes))
-    n_single: dict = defaultdict(int)
-    n_pair: dict = defaultdict(int)
-    for nodes in sent_nodes.values():
-        for c in nodes:
-            n_single[c] += 1
-        snodes = sorted(nodes)
-        for i, ca in enumerate(snodes):
-            for cb in snodes[i + 1:]:
-                n_pair[(ca, cb)] += 1
-    pmi_rows = sorted(
-        (ca, cb, n,
-         round(math.log(n * n_sent / (n_single[ca] * n_single[cb])), 6))
-        for (ca, cb), n in n_pair.items())
+    # sentence-level PMI co-occurrence (for kg_pmi_cooccurrence)
+    pmi_rows = pmi_cooccurrence(derived)
     out_pmi = OUT_DIR / f"kg_pmi_{fsig}.parquet"
     con.execute("CREATE TABLE pm (canon_a VARCHAR, canon_b VARCHAR, "
                 "n_pair BIGINT, pmi DOUBLE, corpus_sig VARCHAR)")
