@@ -18,10 +18,33 @@ surface (at most |dictionary| rows) reaches the driver, which builds
 canonical_map and kg_nodes (KgBuild.canonicalize); the job writes
 them, and the lineage, with pyarrow (Warehouse.write_rows).
 
+Independent Spark jobs run at the same time, from a two-thread pool
+scoped to one ``run()`` (Spark schedules jobs submitted from separate
+threads concurrently):
+
+* the dictionary collect of an injected alias DataFrame runs beside
+  extraction; its rows are taken after the ``markdown_docs`` commit,
+  so a dictionary error still surfaces after extraction is recorded;
+* after the ``mentions`` write, the ``triples`` and ``entity_links``
+  writes run beside canonicalization and the ``kg_edges`` write.
+  ``mentions`` goes first, alone, because its write materializes the
+  persisted mining pass the other readers then share (two readers
+  racing on an unmaterialized cache would each recompute it).
+
+Every submitted callable is wrapped with
+``pyspark.util.inheritable_thread_target(spark)``: a pool thread must
+carry the caller's job group, local properties and session tags, or
+its jobs escape the caller's accounting (``setJobGroup`` +
+``statusTracker``).  Every future is joined on every path, the side
+writes before ``KgBuild`` unpersists the pass, and the first error is
+re-raised; no thread or Spark job outlives ``run()``.
+
 Stage row counts in the lineage come from the writes themselves (the
 warehouse manifest's ``record_counts``), never from re-scanning a
 table.  Extract rows are appended as soon as extraction commits;
-every later stage's rows go in one append at the end of the run.
+every later stage's rows go in one append after every write has
+committed.  Each stage's ``wall_ms`` is the time of its own work,
+timed in the thread that ran it, so stage walls may overlap.
 
 Resume contract (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"): the expensive extraction stage is
@@ -39,6 +62,7 @@ from __future__ import annotations
 import datetime
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor, wait
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +75,7 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.util import inheritable_thread_target
 
 from mdscraper_spark.config import ExtractConfig
 from mdscraper_spark.operators import kg as kg_ops
@@ -81,6 +106,8 @@ class KgBuildJob:
     # perfbench/spans.py, whose traced replay still calls
     # kg_ops.link_entities(salt=...) and kg_ops.connected_components
     # over those tables; they go when the replay does (ROADMAP item 3).
+    # run() overlaps its independent Spark jobs on a pool of two threads
+    # (the DAG's two side branches); see the module docstring.
     salt = None
     cc_local_solve_threshold = 2_000_000
 
@@ -140,8 +167,34 @@ class KgBuildJob:
                  wall_ms, now) for key, n in counts.items()]
 
     # -- stages -------------------------------------------------------------
+    def _submit(self, pool: ThreadPoolExecutor, fn, *args):
+        """fn(*args) on the pool, its Spark jobs in the calling thread's
+        job group (local properties and session tags captured now)."""
+        return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+
+    def _timed_write(self, df: DataFrame, name: str) -> int:
+        """Partitioned write of one mined table; returns its wall ms."""
+        t0 = time.monotonic()
+        self.wh.write_table(with_part_id(df, self.n_buckets), name,
+                            partition_by=("part_id",))
+        return int((time.monotonic() - t0) * 1000)
+
     def run(self, pages: DataFrame, run_id: str = "run-1",
             resume: bool = False) -> dict:
+        with ThreadPoolExecutor(max_workers=2,
+                                thread_name_prefix="kg-build") as pool:
+            self._run(pool, pages, run_id, resume)
+        return {name: self.wh.read_table(name) for name in (
+            "markdown_docs", "mentions", "triples", "entity_links",
+            "canonical_map", "kg_nodes", "kg_edges", "lineage")}
+
+    def _run(self, pool: ThreadPoolExecutor, pages: DataFrame,
+             run_id: str, resume: bool) -> None:
+        # The mining gazetteer comes from the SAME dictionary the links
+        # are scored against — a caller-injected dictionary must drive
+        # mention detection too, or custom aliases silently produce an
+        # empty KG.  Its collect overlaps extraction.
+        dictionary = self._submit(pool, self._dictionary)
         pages = with_part_id(pages, self.n_buckets)
 
         todo = pages
@@ -173,41 +226,32 @@ class KgBuildJob:
                 run_id, "extract", "markdown_docs", wall_ms))
 
         docs = self.wh.read_table("markdown_docs")
-        ledger: list = []   # later stages' lineage rows, one append
+        with kg_ops.KgBuild(docs, dictionary.result()) as kg:
+            # materializes the persisted pass the later readers share
+            mentions_ms = self._timed_write(kg.mentions, "mentions")
+            side = [self._submit(pool, self._timed_write, kg.triples,
+                                 "triples"),
+                    self._submit(pool, self._timed_write, kg.links,
+                                 "entity_links")]
+            try:
+                t0 = time.monotonic()
+                cmap_rows, node_rows = kg.canonicalize()
+                self.wh.write_rows(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA,
+                                   "canonical_map")
+                self.wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA,
+                                   "kg_nodes")
+                self.wh.write_table(
+                    kg.edges(self.wh.read_table("canonical_map")),
+                    "kg_edges")
+                graph_ms = int((time.monotonic() - t0) * 1000)
+            finally:
+                # close() unpersists the pass the side writes read
+                wait(side)
+            triples_ms, links_ms = (f.result() for f in side)
 
-        # The mining gazetteer comes from the SAME dictionary the links
-        # are scored against — a caller-injected dictionary must drive
-        # mention detection too, or custom aliases silently produce an
-        # empty KG.
-        with kg_ops.KgBuild(docs, self._dictionary()) as kg:
-            t0 = time.monotonic()
-            self.wh.write_table(with_part_id(kg.mentions, self.n_buckets),
-                                "mentions", partition_by=("part_id",))
-            self.wh.write_table(with_part_id(kg.triples, self.n_buckets),
-                                "triples", partition_by=("part_id",))
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            ledger += self._stage_rows(run_id, "mine", "mentions", wall_ms)
-
-            t0 = time.monotonic()
-            self.wh.write_table(with_part_id(kg.links, self.n_buckets),
-                                "entity_links", partition_by=("part_id",))
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            ledger += self._stage_rows(run_id, "link", "entity_links",
-                                       wall_ms)
-
-            t0 = time.monotonic()
-            cmap_rows, node_rows = kg.canonicalize()
-            self.wh.write_rows(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA,
-                               "canonical_map")
-            self.wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA,
-                               "kg_nodes")
-            self.wh.write_table(kg.edges(self.wh.read_table("canonical_map")),
-                                "kg_edges")
-            wall_ms = int((time.monotonic() - t0) * 1000)
-        ledger.append((run_id, GLOBAL_PART, "graph", "ok", len(node_rows),
-                       wall_ms, datetime.datetime.now(datetime.timezone.utc)))
-        self._append_lineage(ledger)
-
-        return {name: self.wh.read_table(name) for name in (
-            "markdown_docs", "mentions", "triples", "entity_links",
-            "canonical_map", "kg_nodes", "kg_edges", "lineage")}
+        self._append_lineage(
+            self._stage_rows(run_id, "mine", "mentions",
+                             mentions_ms + triples_ms)
+            + self._stage_rows(run_id, "link", "entity_links", links_ms)
+            + [(run_id, GLOBAL_PART, "graph", "ok", len(node_rows),
+                graph_ms, datetime.datetime.now(datetime.timezone.utc))])

@@ -6,7 +6,11 @@ url-host buckets (simulating a mid-job crash) and restart with
 resume=True.
 """
 
+import datetime
 import shutil
+import threading
+import time
+import warnings
 
 import pytest
 
@@ -15,6 +19,7 @@ from pyspark.sql import functions as F
 from mdscraper_spark.config import ExtractConfig
 from mdscraper_spark.jobs.kg_build import KgBuildJob
 from mdscraper_spark.sources.pages import bulk_pages_df
+from mdscraper_spark.sources.tables import Warehouse
 
 N_PAGES = 30
 N_BUCKETS = 8
@@ -141,26 +146,32 @@ def test_empty_corpus_flows_through_all_stages(spark, tmp_path):
     assert set(tables["mentions"].columns) >= {"url", "sent_id", "surface"}
 
 
-def test_custom_alias_dictionary_drives_mining_too(spark, tmp_path):
-    """An injected alias dictionary must reach BOTH linking and mention
-    mining — hard-coding the fixture gazetteer made custom dictionaries
-    silently produce an empty KG."""
-    custom = spark.createDataFrame(
+def _custom_aliases(spark):
+    return spark.createDataFrame(
         [("Zorblax Corp", 900, "Zorblax Corporation", "ORG", 1.0),
          ("Quuxana Vel", 901, "Quuxana Vel", "PERSON", 1.0)],
         "alias string, entity_id long, canonical string, "
         "etype string, prior double")
+
+
+def _custom_pages(spark):
     html = ("<div class='content'><p>Quuxana Vel works for Zorblax Corp."
             "</p></div>")
-    import datetime
-    pages = spark.createDataFrame(
+    return spark.createDataFrame(
         [(f"https://z.test/p{i}", datetime.datetime(2025, 6, 14),
           html.encode(), None, "en") for i in range(4)],
         "url string, warc_ts timestamp, html binary, text string, "
         "lang string")
+
+
+def test_custom_alias_dictionary_drives_mining_too(spark, tmp_path):
+    """An injected alias dictionary must reach BOTH linking and mention
+    mining — hard-coding the fixture gazetteer made custom dictionaries
+    silently produce an empty KG."""
+    custom = _custom_aliases(spark)
     job = KgBuildJob(spark, str(tmp_path / "wh_custom"), CFG,
                      n_buckets=4, aliases=custom)
-    tables = job.run(pages)
+    tables = job.run(_custom_pages(spark))
     edges = tables["kg_edges"].collect()
     assert len(edges) > 0                      # custom surfaces mined
     nodes = {r.label for r in tables["kg_nodes"].collect()}
@@ -200,3 +211,75 @@ def test_lineage_upgrade_spark_file_then_pyarrow_appends(spark, tmp_path):
     assert {r.run_id for r in got if r.stage == "graph"} == {"r1", "r2", "r3"}
     assert len(got) == len(rows) + 2 * sum(1 for r in rows
                                            if r[2] != "extract")
+
+
+def _last_job_of(sc, group):
+    """Run one tiny job in ``group``; returns its job id."""
+    sc.setJobGroup(group, group)
+    sc.parallelize([1]).count()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_every_job_of_a_run_is_in_the_callers_job_group(spark, tmp_path):
+    """The run's pool threads carry the caller's job group: every job
+    launched between two marker jobs — the dictionary collect and the
+    side writes included — is in the run's group, none ungrouped.
+    perfbench's per-pass ``spark_jobs`` count relies on this."""
+    sc = spark.sparkContext
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                     aliases=_custom_aliases(spark))
+    pages = _custom_pages(spark)
+    group = "kg-run-group"
+    first = _last_job_of(sc, "kg-run-before")
+    try:
+        sc.setJobGroup(group, "KgBuildJob.run")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            job.run(pages)
+        last = _last_job_of(sc, "kg-run-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(in_group) > 5
+    assert set(range(first + 1, last)) == in_group
+    assert not [w for w in caught
+                if "Tags will not be inherited" in str(w.message)]
+
+
+def test_failed_side_write_joins_everything_and_resumes(spark, tmp_path,
+                                                        monkeypatch):
+    """A side write that fails while canonicalization and a slower
+    sibling write run beside it: run() re-raises its error only after
+    every job and thread of the run has finished and the mining pass
+    is unpersisted; lineage keeps the extract rows and no later
+    stage's; a resume then matches a clean run."""
+    pages = bulk_pages_df(spark, N_PAGES)
+    want = snapshot(KgBuildJob(spark, str(tmp_path / "wh_a"), CFG,
+                               n_buckets=N_BUCKETS).run(pages))
+
+    write_table = Warehouse.write_table
+
+    def failing_write(self, df, name, *args, **kwargs):
+        if name == "triples":
+            raise RuntimeError("triples write failed")
+        if name == "entity_links":
+            time.sleep(2)   # still running when the error surfaces
+        return write_table(self, df, name, *args, **kwargs)
+
+    sc = spark.sparkContext
+    job = KgBuildJob(spark, str(tmp_path / "wh_b"), CFG, n_buckets=N_BUCKETS)
+    n_persisted = sc._jsc.getPersistentRDDs().size()
+    threads = set(threading.enumerate())
+    monkeypatch.setattr(Warehouse, "write_table", failing_write)
+    with pytest.raises(RuntimeError, match="triples write failed"):
+        job.run(pages, run_id="first")
+    monkeypatch.undo()
+
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert sc._jsc.getPersistentRDDs().size() == n_persisted
+    assert [t for t in threading.enumerate() if t not in threads] == []
+    stages = {r.stage for r in job.wh.read_table("lineage").collect()}
+    assert stages == {"extract"}
+
+    got = snapshot(job.run(pages, run_id="resume", resume=True))
+    assert got == want
