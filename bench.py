@@ -12,7 +12,10 @@ pipeline reads parquet like production reads Iceberg).  Query timings
 force full computation through the noop sink so Catalyst cannot prune
 the work away.
 
-Two-parallelism scaling evidence lives in tools/scaling_bench.py ->
+The KG timing here (run_kg_pipeline) is this suite's in-memory
+KgBuild pass.  Two-parallelism scaling evidence is a different
+workload: tools/scaling_bench.py times the batch job (KgBuildJob.run)
+at local[N] and local[4N] and prints rows to append to
 BENCH/BASELINE.md.
 """
 

@@ -189,14 +189,7 @@ def main(argv=None) -> None:
     run_id = args.run_id or datetime.datetime.now().strftime("run-%Y%m%d%H%M%S")
     job = KgBuildJob(spark, args.warehouse, config, n_buckets=args.n_buckets)
     if args.extract_only:
-        from mdscraper_spark.operators.extract_udfs import (extract_markdown,
-                                                            with_doc_path)
-        from mdscraper_spark.sources.pages import with_part_id
-
-        docs = with_part_id(with_doc_path(extract_markdown(pages, config),
-                                          config), args.n_buckets)
-        job.wh.write_table(docs.repartition(args.n_buckets, "part_id"),
-                           "markdown_docs", partition_by=("part_id",))
+        job.extract(pages, run_id, args.resume)
     else:
         job.run(pages, run_id=run_id, resume=args.resume)
 
@@ -279,7 +272,7 @@ def _dump_debug_html(wh, pages) -> None:
               .select("url", "status"))
     dump = pages.join(failed, "url", "left_semi").select("url", "html")
     wh.write_table(dump, "debug_html")
-    n = wh.read_table("debug_html").count()
+    n = sum(wh.manifest("debug_html")["record_counts"].values())
     print(f"Saved HTML of {n} failed-detection pages to debug_html")
 
 

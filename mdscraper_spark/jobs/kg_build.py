@@ -10,7 +10,11 @@ Stage pipeline (SURVEY.md §3.2), driven as one batch job:
         -> [graph]   kg_nodes, kg_edges     driver counts; edges one
                                             shuffle agg
 
-Mine through graph is kg_ops.KgBuild, the composition every KG caller
+This class is the only place the stages are put together.  Extract is
+its own public method (``extract``), which ``run`` calls first and the
+CLI's ``--extract-only`` runs alone, so an extract-only run writes the
+same table and lineage rows and honours resume the same way.  Mine
+through graph is kg_ops.KgBuild, the composition every KG caller
 shares; the job adds the writes, stage timings and lineage around it.
 Canonicalization runs no Spark job: every mention surface is an alias
 of the job's dictionary, so one groupBy of the mined mentions per
@@ -179,6 +183,44 @@ class KgBuildJob:
                             partition_by=("part_id",))
         return int((time.monotonic() - t0) * 1000)
 
+    def extract(self, pages: DataFrame, run_id: str = "run-1",
+                resume: bool = False) -> None:
+        """[extract] stage alone: pages -> markdown_docs, partitioned by
+        url-host bucket, plus its lineage rows.  With ``resume``,
+        buckets already ok in lineage are skipped.  With nothing to
+        extract, no snapshot is committed, except the first (empty) one,
+        so later stages always find the table.  ``run`` starts with it,
+        and the CLI's ``--extract-only`` runs only it."""
+        pages = with_part_id(pages, self.n_buckets)
+
+        todo = pages
+        if resume:
+            lineage = self._lineage()
+            if lineage is not None:
+                done = (lineage
+                        .filter((F.col("stage") == "extract")
+                                & (F.col("status") == "ok"))
+                        .select("part_id").distinct())
+                todo = pages.join(done, "part_id", "left_anti")
+
+        t0 = time.monotonic()
+        if (todo.limit(1).count() == 0
+                and self.wh.exists("markdown_docs")):
+            return
+        docs = with_doc_path(extract_markdown(todo, self.config),
+                             self.config)
+        docs = with_part_id(docs, self.n_buckets)
+        # co-locate each bucket into one task before the partitioned
+        # write: one output file per (bucket, write) instead of
+        # n_tasks x n_buckets small files
+        docs = docs.repartition(self.n_buckets, "part_id")
+        self.wh.write_table(docs, "markdown_docs", partition_by=("part_id",))
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        # resume reads these rows: append them before any later stage
+        # can fail
+        self._append_lineage(self._stage_rows(
+            run_id, "extract", "markdown_docs", wall_ms))
+
     def run(self, pages: DataFrame, run_id: str = "run-1",
             resume: bool = False) -> dict:
         with ThreadPoolExecutor(max_workers=2,
@@ -193,37 +235,10 @@ class KgBuildJob:
         # The mining gazetteer comes from the SAME dictionary the links
         # are scored against — a caller-injected dictionary must drive
         # mention detection too, or custom aliases silently produce an
-        # empty KG.  Its collect overlaps extraction.
+        # empty KG.  Its collect is submitted first, so it overlaps
+        # extraction.
         dictionary = self._submit(pool, self._dictionary)
-        pages = with_part_id(pages, self.n_buckets)
-
-        todo = pages
-        if resume:
-            lineage = self._lineage()
-            if lineage is not None:
-                done = (lineage
-                        .filter((F.col("stage") == "extract")
-                                & (F.col("status") == "ok"))
-                        .select("part_id").distinct())
-                todo = pages.join(done, "part_id", "left_anti")
-
-        t0 = time.monotonic()
-        n_todo = todo.limit(1).count()
-        if n_todo > 0:
-            docs = with_doc_path(extract_markdown(todo, self.config),
-                                 self.config)
-            docs = with_part_id(docs, self.n_buckets)
-            # co-locate each bucket into one task before the partitioned
-            # write: one output file per (bucket, write) instead of
-            # n_tasks x n_buckets small files
-            docs = docs.repartition(self.n_buckets, "part_id")
-            self.wh.write_table(docs, "markdown_docs",
-                                partition_by=("part_id",))
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            # resume reads these rows: append them before any later
-            # stage can fail
-            self._append_lineage(self._stage_rows(
-                run_id, "extract", "markdown_docs", wall_ms))
+        self.extract(pages, run_id, resume)
 
         docs = self.wh.read_table("markdown_docs")
         with kg_ops.KgBuild(docs, dictionary.result()) as kg:

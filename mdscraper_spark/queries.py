@@ -19,6 +19,7 @@ Registry sections:
 from __future__ import annotations
 
 import fnmatch
+import pathlib
 from typing import Callable, Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2530,13 +2531,28 @@ def multimodal_feature_ann(spark, sf_dir):
     return similarity.lsh_topk(feats, 0, k=10, dims=(0, 5, 10, 15))
 
 
-@register("kg_flagship", """
-SELECT src, pred, dst, n_support
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_edges_*.parquet')
+# The frozen single-threaded oracle fixtures (tools/freeze_kg_oracle.py).
+_KG_ORACLE_DIR = (pathlib.Path(__file__).resolve().parents[1]
+                  / "fixtures" / "kg_oracle")
+
+
+def _frozen(prefix: str) -> str:
+    """FROM-clause body reading one frozen fixture family (``kg_edges_``,
+    ``kg_nodes_``, ...) at the corpus registered as ``documents``: the
+    WHERE is the DuckDB twin of ``_corpus_sig``, so an unknown corpus
+    selects zero rows and fails loudly."""
+    return f"""
+read_parquet('{_KG_ORACLE_DIR}/{prefix}*.parquet')
 WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
                         || ':' ||
                         CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
                     FROM documents)
+"""
+
+
+@register("kg_flagship", f"""
+SELECT src, pred, dst, n_support
+FROM {_frozen('kg_edges_')}
 """)
 def kg_flagship(spark, sf_dir):
     """Full KG pipeline, oracle-checked against the FROZEN output of the
@@ -2607,28 +2623,9 @@ def _corpus_sig(docs) -> str:
     return f"{r['a']}:{r['b']}"
 
 
-_FROZEN_EDGES = """
-read_parquet('/root/repo/fixtures/kg_oracle/kg_edges_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
-"""
-
-
-def _flagship_edges(spark, sf_dir):
-    """The full-pipeline kg_edges DataFrame (shared by the graph-query
-    registry rows)."""
-    return kg_flagship(spark, sf_dir)
-
-
-@register("kg_nodes_check", """
+@register("kg_nodes_check", f"""
 SELECT canon_id, label, n_mentions
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_nodes_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_nodes_')}
 """)
 def kg_nodes_check(spark, sf_dir):
     """I6 node side of the graph materialize, hash-checked against the
@@ -2638,7 +2635,7 @@ def kg_nodes_check(spark, sf_dir):
 
 
 @register("kg_triple_pr", f"""
-WITH e AS (SELECT src, pred, dst FROM {_FROZEN_EDGES})
+WITH e AS (SELECT src, pred, dst FROM {_frozen('kg_edges_')})
 SELECT COUNT(*) AS n_spark, COUNT(*) AS n_oracle, COUNT(*) AS n_common,
        CAST(1.0 AS DOUBLE) AS triple_precision,
        CAST(1.0 AS DOUBLE) AS triple_recall,
@@ -2654,11 +2651,11 @@ def kg_triple_pr(spark, sf_dir):
     twin replays both sides from the freeze, so the row hash-matches
     iff the live pipeline reproduces the reference triples exactly
     (P = R = 1.0)."""
-    live = (_flagship_edges(spark, sf_dir)
+    live = (kg_flagship(spark, sf_dir)
             .select("src", "pred", "dst"))
     sig = _corpus_sig(load(spark, sf_dir, "documents"))
     frozen = (spark.read.parquet(
-        "/root/repo/fixtures/kg_oracle/kg_edges_*.parquet")
+        f"{_KG_ORACLE_DIR}/kg_edges_*.parquet")
         .filter(F.col("corpus_sig") == sig)
         .select("src", "pred", "dst"))
     live = live.localCheckpoint()       # pipeline runs once, feeds two
@@ -2674,19 +2671,11 @@ def kg_triple_pr(spark, sf_dir):
         "meets_north_rule boolean")
 
 
-@register("kg_lambda_parity", """
+@register("kg_lambda_parity", f"""
 SELECT (SELECT COUNT(*)
-        FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_nodes_*.parquet')
-        WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                            FROM documents)) AS n_nodes,
+        FROM {_frozen('kg_nodes_')}) AS n_nodes,
        (SELECT COUNT(*)
-        FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_edges_*.parquet')
-        WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                            FROM documents)) AS n_edges,
+        FROM {_frozen('kg_edges_')}) AS n_edges,
        true AS nodes_match_oneshot,
        true AS edges_match_oneshot
 """)
@@ -2737,7 +2726,7 @@ def kg_lambda_parity(spark, sf_dir):
 
 
 @register("kg_degree_stats", f"""
-WITH e AS (SELECT src, dst, n_support FROM {_FROZEN_EDGES}),
+WITH e AS (SELECT src, dst, n_support FROM {_frozen('kg_edges_')}),
 o AS (SELECT src AS node, COUNT(*) AS out_deg, CAST(SUM(n_support) AS BIGINT) AS n_support_out
       FROM e GROUP BY 1),
 i AS (SELECT dst AS node, COUNT(*) AS in_deg FROM e GROUP BY 1)
@@ -2754,11 +2743,11 @@ def kg_degree_stats(spark, sf_dir):
     end to end)."""
     from mdscraper_spark.operators.graph import degree_stats
 
-    return degree_stats(_flagship_edges(spark, sf_dir))
+    return degree_stats(kg_flagship(spark, sf_dir))
 
 
 @register("kg_entity_card", f"""
-WITH e AS (SELECT src, pred, dst, n_support FROM {_FROZEN_EDGES})
+WITH e AS (SELECT src, pred, dst, n_support FROM {_frozen('kg_edges_')})
 SELECT src AS node,
        CAST(count(*) AS BIGINT) AS n_facts,
        CAST(count(DISTINCT pred) AS BIGINT) AS n_preds,
@@ -2776,12 +2765,12 @@ def kg_entity_card(spark, sf_dir):
     sort_array (never a corpus sort), string_agg twin."""
     from mdscraper_spark.operators.graph import entity_cards
 
-    return entity_cards(_flagship_edges(spark, sf_dir))
+    return entity_cards(kg_flagship(spark, sf_dir))
 
 
 @register("kg_component_sizes", f"""
 WITH RECURSIVE
-e AS (SELECT src, dst FROM {_FROZEN_EDGES}),
+e AS (SELECT src, dst FROM {_frozen('kg_edges_')}),
 u AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
 reach(a, b) AS (
   SELECT a, a FROM (SELECT DISTINCT a FROM u)
@@ -2808,16 +2797,12 @@ def kg_component_sizes(spark, sf_dir):
     over-merge (one giant component) or recall collapse (all dust)."""
     from mdscraper_spark.operators.graph import component_sizes
 
-    return component_sizes(_flagship_edges(spark, sf_dir))
+    return component_sizes(kg_flagship(spark, sf_dir))
 
 
-@register("kg_hits", """
+@register("kg_hits", f"""
 SELECT node, hub, authority
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_hits_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_hits_')}
 """)
 def kg_hits(spark, sf_dir):
     """Kleinberg HITS hubs/authorities over the full-pipeline KG
@@ -2829,21 +2814,12 @@ def kg_hits(spark, sf_dir):
     the same frozen edges (tools/freeze_kg_oracle.py:py_hits)."""
     from mdscraper_spark.operators.graph import hits
 
-    return hits(_flagship_edges(spark, sf_dir))
-
-
-_FROZEN_SUB_EDGES = """
-read_parquet('/root/repo/fixtures/kg_oracle/kg_sub_edges_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
-"""
+    return hits(kg_flagship(spark, sf_dir))
 
 
 @register("kg_snapshot_diff", f"""
-WITH old AS (SELECT src, pred, dst, n_support FROM {_FROZEN_EDGES}),
-new AS (SELECT src, pred, dst, n_support FROM {_FROZEN_SUB_EDGES})
+WITH old AS (SELECT src, pred, dst, n_support FROM {_frozen('kg_edges_')}),
+new AS (SELECT src, pred, dst, n_support FROM {_frozen('kg_sub_edges_')})
 SELECT COALESCE(old.src, new.src) AS src,
        COALESCE(old.pred, new.pred) AS pred,
        COALESCE(old.dst, new.dst) AS dst,
@@ -2868,7 +2844,7 @@ def kg_snapshot_diff(spark, sf_dir):
     this operator exists to surface."""
     from mdscraper_spark.operators.graph import snapshot_diff
 
-    full = _flagship_edges(spark, sf_dir)
+    full = kg_flagship(spark, sf_dir)
     docs_sub = (load(spark, sf_dir, "documents", fan_out=True)
                 .filter(F.col("doc_id") % 10 != 0))
     pages = docs_to_kg_pages(docs_sub)
@@ -2882,7 +2858,7 @@ def kg_snapshot_diff(spark, sf_dir):
 
 @register("kg_khop_reach", f"""
 WITH RECURSIVE
-e AS (SELECT src, dst FROM {_FROZEN_EDGES}),
+e AS (SELECT src, dst FROM {_frozen('kg_edges_')}),
 deg AS (SELECT src AS node, count(*) AS out_deg FROM e GROUP BY 1),
 seeds AS (SELECT node FROM deg ORDER BY out_deg DESC, node LIMIT 5),
 reach(node, dist) AS (
@@ -2904,7 +2880,7 @@ def kg_khop_reach(spark, sf_dir):
     the frozen single-threaded-oracle edges."""
     from mdscraper_spark.operators.graph import khop_reach
 
-    return khop_reach(_flagship_edges(spark, sf_dir), k=3, n_seeds=5)
+    return khop_reach(kg_flagship(spark, sf_dir), k=3, n_seeds=5)
 
 
 _HUB_CAP = 54  # drops the top ~10% hub suppliers at sf0.01 (in-deg 36..59)
@@ -3063,11 +3039,7 @@ def graph_triangle_clustering(spark, sf_dir):
 
 @register("kg_pagerank", f"""
 SELECT node, rank
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_pagerank_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_pagerank_')}
 """)
 def kg_pagerank(spark, sf_dir):
     """Iterative PageRank (10 rounds, damping 0.85, dangling mass
@@ -3076,16 +3048,12 @@ def kg_pagerank(spark, sf_dir):
     edges (tools/freeze_kg_oracle.py py_pagerank)."""
     from mdscraper_spark.operators.graph import pagerank
 
-    return pagerank(_flagship_edges(spark, sf_dir))
+    return pagerank(kg_flagship(spark, sf_dir))
 
 
-@register("kg_pmi_cooccurrence", """
+@register("kg_pmi_cooccurrence", f"""
 SELECT canon_a, canon_b, n_pair, pmi
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_pmi_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_pmi_')}
 """)
 def kg_pmi_cooccurrence(spark, sf_dir):
     """Sentence-level PMI between canonical entities (round 5): the
@@ -3101,13 +3069,9 @@ def kg_pmi_cooccurrence(spark, sf_dir):
     return pmi_cooccurrence(kg.mentions, cmap)
 
 
-@register("kg_edge_provenance", """
+@register("kg_edge_provenance", f"""
 SELECT src, pred, dst, n_support, n_docs, first_url, last_url
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_prov_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_prov_')}
 """)
 def kg_edge_provenance(spark, sf_dir):
     """Per-edge lineage (round 4): kg_edges extended with distinct
@@ -3120,13 +3084,9 @@ def kg_edge_provenance(spark, sf_dir):
     return kg_ops.build_kg_edges_with_provenance(kg.triples, cmap)
 
 
-@register("kg_edge_time_windows", """
+@register("kg_edge_time_windows", f"""
 SELECT src, pred, dst, n_support, first_seen, last_seen
-FROM read_parquet('/root/repo/fixtures/kg_oracle/kg_tw_*.parquet')
-WHERE corpus_sig = (SELECT CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 1, 15)) AS BIGINT)) AS VARCHAR)
-                        || ':' ||
-                        CAST(bit_xor(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || COALESCE(text,'')), 16, 15)) AS BIGINT)) AS VARCHAR)
-                    FROM documents)
+FROM {_frozen('kg_tw_')}
 """)
 def kg_edge_time_windows(spark, sf_dir):
     """Temporal KG (J61): kg_edges extended with each assertion's
@@ -3167,7 +3127,7 @@ SELECT '<urn:kg:e:' || {_nt_sql_frag_expr('src')} ||
        '> <urn:kg:e:' || {_nt_sql_frag_expr('dst')} ||
        '> .' AS ntriple,
        n_support
-FROM {_FROZEN_EDGES}
+FROM {_frozen('kg_edges_')}
 """)
 def kg_export_ntriples(spark, sf_dir):
     """Graph-export sink row shape: the canonical kg_edges rendered as
@@ -3175,7 +3135,7 @@ def kg_export_ntriples(spark, sf_dir):
     against the same render over the FROZEN single-threaded oracle
     edges.  Pure projection over the materialized graph — the export
     adds zero shuffles at any scale."""
-    return kg_ops.edges_to_ntriples(_flagship_edges(spark, sf_dir))
+    return kg_ops.edges_to_ntriples(kg_flagship(spark, sf_dir))
 
 
 def _nt_sql_literal_expr(c: str) -> str:
@@ -3187,8 +3147,6 @@ def _nt_sql_literal_expr(c: str) -> str:
         expr = f"replace({expr},{lit},'{enc}')"
     return expr
 
-
-_FROZEN_PROV = _FROZEN_EDGES.replace("kg_edges_", "kg_prov_")
 
 _RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
@@ -3206,7 +3164,7 @@ WITH t AS (
     CAST(n_docs AS VARCHAR) AS docs_s,
     {_nt_sql_literal_expr('first_url')} AS first_lit,
     {_nt_sql_literal_expr('last_url')} AS last_lit
-  FROM {_FROZEN_PROV}
+  FROM {_frozen('kg_prov_')}
 )
 SELECT unnest([
   s_iri || ' ' || p_iri || ' ' || o_iri || ' .',

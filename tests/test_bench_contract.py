@@ -102,3 +102,27 @@ def test_scaling_levels_follow_cpu_count():
     for small in (1, 3):
         with pytest.raises(SystemExit, match="at least 4 CPUs"):
             levels(small)
+
+
+def test_scaling_stage_walls_reduce_one_runs_lineage():
+    """tools/scaling_bench.py reports each stage's wall as the max
+    ``wall_ms`` of that stage's lineage rows for the timed pass's
+    run_id, ``graph`` as ``canon+graph``; other runs' rows are
+    ignored."""
+    from tools.scaling_bench import stage_walls
+
+    def row(run_id, stage, part_id, wall_ms):
+        return {"run_id": run_id, "stage": stage, "part_id": part_id,
+                "status": "ok", "n_rows": 10, "wall_ms": wall_ms}
+
+    rows = [row("scale", "extract", 0, 4200),
+            row("scale", "extract", 3, 4200),
+            row("scale", "mine", 0, 1500),
+            row("scale", "mine", 1, 1730),
+            row("scale", "link", 2, 900),
+            row("scale", "graph", -1, 2340),
+            row("other", "extract", 0, 99000),
+            row("other", "graph", -1, 99000)]
+    assert stage_walls(rows, "scale") == {
+        "extract": 4.2, "mine": 1.73, "link": 0.9, "canon+graph": 2.34}
+    assert stage_walls(rows, "missing") == {}

@@ -170,6 +170,13 @@ def test_url_and_url_file_modes(spark, tmp_path):
     assert _docs_urls(spark, wh2) == {"https://site.test/p2.html",
                                       "https://elsewhere.test/x.html"}
 
+    # a url matching no page still leaves a readable, empty markdown_docs
+    wh3 = str(tmp_path / "wh_none")
+    main(["--input", pq, "--warehouse", wh3,
+          "--url", "https://site.test/no-such-page.html",
+          "--extract-only", "--n-buckets", "4"])
+    assert _docs_urls(spark, wh3) == set()
+
 
 def test_debug_dumps_failed_detection_html(spark, tmp_path, capsys):
     """scraper.py:406-411 analog: --debug lands no_content pages' HTML
@@ -300,4 +307,39 @@ def test_warc_input_format_matches_parquet_run(spark, tmp_path):
                       .read_table("markdown_docs").collect())
 
     got, want = docs(wh_w), docs(wh_p)
+    assert got == want and len(got) == 6
+
+
+def test_extract_only_resume_then_full_resume_extracts_once(spark, tmp_path):
+    """--extract-only runs the job's own extract stage: it records
+    extract lineage and honours --resume, so a later full --resume run
+    on the same warehouse extracts nothing again, and markdown_docs
+    equals one straight run's."""
+    from pyspark.sql import functions as F
+
+    from mdscraper_spark.jobs.extract import main
+    from mdscraper_spark.sources.tables import Warehouse
+
+    pq = _pages_parquet(spark, tmp_path)
+    wh_two = str(tmp_path / "wh_two_step")
+    main(["--input", pq, "--warehouse", wh_two, "--extract-only",
+          "--resume", "--run-id", "r1", "--n-buckets", "4"])
+    main(["--input", pq, "--warehouse", wh_two, "--resume",
+          "--run-id", "r2", "--n-buckets", "4"])
+    wh_one = str(tmp_path / "wh_straight")
+    main(["--input", pq, "--warehouse", wh_one, "--run-id", "s",
+          "--n-buckets", "4"])
+
+    lineage = Warehouse(spark, wh_two).read_table("lineage")
+    extract_runs = {r.run_id for r in lineage
+                    .filter(F.col("stage") == "extract").collect()}
+    assert extract_runs == {"r1"}
+    assert lineage.filter(F.col("run_id") == "r2").count() > 0
+
+    def docs(wh):
+        table = Warehouse(spark, wh).read_table("markdown_docs")
+        return sorted(map(tuple, table.select(*sorted(table.columns))
+                          .collect()))
+
+    got, want = docs(wh_two), docs(wh_one)
     assert got == want and len(got) == 6

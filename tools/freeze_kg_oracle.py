@@ -198,8 +198,8 @@ def freeze(sf_dir: str) -> None:
                  for doc_id, text in docs if int(doc_id) % 10 != 0)
     sub_edges = run_oracle(sub_pages, alias_rows())["kg_edges"]
     # NOTE: must NOT match the kg_edges_* glob the frozen-edge
-    # oracles read, or every _FROZEN_EDGES row would silently
-    # union full+subset
+    # oracles read, or every queries._frozen("kg_edges_") row would
+    # silently union full+subset
     out_sub = OUT_DIR / f"kg_sub_edges_{fsig}.parquet"
     con.execute("CREATE TABLE es (src VARCHAR, pred VARCHAR, "
                 "dst VARCHAR, n_support BIGINT, corpus_sig VARCHAR)")
