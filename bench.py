@@ -12,15 +12,17 @@ pipeline reads parquet like production reads Iceberg).  Query timings
 force full computation through the noop sink so Catalyst cannot prune
 the work away.
 
-The KG timing here (run_kg_pipeline) is this suite's in-memory
-KgBuild pass.  Two-parallelism scaling evidence is a different
-workload: tools/scaling_bench.py times the batch job (KgBuildJob.run)
-at local[N] and local[4N] and prints rows to append to
-BENCH/BASELINE.md.
+The KG timing is the batch job itself: ``KgBuildJob.run`` into a
+fresh warehouse (extraction, mining, canonicalization and every table
+write), timed by ``timed_run``, the pass timer tools/scaling_bench.py
+uses too; perfbench times the same job.  Two-parallelism scaling
+evidence is tools/scaling_bench.py: the job at local[N] and local[4N],
+printed as rows to append to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import pathlib
@@ -111,21 +113,63 @@ def materialize_pages(spark, n_pages: int, path: str,
     df.write.mode("overwrite").parquet(path)
 
 
-def run_kg_pipeline(spark, pages_path: str) -> dict:
-    from mdscraper_spark.config import ExtractConfig
-    from mdscraper_spark.operators import kg as kg_ops
-    from mdscraper_spark.operators.extract_udfs import extract_markdown
-    from mdscraper_spark.sources.fixtures import alias_rows
+# bench-scale split sizing: at 100 TB the default 128 MB splits give
+# ample scan tasks; at bench scale they would collapse the scan to a
+# handful of tasks
+SPLIT_CONF = {"spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+              "spark.sql.files.openCostInBytes": str(512 * 1024)}
 
+
+def _cpu_line() -> str:
+    with open("/proc/stat") as f:
+        return f.readline()
+
+
+def busy_fraction(before: str, after: str) -> float:
+    """Share of the host's CPU time spent busy between two /proc/stat
+    ``cpu`` lines.  idle and iowait both count as idle: a CPU waiting
+    on I/O runs nothing."""
+    d = [int(b) - int(a) for a, b in zip(before.split()[1:],
+                                         after.split()[1:])]
+    return 1.0 - (d[3] + d[4]) / max(1, sum(d))
+
+
+def timed(fn) -> tuple:
+    """(wall_sec, host_busy_fraction, fn()) of one call of ``fn``."""
+    cpu0 = _cpu_line()
+    t0 = time.monotonic()
+    out = fn()
+    wall = time.monotonic() - t0
+    return wall, busy_fraction(cpu0, _cpu_line()), out
+
+
+def stage_walls(lineage_rows, run_id: str) -> dict:
+    """Per-stage wall seconds of one run from its lineage rows: the max
+    ``wall_ms`` over the run's rows of each stage (every bucket row of
+    a stage carries the stage's wall), ``graph`` reported as
+    ``canon+graph``; rows of other runs are ignored."""
+    out: dict = {}
+    for r in lineage_rows:
+        if r["run_id"] == run_id:
+            stage = "canon+graph" if r["stage"] == "graph" else r["stage"]
+            out[stage] = max(out.get(stage, 0), r["wall_ms"])
+    return {k: round(v / 1000, 2) for k, v in out.items()}
+
+
+def timed_run(spark, pages_path: str, workdir: str) -> tuple:
+    """(wall_sec, host_busy_fraction, stage_walls) for one
+    ``KgBuildJob.run`` into a fresh warehouse under ``workdir``."""
+    from mdscraper_spark.config import ExtractConfig
+    from mdscraper_spark.jobs.kg_build import KgBuildJob
+
+    warehouse = tempfile.mkdtemp(prefix="wh_", dir=workdir)
+    job = KgBuildJob(spark, warehouse,
+                     ExtractConfig(exclude_selectors=(".ads", "#nav")))
     pages = spark.read.parquet(pages_path)
-    cfg = ExtractConfig(exclude_selectors=(".ads", "#nav"))
-    # the batch job's composition; its persisted mined rows feed both
-    # canonicalization and the edges, so extraction runs once
-    with kg_ops.KgBuild(extract_markdown(pages, cfg), alias_rows()) as kg:
-        cmap_rows, _node_rows = kg.canonicalize()
-        edges = kg.edges(spark.createDataFrame(
-            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
-        return {"n_edges": edges.count()}
+    wall, busy, tables = timed(lambda: job.run(pages, run_id="bench"))
+    stages = stage_walls(tables["lineage"].collect(), "bench")
+    shutil.rmtree(warehouse, ignore_errors=True)
+    return wall, busy, stages
 
 
 def driver_mem(cpus: int) -> str:
@@ -146,58 +190,40 @@ def main() -> None:
     from mdscraper_spark.queries import REGISTRY
 
     spark = get_spark("bench", master=f"local[{cpus}]",
-                      shuffle_partitions=2 * cpus,
-                      extra_conf={
-                          # bench-scale split sizing (see tools/scaling_bench)
-                          "spark.sql.files.maxPartitionBytes":
-                              str(2 * 1024 * 1024),
-                          "spark.sql.files.openCostInBytes":
-                              str(512 * 1024),
-                      })
+                      shuffle_partitions=2 * cpus, extra_conf=SPLIT_CONF)
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict = {}
     rep_times: dict = {}     # name -> every rep's wall sec (not just min)
     rep_busy: dict = {}      # name -> host-busy fraction around each rep
 
-    def _proc_stat():
-        f = pathlib.Path("/proc/stat").read_text().splitlines()[0].split()
-        vals = [int(x) for x in f[1:]]
-        return vals[3], sum(vals)          # (idle, total) jiffies
-
-    # -- KG end-to-end (north-star): pages/sec -------------------------
-    n_pages = max(2000, int(100_000 * sf))
-    workdir = tempfile.mkdtemp(prefix="bench_pages_")
-
-    def timed_min(name, fn, reps: int = 2) -> float:
-        """Min of `reps` timed passes: this sandbox VM's throughput
+    def timed_min(name, timed_pass, reps: int = 2) -> float:
+        """Min wall of `reps` calls of ``timed_pass``, each returning
+        (wall_sec, host_busy_fraction, ...): a shared host's throughput
         swings several-x between identical runs (host contention), and
         min is the estimator of true capacity under additive noise.
         Every rep's wall time AND the whole-host busy fraction around
         it are recorded in the JSON (round-3 verdict item 4: three
-        rounds of driver bench files were dominated by unrecorded host
+        rounds of bench results were dominated by unrecorded host
         noise — the numbers must carry their own weather report)."""
-        best = float("inf")
-        rep_times[name], rep_busy[name] = [], []
-        for _ in range(reps):
-            idle0, tot0 = _proc_stat()
-            t0 = time.monotonic()
-            fn()
-            wall = time.monotonic() - t0
-            idle1, tot1 = _proc_stat()
-            busy = 1.0 - (idle1 - idle0) / max(1, tot1 - tot0)
-            rep_times[name].append(round(wall, 3))
-            rep_busy[name].append(round(busy, 2))
-            best = min(best, wall)
-        return best
+        passes = [timed_pass() for _ in range(reps)]
+        rep_times[name] = [round(p[0], 3) for p in passes]
+        rep_busy[name] = [round(p[1], 2) for p in passes]
+        return min(p[0] for p in passes)
 
+    def query_pass(fn):
+        return lambda: timed(lambda: force(fn(spark, sf_dir)))
+
+    # -- KG end-to-end (north-star): pages/sec -------------------------
+    n_pages = max(2000, int(100_000 * sf))
+    workdir = tempfile.mkdtemp(prefix="bench_pages_")
     try:
         pages_path = str(pathlib.Path(workdir) / "pages")
         materialize_pages(spark, n_pages, pages_path,
                           num_partitions=4 * cpus)
-        run_kg_pipeline(spark, pages_path)  # warm-up (JVM + Python workers)
-        kg_sec = timed_min("kg_pipeline",
-                           lambda: run_kg_pipeline(spark, pages_path))
+        kg_pass = functools.partial(timed_run, spark, pages_path, workdir)
+        kg_pass()  # warm-up (JVM + Python workers)
+        kg_sec = timed_min("kg_pipeline", kg_pass)
         timings["kg_pipeline"] = round(kg_sec, 3)
         pages_per_sec = round(n_pages / kg_sec, 1)
     finally:
@@ -209,15 +235,13 @@ def main() -> None:
         force(fn(spark, sf_dir))  # warm-up
         # cheap queries get a third rep: on this several-x-noisy host
         # the min estimator tightens a lot for sub-second timings
-        timings[name] = round(
-            timed_min(name, lambda: force(fn(spark, sf_dir)), reps=3), 3)
+        timings[name] = round(timed_min(name, query_pass(fn), reps=3), 3)
 
     # -- round-5 extras: timed, excluded from the comparable total -----
     for name in EXTRAS:
         fn, _sql = REGISTRY[name]
         force(fn(spark, sf_dir))  # warm-up
-        timings[name] = round(
-            timed_min(name, lambda: force(fn(spark, sf_dir))), 3)
+        timings[name] = round(timed_min(name, query_pass(fn)), 3)
 
     # the round-5 extras stay out of the suite total so
     # headline_suite_total stays comparable round-over-round

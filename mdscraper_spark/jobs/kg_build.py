@@ -20,7 +20,9 @@ Canonicalization runs no Spark job: every mention surface is an alias
 of the job's dictionary, so one groupBy of the mined mentions per
 surface (at most |dictionary| rows) reaches the driver, which builds
 canonical_map and kg_nodes (KgBuild.canonicalize); the job writes
-them, and the lineage, with pyarrow (Warehouse.write_rows).
+them, and the lineage, with pyarrow (Warehouse.write_rows), and
+kg_edges from KgBuild.edges(), which maps the triples onto the
+build's own map: no table the job wrote is read back.
 
 Independent Spark jobs run at the same time, from a two-thread pool
 scoped to one ``run()`` (Spark schedules jobs submitted from separate
@@ -204,8 +206,10 @@ class KgBuildJob:
                 todo = pages.join(done, "part_id", "left_anti")
 
         t0 = time.monotonic()
-        if (todo.limit(1).count() == 0
-                and self.wh.exists("markdown_docs")):
+        # manifest first: a fresh warehouse gets its first snapshot
+        # whatever the count, so the count's Spark job is skipped
+        if (self.wh.exists("markdown_docs")
+                and todo.limit(1).count() == 0):
             return
         docs = with_doc_path(extract_markdown(todo, self.config),
                              self.config)
@@ -255,9 +259,7 @@ class KgBuildJob:
                                    "canonical_map")
                 self.wh.write_rows(node_rows, kg_ops.KG_NODES_SCHEMA,
                                    "kg_nodes")
-                self.wh.write_table(
-                    kg.edges(self.wh.read_table("canonical_map")),
-                    "kg_edges")
+                self.wh.write_table(kg.edges(), "kg_edges")
                 graph_ms = int((time.monotonic() - t0) * 1000)
             finally:
                 # close() unpersists the pass the side writes read

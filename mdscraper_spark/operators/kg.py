@@ -19,11 +19,16 @@ Scale notes:
   gazetteer is broadcast per executor and the mining pass emits each
   mention's entity_id/score — no join on the alias key, so no skew on
   it and no salting;
-* :class:`KgBuild` is that composition, shared by the batch job, the
-  registry, the stream and the bench tools: one persisted mining pass,
-  driver canonicalization and the edge aggregation.  Every mention
-  surface is an alias of the dictionary it already holds, so the
-  co-reference graph has at most |dictionary| surface nodes.  One
+* :class:`KgBuild` is that composition: one persisted mining pass,
+  driver canonicalization and the edge aggregation.  Its callers are
+  ``KgBuildJob._run`` (which bench.py, tools/scaling_bench.py and
+  perfbench time), the registry's KG rows (``queries._kg_build`` and
+  ``kg_snapshot_diff``) and the stream's ``apply_kg_batch``.  It
+  hands out the graph: the canonical_map and kg_nodes rows and the
+  frames built from them, and ``edges()`` over its own map, so no
+  caller rebuilds the frames or reads a written map back.  Every
+  mention surface is an alias of the dictionary it already holds, so
+  the co-reference graph has at most |dictionary| surface nodes.  One
   groupBy of the mined mentions per surface reaches the driver, and
   :func:`canonicalize_surfaces` builds canonical_map and kg_nodes from
   it (union-find, no Spark job); every edge builder joins the triples'
@@ -42,6 +47,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, Union
 
 import pandas as pd
@@ -319,12 +325,12 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
       fits the driver (``local_solve_threshold`` rows), a local
       union-find replaces O(diameter) shuffle rounds: one count + one
       collect instead of ~k driver-coordinated jobs.
-    * Past the threshold (web-scale alias vocabularies): hash-
-      partitioned min-label propagation.  Labels are monotone
-      non-increasing, so the per-round probe counts labels that
-      strictly DECREASED this round via ``Observation`` metrics riding
-      the round's one action — an exact changed-label count at zero
-      extra passes (n_changed == 0 is the fixpoint).  localCheckpoint
+    * Past the threshold (web-scale alias vocabularies), or with a
+      falsy one: hash-partitioned min-label propagation.  Labels are
+      monotone non-increasing, so the per-round probe counts labels
+      that strictly DECREASED this round via ``Observation`` metrics
+      riding the round's one action — an exact changed-label count at
+      zero extra passes (n_changed == 0 is the fixpoint).  localCheckpoint
       every few rounds cuts the lineage chain that otherwise grows
       linearly with iterations.
 
@@ -338,34 +344,26 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     Both paths produce byte-identical labels (component min under
     UTF8 binary order); tests assert the equality.
     """
-    dedup = edges.distinct()
-    if local_solve_threshold:
-        from pyspark import StorageLevel
-        dedup = dedup.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_edges = dedup.count()
-            if n_edges <= local_solve_threshold:
-                # one collect job (toLocalIterator would run a job per
-                # partition — pathological for a small wide df)
-                rows = _local_union_find(
-                    (r[0], r[1]) for r in dedup.collect())
-                out = edges.sparkSession.createDataFrame(
-                    rows, CANONICAL_MAP_SCHEMA)
-                out._mdscraper_local = True   # driver-sized by the gate
-                return out
-            # distributed path: build the undirected set FROM the
-            # still-persisted distinct edges (recomputing distinct from
-            # the raw stream would repeat the most expensive shuffle at
-            # exactly the scale where it hurts), then release the cache
-            und = (dedup.union(dedup.select(F.col("dst").alias("src"),
-                                            F.col("src").alias("dst")))
-                   .distinct().localCheckpoint())
-        finally:
-            dedup.unpersist()
-    else:
-        und = edges.union(edges.select(F.col("dst").alias("src"),
-                                       F.col("src").alias("dst"))).distinct()
-        und = und.localCheckpoint()
+    from pyspark import StorageLevel
+    dedup = edges.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if local_solve_threshold and dedup.count() <= local_solve_threshold:
+            # one collect job (toLocalIterator would run a job per
+            # partition — pathological for a small wide df)
+            rows = _local_union_find((r[0], r[1]) for r in dedup.collect())
+            out = edges.sparkSession.createDataFrame(
+                rows, CANONICAL_MAP_SCHEMA)
+            out._mdscraper_local = True   # driver-sized by the gate
+            return out
+        # distributed path: build the undirected set FROM the
+        # still-persisted distinct edges (recomputing distinct from
+        # the raw stream would repeat the most expensive shuffle at
+        # exactly the scale where it hurts), then release the cache
+        und = (dedup.union(dedup.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst")))
+               .distinct().localCheckpoint())
+    finally:
+        dedup.unpersist()
     from pyspark.sql import Observation
 
     labels = (und.select(F.col("src").alias("node_id"))
@@ -494,15 +492,18 @@ def build_kg_edges(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
 
 
 class KgBuild:
-    """The dictionary-to-edges step every KG caller runs: one persisted
+    """The dictionary-to-graph step every KG caller runs: one persisted
     mining pass with a broadcast linked gazetteer, its ``mentions``,
     ``triples`` and ``links`` frames, driver canonicalization and the
     edge aggregation.
 
     dictionary_rows: alias rows (alias, entity_id, canonical, etype,
-    prior), in the order whose first etype per alias wins.  A context
-    manager; :meth:`close` releases the mined rows and the broadcast,
-    after which the frames must not be read."""
+    prior), in the order whose first etype per alias wins.  The graph
+    is canonicalized once, on first use: :meth:`canonicalize` gives the
+    rows, ``canonical_map`` and ``kg_nodes`` the frames built from
+    them, and :meth:`edges` maps the pass's triples onto that map.  A
+    context manager; :meth:`close` releases the mined rows and the
+    broadcast, after which the frames must not be read."""
 
     def __init__(self, docs: DataFrame, dictionary_rows) -> None:
         self._rows = list(dictionary_rows)
@@ -515,18 +516,34 @@ class KgBuild:
         self.mined = mine_kg_combined(docs, self._gaz).persist()
         self.mentions, self.triples = split_mined(self.mined)
         self.links = mined_links(self.mined)
+        self._canonical = None
 
     def canonicalize(self) -> tuple:
-        """(canonical_map rows, kg_nodes rows) of the pass: one
-        mentions-per-surface collect (at most |dictionary| rows, as
-        every surface is an alias), then :func:`canonicalize_surfaces`."""
-        n_by_surface = dict(self.mentions.groupBy("surface").count().collect())
-        return canonicalize_surfaces(n_by_surface, self._link_of, self._rows)
+        """(canonical_map rows, kg_nodes rows) of the pass, computed on
+        the first call and kept: one mentions-per-surface collect (at
+        most |dictionary| rows, as every surface is an alias), then
+        :func:`canonicalize_surfaces`."""
+        if self._canonical is None:
+            n_by_surface = dict(
+                self.mentions.groupBy("surface").count().collect())
+            self._canonical = canonicalize_surfaces(
+                n_by_surface, self._link_of, self._rows)
+        return self._canonical
 
-    def edges(self, canonical_map: DataFrame) -> DataFrame:
-        """kg_edges of the pass against a canonical map built from
-        :meth:`canonicalize`'s rows."""
-        return build_kg_edges(self.triples, canonical_map)
+    @functools.cached_property
+    def canonical_map(self) -> DataFrame:
+        return self.mined.sparkSession.createDataFrame(
+            self.canonicalize()[0], CANONICAL_MAP_SCHEMA)
+
+    @functools.cached_property
+    def kg_nodes(self) -> DataFrame:
+        return self.mined.sparkSession.createDataFrame(
+            self.canonicalize()[1], KG_NODES_SCHEMA)
+
+    def edges(self) -> DataFrame:
+        """kg_edges of the pass: its triples mapped onto its own
+        canonical map."""
+        return build_kg_edges(self.triples, self.canonical_map)
 
     def close(self) -> None:
         self.mined.unpersist()

@@ -2562,20 +2562,18 @@ def kg_flagship(spark, sf_dir):
     signature, so the one static SQL string picks the right expected
     edges for whichever sf the driver registered, and an unknown corpus
     fails loudly with zero oracle rows."""
-    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
-    return kg.edges(cmap)
+    return _kg_build(spark, sf_dir).edges()
 
 
-_KG_PARTS_CACHE: dict = {}
+_KG_BUILD_CACHE: dict = {}
 
 
-def _kg_pipeline_parts(spark, sf_dir):
+def _kg_build(spark, sf_dir):
     """Shared pipeline prefix of the KG registry rows: pages ->
-    extract -> ``kg_ops.KgBuild`` over the fixture dictionary ->
-    (build, canonical_map, kg_nodes), the maps as DataFrames of the
-    build's driver-side rows.  ONE definition, the composition the
-    batch job runs, so the edges/nodes oracle rows cannot silently
-    diverge from it.
+    extract -> ``kg_ops.KgBuild`` over the fixture dictionary, whose
+    canonical map, nodes and edges every row takes.  ONE definition,
+    the composition the batch job runs, so the edges/nodes oracle rows
+    cannot silently diverge from it.
 
     Memoized per (Spark application, sf_dir) and never closed: every
     KG registry row consumes the build's persisted mined rows, and
@@ -2585,23 +2583,19 @@ def _kg_pipeline_parts(spark, sf_dir):
     references."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir)
-    if key in _KG_PARTS_CACHE:
-        return _KG_PARTS_CACHE[key]
+    if key in _KG_BUILD_CACHE:
+        return _KG_BUILD_CACHE[key]
     # evict entries from dead sessions: their frames pin unusable JVM
     # references, and a long-lived driver process cycling
     # SparkSessions would otherwise grow the cache without bound
-    for stale in [k for k in _KG_PARTS_CACHE if k[0] != app_id]:
-        del _KG_PARTS_CACHE[stale]
+    for stale in [k for k in _KG_BUILD_CACHE if k[0] != app_id]:
+        del _KG_BUILD_CACHE[stale]
     pages = docs_to_kg_pages(load(spark, sf_dir, "documents",
                                   fan_out=True))
     kg = kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
                         alias_rows())
-    cmap_rows, node_rows = kg.canonicalize()
-    parts = (kg,
-             spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA),
-             spark.createDataFrame(node_rows, kg_ops.KG_NODES_SCHEMA))
-    _KG_PARTS_CACHE[key] = parts
-    return parts
+    _KG_BUILD_CACHE[key] = kg
+    return kg
 
 
 def _corpus_sig(docs) -> str:
@@ -2631,7 +2625,7 @@ def kg_nodes_check(spark, sf_dir):
     """I6 node side of the graph materialize, hash-checked against the
     frozen single-threaded oracle's kg_nodes (canon_id, label,
     n_mentions) — the edges twin is `kg_flagship`."""
-    return _kg_pipeline_parts(spark, sf_dir)[2]
+    return _kg_build(spark, sf_dir).kg_nodes
 
 
 @register("kg_triple_pr", f"""
@@ -2708,8 +2702,8 @@ def kg_lambda_parity(spark, sf_dir):
                 F.pmod(F.xxhash64("url"), F.lit(3)) == F.lit(b))
             apply_kg_batch(spark, batch, b, workdir, stream_id=workdir)
         nodes_acc, edges_acc = canonicalize_accumulated(spark, workdir)
-        kg, cmap, nodes_one = _kg_pipeline_parts(spark, sf_dir)
-        edges_one = kg.edges(cmap).localCheckpoint()
+        kg = _kg_build(spark, sf_dir)
+        nodes_one, edges_one = kg.kg_nodes, kg.edges().localCheckpoint()
         n_nodes, n_edges = nodes_one.count(), edges_one.count()
         nodes_ok = (nodes_acc.count() == n_nodes and
                     nodes_acc.join(nodes_one, nodes_one.columns,
@@ -2850,9 +2844,7 @@ def kg_snapshot_diff(spark, sf_dir):
     pages = docs_to_kg_pages(docs_sub)
     with kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
                         alias_rows()) as kg:
-        cmap_rows, _node_rows = kg.canonicalize()
-        sub = kg.edges(spark.createDataFrame(
-            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)).localCheckpoint()
+        sub = kg.edges().localCheckpoint()
     return snapshot_diff(full, sub)
 
 
@@ -3065,8 +3057,8 @@ def kg_pmi_cooccurrence(spark, sf_dir):
     by mentions-per-sentence, never corpus size."""
     from mdscraper_spark.operators.kg import pmi_cooccurrence
 
-    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
-    return pmi_cooccurrence(kg.mentions, cmap)
+    kg = _kg_build(spark, sf_dir)
+    return pmi_cooccurrence(kg.mentions, kg.canonical_map)
 
 
 @register("kg_edge_provenance", f"""
@@ -3080,8 +3072,9 @@ def kg_edge_provenance(spark, sf_dir):
     shuffle as the flagship edge build (extra aggregates ride the same
     groupBy); verified against the frozen single-threaded oracle's
     identical derivation."""
-    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
-    return kg_ops.build_kg_edges_with_provenance(kg.triples, cmap)
+    kg = _kg_build(spark, sf_dir)
+    return kg_ops.build_kg_edges_with_provenance(kg.triples,
+                                                 kg.canonical_map)
 
 
 @register("kg_edge_time_windows", f"""
@@ -3099,13 +3092,13 @@ def kg_edge_time_windows(spark, sf_dir):
     Min/max ride the SAME single groupBy shuffle as the flagship edge
     build.  Verified against the frozen single-threaded oracle's
     identical derivation (tools/freeze_kg_oracle.py kg_tw fixtures)."""
-    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
+    kg = _kg_build(spark, sf_dir)
     warc_ts = F.expr(
         "timestamp'2025-06-14 00:00:00' + make_interval(0, 0, 0, 0, "
         "CAST(CAST(substring_index(url, '/', -1) AS BIGINT) % 97 AS INT), "
         "0, 0)")
     return kg_ops.build_kg_edges_with_time_windows(
-        kg.triples.withColumn("warc_ts", warc_ts), cmap)
+        kg.triples.withColumn("warc_ts", warc_ts), kg.canonical_map)
 
 
 def _nt_sql_frag_expr(c: str) -> str:
@@ -3187,9 +3180,9 @@ def kg_export_provenance(spark, sf_dir):
     verified line-for-line against the same reification over the FROZEN
     single-threaded oracle's provenance edges.  Projection + explode
     only: the export adds zero shuffles at any scale."""
-    kg, cmap, _nodes = _kg_pipeline_parts(spark, sf_dir)
+    kg = _kg_build(spark, sf_dir)
     return kg_ops.provenance_to_ntriples(
-        kg_ops.build_kg_edges_with_provenance(kg.triples, cmap))
+        kg_ops.build_kg_edges_with_provenance(kg.triples, kg.canonical_map))
 
 
 @register("warc_roundtrip", """

@@ -105,11 +105,11 @@ def test_scaling_levels_follow_cpu_count():
 
 
 def test_scaling_stage_walls_reduce_one_runs_lineage():
-    """tools/scaling_bench.py reports each stage's wall as the max
-    ``wall_ms`` of that stage's lineage rows for the timed pass's
-    run_id, ``graph`` as ``canon+graph``; other runs' rows are
-    ignored."""
-    from tools.scaling_bench import stage_walls
+    """bench.timed_run (bench.py's and tools/scaling_bench.py's pass
+    timer) reports each stage's wall as the max ``wall_ms`` of that
+    stage's lineage rows for the timed pass's run_id, ``graph`` as
+    ``canon+graph``; other runs' rows are ignored."""
+    from bench import stage_walls
 
     def row(run_id, stage, part_id, wall_ms):
         return {"run_id": run_id, "stage": stage, "part_id": part_id,
@@ -126,3 +126,16 @@ def test_scaling_stage_walls_reduce_one_runs_lineage():
     assert stage_walls(rows, "scale") == {
         "extract": 4.2, "mine": 1.73, "link": 0.9, "canon+graph": 2.34}
     assert stage_walls(rows, "missing") == {}
+
+
+def test_busy_fraction_counts_iowait_as_idle():
+    """The one /proc/stat reading both bench tools share: between two
+    ``cpu`` lines where only iowait advanced, the host was not busy
+    (iowait counted as busy would read 1.0); user time is busy."""
+    from bench import busy_fraction
+
+    # user nice system idle iowait irq softirq steal guest guest_nice
+    before = "cpu  100 0 50 1000 20 0 5 0 0 0"
+    assert busy_fraction(before, "cpu  100 0 50 1000 420 0 5 0 0 0") == 0.0
+    assert busy_fraction(before, "cpu  400 0 50 1000 20 0 5 0 0 0") == 1.0
+    assert busy_fraction(before, "cpu  200 0 50 1100 20 0 5 0 0 0") == 0.5

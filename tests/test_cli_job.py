@@ -310,11 +310,13 @@ def test_warc_input_format_matches_parquet_run(spark, tmp_path):
     assert got == want and len(got) == 6
 
 
-def test_extract_only_resume_then_full_resume_extracts_once(spark, tmp_path):
+def test_extract_only_resume_then_full_resume_extracts_once(spark, tmp_path,
+                                                           capsys):
     """--extract-only runs the job's own extract stage: it records
     extract lineage and honours --resume, so a later full --resume run
     on the same warehouse extracts nothing again, and markdown_docs
-    equals one straight run's."""
+    equals one straight run's.  The row counts each run prints come
+    from the manifests and equal the tables' own counts."""
     from pyspark.sql import functions as F
 
     from mdscraper_spark.jobs.extract import main
@@ -322,10 +324,24 @@ def test_extract_only_resume_then_full_resume_extracts_once(spark, tmp_path):
 
     pq = _pages_parquet(spark, tmp_path)
     wh_two = str(tmp_path / "wh_two_step")
-    main(["--input", pq, "--warehouse", wh_two, "--extract-only",
-          "--resume", "--run-id", "r1", "--n-buckets", "4"])
-    main(["--input", pq, "--warehouse", wh_two, "--resume",
-          "--run-id", "r2", "--n-buckets", "4"])
+
+    def printed_counts(argv):
+        capsys.readouterr()
+        main(argv)
+        last = capsys.readouterr().out.strip().splitlines()[-1]
+        return json.loads(last)["tables"]
+
+    counts = printed_counts(["--input", pq, "--warehouse", wh_two,
+                             "--extract-only", "--resume", "--run-id", "r1",
+                             "--n-buckets", "4"])
+    assert counts == {"markdown_docs": 6}
+    counts = printed_counts(["--input", pq, "--warehouse", wh_two,
+                             "--resume", "--run-id", "r2",
+                             "--n-buckets", "4"])
+    wh = Warehouse(spark, wh_two)
+    assert counts == {name: wh.read_table(name).count() for name in (
+        "markdown_docs", "mentions", "triples", "entity_links", "kg_nodes",
+        "kg_edges")}
     wh_one = str(tmp_path / "wh_straight")
     main(["--input", pq, "--warehouse", wh_one, "--run-id", "s",
           "--n-buckets", "4"])

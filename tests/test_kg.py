@@ -40,14 +40,10 @@ def spark_kg(spark):
     pages = bulk_pages_df(spark, N_PAGES).repartition(5)
     with kg_ops.KgBuild(extract_markdown(pages, CFG),
                         fixtures.alias_rows()) as kg:
-        cmap_rows, node_rows = kg.canonicalize()
-        cmap = spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)
         yield {
             "mentions": kg.mentions, "triples": kg.triples,
-            "links": kg.links, "cmap": cmap,
-            "nodes": spark.createDataFrame(node_rows,
-                                           kg_ops.KG_NODES_SCHEMA),
-            "edges": kg.edges(cmap),
+            "links": kg.links, "cmap": kg.canonical_map,
+            "nodes": kg.kg_nodes, "edges": kg.edges(),
         }
 
 
@@ -479,9 +475,7 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
         cmap_rows, node_rows = kg.canonicalize()
         assert sorted(cmap_rows) == sorted(oracle["canonical_map"])
         assert sorted(node_rows) == sorted(oracle["kg_nodes"])
-        edges = kg.edges(spark.createDataFrame(
-            cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA))
-        assert _rows(edges) == sorted(oracle["kg_edges"])
+        assert _rows(kg.edges()) == sorted(oracle["kg_edges"])
 
 
 # ROADMAP's casefold probe, extended with STRASSE and MASS: non-alias
@@ -519,9 +513,8 @@ def test_casefold_probe_consumers_equal_oracle(spark):
     want_pmi = pmi_cooccurrence(oracle)
     assert want_pmi, "probe must co-locate two linked entities"
     with kg_ops.KgBuild(extract_markdown(pages, CFG), _PROBE_ROWS) as kg:
-        cmap_rows, _node_rows = kg.canonicalize()
-        cmap = spark.createDataFrame(cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)
-        assert _rows(kg.edges(cmap)) == sorted(oracle["kg_edges"])
+        cmap = kg.canonical_map
+        assert _rows(kg.edges()) == sorted(oracle["kg_edges"])
         assert _rows(kg_ops.build_kg_edges_with_provenance(
             kg.triples, cmap)) == sorted(oracle["kg_edge_prov"])
         assert _rows(kg_ops.build_kg_edges_with_time_windows(

@@ -203,11 +203,10 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
     with kg_ops.KgBuild(docs, alias_rows()) as kg:
-        cmap_rows, node_rows = kg.canonicalize()
         want_edges = {(r.src, r.pred, r.dst): r.n_support
-                      for r in kg.edges(spark.createDataFrame(
-                          cmap_rows, kg_ops.CANONICAL_MAP_SCHEMA)).collect()}
-    want_nodes = {canon_id: (label, n) for canon_id, label, n in node_rows}
+                      for r in kg.edges().collect()}
+        want_nodes = {r.canon_id: (r.label, r.n_mentions)
+                      for r in kg.kg_nodes.collect()}
     oracle = run_oracle([(r[0], bytes(r[2]).decode()) for r in all_pages],
                         alias_rows(), CFG)
 

@@ -21,8 +21,9 @@ varying 4x in burned cpu-seconds from host contention):
 * the stage columns are the timed pass's own lineage: per stage, the
   max ``wall_ms`` of its rows.  The job runs independent writes at the
   same time, so the stage walls overlap and need not sum to the pass;
-* host busy fraction from /proc/stat is sampled around every timed
-  pass and reported, so external load is visible in the evidence;
+* host busy fraction (bench.busy_fraction: iowait counts as idle) is
+  sampled around every timed pass (bench.timed_run, the timer bench.py
+  uses too) and reported, so external load is visible in the evidence;
 * the corpus is 128 parquet files: one row group per file caps scan
   splits, and too few files quantizes a stage into idle-core waves
   (observed: 11 splits -> 2.65x, not 4x, from 2 to 8 cores);
@@ -47,7 +48,8 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from bench import driver_mem, materialize_pages  # noqa: E402
+from bench import (  # noqa: E402
+    SPLIT_CONF, driver_mem, materialize_pages, timed_run)
 
 CONTROL_PAGES = 16_000
 
@@ -88,48 +90,6 @@ def hardware_control(procs: int, n: int = CONTROL_PAGES) -> float:
     return n / dt
 
 
-def _cpu_totals():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) for x in parts]
-    idle = vals[3] + vals[4]          # idle + iowait
-    return sum(vals), idle
-
-
-def stage_walls(lineage_rows, run_id: str) -> dict:
-    """Per-stage wall seconds of one run from its lineage rows: the max
-    ``wall_ms`` over the run's rows of each stage (every bucket row of
-    a stage carries the stage's wall), ``graph`` reported as
-    ``canon+graph``; rows of other runs are ignored."""
-    out: dict = {}
-    for r in lineage_rows:
-        if r["run_id"] == run_id:
-            stage = "canon+graph" if r["stage"] == "graph" else r["stage"]
-            out[stage] = max(out.get(stage, 0), r["wall_ms"])
-    return {k: round(v / 1000, 2) for k, v in out.items()}
-
-
-def timed_run(spark, pages_path: str, workdir: str):
-    """(wall_sec, host_busy_fraction, stage_walls) for one
-    ``KgBuildJob.run`` into a fresh warehouse under ``workdir``."""
-    from mdscraper_spark.config import ExtractConfig
-    from mdscraper_spark.jobs.kg_build import KgBuildJob
-
-    warehouse = tempfile.mkdtemp(prefix="wh_", dir=workdir)
-    job = KgBuildJob(spark, warehouse,
-                     ExtractConfig(exclude_selectors=(".ads", "#nav")))
-    pages = spark.read.parquet(pages_path)
-    tot0, idle0 = _cpu_totals()
-    t0 = time.monotonic()
-    tables = job.run(pages, run_id="scale")
-    wall = time.monotonic() - t0
-    tot1, idle1 = _cpu_totals()
-    busy = 1.0 - (idle1 - idle0) / max(1, tot1 - tot0)
-    stages = stage_walls(tables["lineage"].collect(), "scale")
-    shutil.rmtree(warehouse, ignore_errors=True)
-    return wall, busy, stages
-
-
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     n_rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -144,14 +104,8 @@ def main() -> None:
     workdir = tempfile.mkdtemp(prefix="scaling_bench_")
     pages_path = str(pathlib.Path(workdir) / "pages")
 
-    # split-size tuned to the bench corpus so the scan parallelizes:
-    # at 100 TB the default 128 MB splits give ample tasks; at bench
-    # scale they would collapse the scan to a handful of tasks.
-    conf = {"spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(512 * 1024)}
-
     gen = get_spark("gen", master=f"local[{n_cpus}]",
-                    shuffle_partitions=2 * n_cpus, extra_conf=conf)
+                    shuffle_partitions=2 * n_cpus, extra_conf=SPLIT_CONF)
     gen.sparkContext.setLogLevel("ERROR")
     materialize_pages(gen, n_pages, pages_path, num_partitions=128)
     gen.stop()
@@ -163,7 +117,7 @@ def main() -> None:
                 spark = get_spark(f"scale-{cpus}-r{rnd}",
                                   master=f"local[{cpus}]",
                                   shuffle_partitions=2 * cpus,
-                                  extra_conf=conf)
+                                  extra_conf=SPLIT_CONF)
                 spark.sparkContext.setLogLevel("ERROR")
                 timed_run(spark, pages_path, workdir)   # warm-up, discarded
                 wall, busy, stages = timed_run(spark, pages_path, workdir)
