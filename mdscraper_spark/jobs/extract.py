@@ -196,7 +196,7 @@ def main(argv=None) -> None:
     if config.debug:
         _dump_debug_html(job.wh, pages)
 
-    counts = {name: _row_count(job.wh, name)
+    counts = {name: job.wh.row_count(name)
               for name in ("markdown_docs",) + (
                   () if args.extract_only else
                   ("mentions", "triples", "entity_links", "kg_nodes",
@@ -272,19 +272,8 @@ def _dump_debug_html(wh, pages) -> None:
               .select("url", "status"))
     dump = pages.join(failed, "url", "left_semi").select("url", "html")
     wh.write_table(dump, "debug_html")
-    print(f"Saved HTML of {_row_count(wh, 'debug_html')} failed-detection "
+    print(f"Saved HTML of {wh.row_count('debug_html')} failed-detection "
           "pages to debug_html")
-
-
-def _row_count(wh, name: str) -> int:
-    """Rows of a table's current snapshot from the manifests alone (no
-    Spark job): each live partition holds the rows its owning
-    snapshots' ``record_counts`` give it.  Every owner's manifest must
-    still exist, which holds unless ``expire_snapshots`` ran; the CLI
-    never expires."""
-    owners = wh.manifest(name)["partitions"]
-    return sum(wh.manifest(name, sid)["record_counts"].get(key, 0)
-               for key, sids in owners.items() for sid in sids)
 
 
 if __name__ == "__main__":

@@ -28,9 +28,12 @@ Independent Spark jobs run at the same time, from a two-thread pool
 scoped to one ``run()`` (Spark schedules jobs submitted from separate
 threads concurrently):
 
-* the dictionary collect of an injected alias DataFrame runs beside
-  extraction; its rows are taken after the ``markdown_docs`` commit,
-  so a dictionary error still surfaces after extraction is recorded;
+* the job's matcher (kg_ops.Matcher: the dictionary collect of an
+  injected alias DataFrame, ``rules.best_links``, the linked gazetteer
+  and its broadcast) is built beside extraction; it is taken after the
+  ``markdown_docs`` commit, so a dictionary error still surfaces after
+  extraction is recorded, and its broadcast is destroyed on every
+  path out of ``run()``;
 * after the ``mentions`` write, the ``triples`` and ``entity_links``
   writes run beside canonicalization and the ``kg_edges`` write.
   ``mentions`` goes first, alone, because its write materializes the
@@ -158,10 +161,13 @@ class KgBuildJob:
                            path / f"part-{uuid.uuid4()}.parquet")
 
     def _lineage(self) -> Optional[DataFrame]:
+        """The lineage ledger, read with its own schema: it has no
+        manifest, and inferring the schema from the files would cost a
+        Spark job."""
         path = self.wh.table_path("lineage")
         if not path.exists():
             return None
-        return self.spark.read.parquet(str(path))
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(path))
 
     def _stage_rows(self, run_id: str, stage: str, table: str,
                     wall_ms: int) -> list:
@@ -193,8 +199,6 @@ class KgBuildJob:
         extract, no snapshot is committed, except the first (empty) one,
         so later stages always find the table.  ``run`` starts with it,
         and the CLI's ``--extract-only`` runs only it."""
-        pages = with_part_id(pages, self.n_buckets)
-
         todo = pages
         if resume:
             lineage = self._lineage()
@@ -203,7 +207,8 @@ class KgBuildJob:
                         .filter((F.col("stage") == "extract")
                                 & (F.col("status") == "ok"))
                         .select("part_id").distinct())
-                todo = pages.join(done, "part_id", "left_anti")
+                todo = (with_part_id(pages, self.n_buckets)
+                        .join(done, "part_id", "left_anti"))
 
         t0 = time.monotonic()
         # manifest first: a fresh warehouse gets its first snapshot
@@ -230,22 +235,35 @@ class KgBuildJob:
         with ThreadPoolExecutor(max_workers=2,
                                 thread_name_prefix="kg-build") as pool:
             self._run(pool, pages, run_id, resume)
-        return {name: self.wh.read_table(name) for name in (
+        tables = {name: self.wh.read_table(name) for name in (
             "markdown_docs", "mentions", "triples", "entity_links",
-            "canonical_map", "kg_nodes", "kg_edges", "lineage")}
+            "canonical_map", "kg_nodes", "kg_edges")}
+        tables["lineage"] = self._lineage()
+        return tables
+
+    def _matcher(self) -> kg_ops.Matcher:
+        return kg_ops.Matcher(self.spark, self._dictionary())
 
     def _run(self, pool: ThreadPoolExecutor, pages: DataFrame,
              run_id: str, resume: bool) -> None:
         # The mining gazetteer comes from the SAME dictionary the links
         # are scored against — a caller-injected dictionary must drive
         # mention detection too, or custom aliases silently produce an
-        # empty KG.  Its collect is submitted first, so it overlaps
-        # extraction.
-        dictionary = self._submit(pool, self._dictionary)
-        self.extract(pages, run_id, resume)
+        # empty KG.  The matcher is submitted first, so it is built
+        # while extraction runs.
+        built = self._submit(pool, self._matcher)
+        try:
+            self.extract(pages, run_id, resume)
+            matcher = built.result()
+        except BaseException:
+            # a matcher built beside a failed extraction is destroyed
+            wait([built])
+            if built.exception() is None:
+                built.result().close()
+            raise
 
-        docs = self.wh.read_table("markdown_docs")
-        with kg_ops.KgBuild(docs, dictionary.result()) as kg:
+        with matcher, kg_ops.KgBuild(self.wh.read_table("markdown_docs"),
+                                     matcher) as kg:
             # materializes the persisted pass the later readers share
             mentions_ms = self._timed_write(kg.mentions, "mentions")
             side = [self._submit(pool, self._timed_write, kg.triples,

@@ -65,10 +65,12 @@ def run_oracle(pages: Iterable[Tuple[str, str]],
             triples.append((url, sid, subj, pred, obj, conf))
 
         # best link per mention: every surface is an alias, so its
-        # link is the dictionary's best link for that surface
+        # link is the dictionary's best link for that surface (none
+        # when no row of it names an entity)
         for sid, start, end, surface, mtype in doc_mentions:
             eid, score = link_of[surface]
-            links.append((url, f"{url}#{sid}#{start}", eid, score))
+            if eid is not None:
+                links.append((url, f"{url}#{sid}#{start}", eid, score))
 
     # canonicalization: CC over surface<->entity winning-link graph
     uf = UnionFind()

@@ -19,6 +19,7 @@ Everything here is pure Python executed inside Arrow batch UDFs.
 from __future__ import annotations
 
 import re
+from array import array
 from typing import Dict, Iterable, List, Optional, Tuple
 
 # ---------------------------------------------------------------------------
@@ -88,7 +89,14 @@ class Gazetteer:
     followed by a word character.  Non-word edges need no boundary (the
     edge char itself breaks any word), so ``C++`` and ``.NET`` match.
     Both word tests go through ``re`` so Unicode word characters
-    classify exactly as ``\\b`` does."""
+    classify exactly as ``\\b`` does.
+
+    The layout is compact because every executor process holds one
+    copy: one dict from surface to row, the row's mtype as a code into
+    a small table, and, when linked, the entity id and score in typed
+    arrays with a null-flag byte per row.  A match's value is built
+    from them on the hit; its word-final test reads the sentence at
+    the hit, so no per-alias set is kept."""
 
     def __init__(self, entries: Iterable[Tuple[str, str]],
                  links: Optional[Dict[str, Tuple[int, float]]] = None):
@@ -97,34 +105,52 @@ class Gazetteer:
         (a caller-supplied alias dictionary may carry a blank alias).
 
         links: optional :func:`best_links` of the same dictionary.  A
-        linked gazetteer's ``types`` values (and the fourth field of
-        each ``find`` match) are ``(mtype, entity_id, score)`` instead
-        of the bare mtype, so the link rides the matcher's own dict."""
+        linked gazetteer's ``find`` matches carry ``(mtype, entity_id,
+        score)`` as their fourth field instead of the bare mtype, so the
+        link rides the matcher's own rows."""
         self.linked = links is not None
-        self.types: Dict[str, str] = {}
+        index: Dict[str, int] = {}
+        code_of: Dict[Optional[str], int] = {}
+        codes: List[int] = []
         for surface, mtype in entries:
-            if surface and surface not in self.types:
-                self.types[surface] = (mtype, *links[surface]) \
-                    if self.linked else mtype
+            if surface and surface not in index:
+                index[surface] = len(codes)
+                codes.append(code_of.setdefault(mtype, len(code_of)))
+        self._index = index
+        self._mtypes = tuple(code_of)
+        self._codes = array("B" if len(code_of) <= 256 else "I", codes)
+        if self.linked:
+            self._eid, self._score = array("q"), array("d")
+            self._null = bytearray()
+            for surface in index:
+                eid, score = links[surface]
+                self._eid.append(0 if eid is None else eid)
+                self._score.append(0.0 if score is None else score)
+                self._null.append((eid is None) | (score is None) << 1)
         lengths: Dict[str, set] = {}
-        for s in self.types:
+        for s in index:
             run = _WORD_RUN_RE.match(s)
             lengths.setdefault(run.group() if run else s[0], set()).add(len(s))
-        self._buckets = {k: sorted(v, reverse=True)
+        self._buckets = {k: tuple(sorted(v, reverse=True))
                          for k, v in lengths.items()}
-        # surfaces whose last char is a word char need a word boundary
-        # after them
-        self._word_final = {s for s in self.types if _WORD_RE.match(s[-1])}
         # candidate starts in position order: every word run, plus every
         # char that begins a non-word-initial alias
         non_word = "".join(re.escape(k) for k in sorted(self._buckets)
                            if not _WORD_RE.match(k))
         self._starts = re.compile(rf"\w+|[{non_word}]" if non_word else r"\w+")
 
+    def _value(self, row: int):
+        mtype = self._mtypes[self._codes[row]]
+        if not self.linked:
+            return mtype
+        null = self._null[row]
+        return (mtype, None if null & 1 else self._eid[row],
+                None if null & 2 else self._score[row])
+
     def find(self, sentence: str) -> List[Tuple[int, int, str, str]]:
         """Non-overlapping mentions: (start, end, surface, mtype), or
         (start, end, surface, (mtype, entity_id, score)) when linked."""
-        types, word_final = self.types, self._word_final
+        index, value = self._index, self._value
         buckets, word_at = self._buckets, _WORD_RE.match
         out = []
         end = 0
@@ -138,10 +164,11 @@ class Gazetteer:
                 if j > size:
                     continue
                 surface = sentence[i:j]
-                if surface in types and not (surface in word_final
-                                             and word_at(sentence, j)):
+                # a word char after a word-final alias splits a word
+                if surface in index and not (word_at(sentence, j)
+                                             and word_at(sentence, j - 1)):
                     end = j
-                    out.append((i, j, surface, types[surface]))
+                    out.append((i, j, surface, value(index[surface])))
                     break
         return out
 
@@ -218,7 +245,8 @@ def link_score(surface: str, alias: str, prior: float) -> float:
     return prior if surface == alias else 0.7 * prior
 
 
-def best_links(rows: Iterable[tuple]) -> Dict[str, Tuple[int, Optional[float]]]:
+def best_links(rows: Iterable[tuple]
+               ) -> Dict[str, Tuple[Optional[int], Optional[float]]]:
     """{alias: (entity_id, score)}: the best link of a mention whose
     surface is that alias.  rows: alias-dictionary rows (alias,
     entity_id, canonical, etype, prior).
@@ -227,23 +255,27 @@ def best_links(rows: Iterable[tuple]) -> Dict[str, Tuple[int, Optional[float]]]:
     its best link depends on the surface alone: max ``link_score`` over
     the aliases with the same ``norm_surface``, tie -> lowest
     entity_id.  A null prior scores null and loses to any scored
-    candidate.  Null aliases never match and are skipped.  The mining
-    pass's linked gazetteer and ``operators.kg.link_entities`` both
-    take their links from here."""
+    candidate.  A row with a null entity_id names no entity, so it is
+    no candidate: a surface whose rows all lack one links to (None,
+    None), and stays unlinked.  Null aliases never match and are
+    skipped.  The mining pass's linked gazetteer and
+    ``operators.kg.link_entities`` both take their links from here."""
     by_norm: Dict[str, list] = {}
     for alias, eid, _canon, _etype, prior in rows:
         if alias is not None:
             by_norm.setdefault(norm_surface(alias), []).append(
                 (alias, eid, prior))
-    out: Dict[str, Tuple[int, Optional[float]]] = {}
+    out: Dict[str, Tuple[Optional[int], Optional[float]]] = {}
     for cands in by_norm.values():
         for surface in {alias for alias, _eid, _prior in cands}:
-            best = None
+            best = (None, None, None)
             for alias, eid, prior in cands:
+                if eid is None:
+                    continue
                 score = (None if prior is None
                          else link_score(surface, alias, prior))
                 key = (score is not None, score or 0.0, -eid)
-                if best is None or key > best[0]:
+                if best[0] is None or key > best[0]:
                     best = (key, eid, score)
             out[surface] = best[1:]
     return out

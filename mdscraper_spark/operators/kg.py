@@ -15,24 +15,32 @@ those ids, so no Spark expression re-derives them.
 
 Scale notes:
 * a mention's surface is always an alias, so its best link is a
-  function of the dictionary alone (rules.best_links): one linked
-  gazetteer is broadcast per executor and the mining pass emits each
-  mention's entity_id/score — no join on the alias key, so no skew on
-  it and no salting;
-* :class:`KgBuild` is that composition: one persisted mining pass,
-  driver canonicalization and the edge aggregation.  Its callers are
-  ``KgBuildJob._run`` (which bench.py, tools/scaling_bench.py and
-  perfbench time), the registry's KG rows (``queries._kg_build`` and
-  ``kg_snapshot_diff``) and the stream's ``apply_kg_batch``.  It
-  hands out the graph: the canonical_map and kg_nodes rows and the
-  frames built from them, and ``edges()`` over its own map, so no
-  caller rebuilds the frames or reads a written map back.  Every
-  mention surface is an alias of the dictionary it already holds, so
-  the co-reference graph has at most |dictionary| surface nodes.  One
-  groupBy of the mined mentions per surface reaches the driver, and
-  :func:`canonicalize_surfaces` builds canonical_map and kg_nodes from
-  it (union-find, no Spark job); every edge builder joins the triples'
-  node ids against the broadcast map;
+  function of the dictionary alone (rules.best_links).  A
+  :class:`Matcher` holds one dictionary's rows, their best links and a
+  broadcast linked ``rules.Gazetteer`` (a compact layout, as every
+  executor process holds a copy); the mining pass emits each mention's
+  entity_id/score from it — no join on the alias key, so no skew on it
+  and no salting;
+* a matcher is paid for once per dictionary, not once per build:
+  ``KgBuildJob._run`` builds its own on a pool thread while extraction
+  runs and closes it after its :class:`KgBuild`; the stream's
+  micro-batches and the registry's KG rows take the application's
+  fixture-dictionary matcher from :func:`fixture_matcher` and reuse
+  it;
+* :class:`KgBuild` is the composition of one pass over a matcher: one
+  persisted mining pass, driver canonicalization and the edge
+  aggregation.  Its callers are ``KgBuildJob._run`` (which bench.py,
+  tools/scaling_bench.py and perfbench time), the registry's KG rows
+  (``queries._kg_build`` and ``kg_snapshot_diff``) and the stream's
+  ``apply_kg_batch``.  It hands out the graph: the canonical_map and
+  kg_nodes rows and the frames built from them, and ``edges()`` over
+  its own map, so no caller rebuilds the frames or reads a written map
+  back.  Every mention surface is an alias of the matcher's
+  dictionary, so the co-reference graph has at most |dictionary|
+  surface nodes.  One groupBy of the mined mentions per surface
+  reaches the driver, and :func:`canonicalize_surfaces` builds
+  canonical_map and kg_nodes from it (union-find, no Spark job); every
+  edge builder joins the triples' node ids against the broadcast map;
 * ``link_entities``, ``coreference_edges`` and ``build_kg_nodes``
   remain only for perfbench's traced replay of the job's stages, and
   follow the same rule;
@@ -114,11 +122,11 @@ def mine_kg_combined(markdown_docs: DataFrame,
     ``gazetteer`` is either the (alias, etype) entry tuple — the
     token-keyed gazetteer is then built once per executor process
     (rules.cached_gazetteer) and mention rows carry no link — or a
-    Broadcast of a linked ``rules.Gazetteer`` (built with
-    ``rules.best_links``), shipped once per executor; each mention row
-    then carries its best link's entity_id and score.  Every row
-    carries the ``rules.surface_node`` ids of the surfaces it names:
-    ``node_id`` on mentions, ``subj_node``/``obj_node`` on triples."""
+    :class:`Matcher`'s Broadcast of a linked ``rules.Gazetteer``,
+    shipped once per executor; each mention row then carries its best
+    link's entity_id and score.  Every row carries the
+    ``rules.surface_node`` ids of the surfaces it names: ``node_id`` on
+    mentions, ``subj_node``/``obj_node`` on triples."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz = (gazetteer.value if isinstance(gazetteer, Broadcast)
@@ -206,15 +214,17 @@ def link_entities(mentions: DataFrame, aliases: DataFrame,
     replay of the job's stages and applies the same rule: every
     mention surface is an alias, so ``rules.best_links`` of the
     collected alias rows (the bounded broadcast side) gives each
-    surface's link, joined on the exact surface.  ``salt`` is accepted
-    only as ``None``, the value the replay passes."""
+    surface's link, joined on the exact surface; a surface that links
+    to no entity gets no row, as in :func:`mined_links`.  ``salt`` is
+    accepted only as ``None``, the value the replay passes."""
     if salt is not None:
         raise ValueError(f"salt must be None (the join is always "
                          f"broadcast): {salt!r}")
     rows = aliases.select("alias", "entity_id", "canonical", "etype",
                           "prior").collect()
     best = mentions.sparkSession.createDataFrame(
-        [(s, *link) for s, link in rules.best_links(rows).items()],
+        [(s, eid, score) for s, (eid, score) in rules.best_links(rows).items()
+         if eid is not None],
         "surface string, entity_id long, score double")
     return (mentions.join(F.broadcast(best), "surface")
             .select("url",
@@ -491,29 +501,71 @@ def build_kg_edges(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
     return _aggregate_edges(triples, canonical_map, F.count(F.lit(1)))
 
 
-class KgBuild:
-    """The dictionary-to-graph step every KG caller runs: one persisted
-    mining pass with a broadcast linked gazetteer, its ``mentions``,
-    ``triples`` and ``links`` frames, driver canonicalization and the
-    edge aggregation.
+class Matcher:
+    """One alias dictionary's mention matcher, built once and shared by
+    every :class:`KgBuild` over that dictionary: the dictionary rows,
+    their ``rules.best_links`` and the broadcast linked
+    ``rules.Gazetteer`` the mining pass probes (shipped once per
+    executor).
 
     dictionary_rows: alias rows (alias, entity_id, canonical, etype,
-    prior), in the order whose first etype per alias wins.  The graph
-    is canonicalized once, on first use: :meth:`canonicalize` gives the
-    rows, ``canonical_map`` and ``kg_nodes`` the frames built from
-    them, and :meth:`edges` maps the pass's triples onto that map.  A
-    context manager; :meth:`close` releases the mined rows and the
-    broadcast, after which the frames must not be read."""
+    prior), in the order whose first etype per alias wins.  A context
+    manager; :meth:`close` destroys the broadcast, after which no pass
+    mined with it may be read."""
 
-    def __init__(self, docs: DataFrame, dictionary_rows) -> None:
-        self._rows = list(dictionary_rows)
-        # one matcher carries each surface's best link; shipped once
-        # per executor
-        self._link_of = rules.best_links(self._rows)
-        self._gaz = docs.sparkSession.sparkContext.broadcast(
-            rules.Gazetteer(((a, t) for a, _e, _c, t, _p in self._rows),
-                            self._link_of))
-        self.mined = mine_kg_combined(docs, self._gaz).persist()
+    def __init__(self, spark: SparkSession, dictionary_rows) -> None:
+        self.rows = list(dictionary_rows)
+        self.link_of = rules.best_links(self.rows)
+        self.gazetteer = spark.sparkContext.broadcast(
+            rules.Gazetteer(((a, t) for a, _e, _c, t, _p in self.rows),
+                            self.link_of))
+
+    def close(self) -> None:
+        self.gazetteer.destroy()
+
+    def __enter__(self) -> "Matcher":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+_FIXTURE_MATCHERS: dict = {}
+
+
+def fixture_matcher(spark: SparkSession) -> Matcher:
+    """The :class:`Matcher` of the fixture dictionary
+    (``fixtures.alias_rows()``) for this Spark application: built on
+    the first call, then handed to every later one (the stream's
+    micro-batches, the registry's KG rows).  Never closed; its
+    broadcast lives as long as the application, and a new application
+    builds anew."""
+    app_id = spark.sparkContext.applicationId
+    matcher = _FIXTURE_MATCHERS.get(app_id)
+    if matcher is None:
+        _FIXTURE_MATCHERS.clear()       # a dead application's matcher
+        matcher = _FIXTURE_MATCHERS[app_id] = Matcher(
+            spark, fixtures.alias_rows())
+    return matcher
+
+
+class KgBuild:
+    """The dictionary-to-graph step every KG caller runs: one persisted
+    mining pass with a :class:`Matcher`'s broadcast linked gazetteer,
+    its ``mentions``, ``triples`` and ``links`` frames, driver
+    canonicalization and the edge aggregation.
+
+    matcher: the dictionary's :class:`Matcher`, which the caller built
+    and closes after the build.  The graph is canonicalized once, on
+    first use: :meth:`canonicalize` gives the rows, ``canonical_map``
+    and ``kg_nodes`` the frames built from them, and :meth:`edges` maps
+    the pass's triples onto that map.  A context manager; :meth:`close`
+    releases the mined rows, after which the frames must not be
+    read."""
+
+    def __init__(self, docs: DataFrame, matcher: Matcher) -> None:
+        self.matcher = matcher
+        self.mined = mine_kg_combined(docs, self.matcher.gazetteer).persist()
         self.mentions, self.triples = split_mined(self.mined)
         self.links = mined_links(self.mined)
         self._canonical = None
@@ -527,7 +579,7 @@ class KgBuild:
             n_by_surface = dict(
                 self.mentions.groupBy("surface").count().collect())
             self._canonical = canonicalize_surfaces(
-                n_by_surface, self._link_of, self._rows)
+                n_by_surface, self.matcher.link_of, self.matcher.rows)
         return self._canonical
 
     @functools.cached_property
@@ -547,7 +599,6 @@ class KgBuild:
 
     def close(self) -> None:
         self.mined.unpersist()
-        self._gaz.destroy()
 
     def __enter__(self) -> "KgBuild":
         return self

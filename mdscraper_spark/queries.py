@@ -2571,7 +2571,10 @@ _KG_BUILD_CACHE: dict = {}
 def _kg_build(spark, sf_dir):
     """Shared pipeline prefix of the KG registry rows: pages ->
     extract -> ``kg_ops.KgBuild`` over the fixture dictionary, whose
-    canonical map, nodes and edges every row takes.  ONE definition,
+    canonical map, nodes and edges every row takes.  Its matcher is the
+    application's fixture-dictionary one (``kg_ops.fixture_matcher``),
+    which
+    ``kg_snapshot_diff``'s second build reuses.  ONE definition,
     the composition the batch job runs, so the edges/nodes oracle rows
     cannot silently diverge from it.
 
@@ -2593,7 +2596,7 @@ def _kg_build(spark, sf_dir):
     pages = docs_to_kg_pages(load(spark, sf_dir, "documents",
                                   fan_out=True))
     kg = kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
-                        alias_rows())
+                        kg_ops.fixture_matcher(spark))
     _KG_BUILD_CACHE[key] = kg
     return kg
 
@@ -2843,7 +2846,7 @@ def kg_snapshot_diff(spark, sf_dir):
                 .filter(F.col("doc_id") % 10 != 0))
     pages = docs_to_kg_pages(docs_sub)
     with kg_ops.KgBuild(extract_markdown(pages, ExtractConfig()),
-                        alias_rows()) as kg:
+                        kg_ops.fixture_matcher(spark)) as kg:
         sub = kg.edges().localCheckpoint()
     return snapshot_diff(full, sub)
 

@@ -103,7 +103,11 @@ class Warehouse:
         write produced (``""`` when unpartitioned) to its row count:
         the rows of THIS snapshot only — an append or a dynamic
         overwrite lists just the partitions it wrote, an empty write
-        lists none.
+        lists none.  ``live_counts`` maps every live partition key of
+        the table after this write to its row count, summed over the
+        snapshots that own it, so the current manifest alone gives the
+        table's size (:meth:`row_count`), also after older owners
+        expire.
 
         ``properties`` (JSON-able dict) is committed INSIDE the new
         snapshot manifest — the Iceberg snapshot-properties analog that
@@ -189,18 +193,21 @@ class Warehouse:
         written = sorted(record_counts)
 
         partitions: Dict[str, List[str]] = {}
+        live_counts: Dict[str, int] = {}
         if parent is not None and (mode == "append" or
                                    (partition_by and mode == "overwrite")):
             partitions = {k: list(v) for k, v in
                           parent.get("partitions", {}).items()}
+            live_counts = self._live_counts(name, parent)
         if mode == "append":
             for key in written:
                 partitions.setdefault(key, []).append(snapshot_id)
+                live_counts[key] = (live_counts.get(key, 0)
+                                    + record_counts[key])
         else:
-            if not partition_by:
-                partitions = {}
             for key in written:
                 partitions[key] = [snapshot_id]
+                live_counts[key] = record_counts[key]
 
         manifest = {
             "table": name,
@@ -213,6 +220,7 @@ class Warehouse:
             "write_mode": mode,
             "partitions": partitions,
             "record_counts": record_counts,
+            "live_counts": live_counts,
             "properties": dict(properties or {}),
             "bucket_by": list(bucket_by) if bucket_by is not None else None,
         }
@@ -221,6 +229,20 @@ class Warehouse:
             json.dumps(manifest, indent=2))
         self._manifest_path(name).write_text(json.dumps(manifest, indent=2))
         return snapshot_id
+
+    def _live_counts(self, name: str, m: dict) -> Dict[str, int]:
+        """``m``'s ``live_counts``; a manifest committed before that
+        field existed gets them from its owners' ``record_counts``."""
+        if "live_counts" in m:
+            return dict(m["live_counts"])
+        return {key: sum(self.manifest(name, sid)["record_counts"]
+                         .get(key, 0) for sid in sids)
+                for key, sids in m.get("partitions", {}).items()}
+
+    def row_count(self, name: str) -> int:
+        """Rows of the table's current snapshot, from its manifest
+        alone (no Spark job)."""
+        return sum(self._live_counts(name, self.manifest(name)).values())
 
     def _write_bucketed(self, df: DataFrame, data_dir: pathlib.Path,
                         n_buckets: int, col: str) -> None:
@@ -507,10 +529,14 @@ class Warehouse:
                                  properties=carried)
         if lost_entries:
             m2 = self.manifest(name)
+            old_counts = self._live_counts(name, m)
             for key, sids in lost_entries.items():
                 m2["partitions"].setdefault(key, [])
                 m2["partitions"][key] = sorted(
                     set(m2["partitions"][key]) | set(sids))
+                # the compacted rows plus the lost dirs' claimed rows:
+                # what the old manifest counted for the key
+                m2["live_counts"][key] = old_counts[key]
             (self._snapshots_dir(name) / f"{sid}.json").write_text(
                 json.dumps(m2, indent=2))
             self._manifest_path(name).write_text(json.dumps(m2, indent=2))
@@ -529,6 +555,7 @@ class Warehouse:
         m = self.manifest(name)
         m["partitions"] = {k: [sid] for k, v in m["partitions"].items()
                            if sid in v}
+        m["live_counts"] = dict(m["record_counts"])
         (self._snapshots_dir(name) / f"{sid}.json").write_text(
             json.dumps(m, indent=2))
         self._manifest_path(name).write_text(json.dumps(m, indent=2))

@@ -152,9 +152,10 @@ def apply_kg_batch(spark: SparkSession, batch_df, batch_id: int,
     wh = Warehouse(spark, warehouse_path)
     _check_state_format(wh)
     # ONE persisted Arrow pass mines mentions + triples; both
-    # accumulated tables consume it
+    # accumulated tables consume it.  The matcher is the application's
+    # one for the fixture dictionary: a later micro-batch reuses it
     with kg_ops.KgBuild(extract_markdown(batch_df, config),
-                        fixtures.alias_rows()) as kg:
+                        kg_ops.fixture_matcher(spark)) as kg:
         # per-triple support — the edge side of the lambda split
         batch_edges = (kg.triples.groupBy(*EDGE_KEYS)
                        .agg(F.count(F.lit(1)).alias("n_support")))

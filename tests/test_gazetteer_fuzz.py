@@ -7,16 +7,22 @@ leftmost-longest matching with ``\\b`` only on word-character alias
 edges.  A seeded generator builds dictionaries full of prefix chains,
 non-word edges, regex metacharacters and Unicode word/non-word
 characters, and every sentence built from them must give identical
-``find`` output.
+``find`` output.  A linked gazetteer must give the same matches with
+``best_links`` attached, also after a pickle round trip (the broadcast
+path), on dictionary rows with null entity ids and priors, equal-prior
+ties and aliases shared by several entities; and its unpickled
+compact layout stays within a pinned number of live bytes per alias.
 """
 
+import pickle
 import random
 import re
+import tracemalloc
 from typing import Dict, Iterable, List, Tuple
 
 import pytest
 
-from mdscraper_spark.kg.rules import Gazetteer, cached_gazetteer
+from mdscraper_spark.kg.rules import Gazetteer, best_links, cached_gazetteer
 from mdscraper_spark.sources import fixtures
 
 
@@ -138,6 +144,96 @@ def test_gazetteer_matches_frozen_regex_fuzz():
 @pytest.mark.slow
 def test_gazetteer_matches_frozen_regex_fuzz_slow():
     assert _mismatches(seed=4, n_dicts=12_000, n_sentences=20) == []
+
+
+def _linked_rows(rng: random.Random, entries) -> List[tuple]:
+    """Alias rows (alias, entity_id, canonical, etype, prior) over a
+    fuzz dictionary's (alias, mtype) entries: each alias gets one to
+    three entities (shared aliases), priors from a small set (equal-
+    prior ties), and some null entity ids and null priors."""
+    rows = []
+    for alias, mtype in entries:
+        for _ in range(rng.choice((1, 1, 2, 3))):
+            eid = None if rng.random() < 0.1 else rng.randrange(1, 8)
+            prior = rng.choice((None, 0.5, 0.5, 1.0, 0.25))
+            rows.append((alias, eid, f"c{eid}", mtype, prior))
+    return rows
+
+
+def _linked_mismatches(seed: int, n_dicts: int,
+                       n_sentences: int = 12) -> list:
+    rng = random.Random(seed)
+    bad = []
+    for _ in range(n_dicts):
+        entries = _dictionary(rng)
+        rows = _linked_rows(rng, entries)
+        links = best_links(rows)
+        gaz = Gazetteer(entries, links)
+        shipped = pickle.loads(pickle.dumps(gaz))
+        ref = _RegexGazetteer(entries)
+        surfaces = [s for s, _t in entries if s]
+        for _ in range(n_sentences):
+            sent = _sentence(rng, surfaces)
+            want = [(i, j, s, (t, *links[s])) for i, j, s, t in ref.find(sent)]
+            for got in (gaz.find(sent), shipped.find(sent)):
+                if got != want:
+                    bad.append((rows, sent, got, want))
+    return bad
+
+
+def test_linked_gazetteer_matches_frozen_regex_with_links_fuzz():
+    assert _linked_mismatches(seed=20261020, n_dicts=1_000) == []
+
+
+def test_best_links_null_entity_ids_and_ties():
+    rows = [("Acme", None, "x", "ORG", 1.0),     # names no entity
+            ("Acme", 7, "Acme", "ORG", 0.5),
+            ("ACME", 3, "Acme", "ORG", 0.5),      # casefold twin, 0.7x
+            ("Tie", 9, "t", "ORG", 0.5), ("Tie", 4, "t", "ORG", 0.5),
+            ("Nil", None, "n", "ORG", 1.0),
+            ("Unscored", 2, "u", "ORG", None), ("Unscored", 5, "u", "ORG", None)]
+    assert best_links(rows) == {
+        "Acme": (7, 0.5), "ACME": (3, 0.5),
+        "Tie": (4, 0.5),                          # tie -> lowest id
+        "Nil": (None, None),                      # no candidate
+        "Unscored": (2, None)}
+    gaz = pickle.loads(pickle.dumps(Gazetteer(
+        [(r[0], r[3]) for r in rows], best_links(rows))))
+    assert gaz.find("Nil and Unscored") == [
+        (0, 3, "Nil", ("ORG", None, None)),
+        (8, 16, "Unscored", ("ORG", 2, None))]
+
+
+def test_unpickled_linked_gazetteer_live_bytes_per_alias():
+    """The copy every executor process holds: an unpickled linked
+    gazetteer over 10^5 aliases (head + number organisation names and
+    their upper-case variants, as in the 50k test below) stays within
+    200 live bytes per alias.  The layout it replaced, a (mtype,
+    entity_id, score) tuple and a word-final set entry per alias,
+    needed about 320."""
+    rng = random.Random(100_000)
+    heads = sorted({" ".join(fixtures.org_name(k).split()[:2])
+                    for k in range(fixtures.N_ORGS)})
+    rows, seen = [], set()
+    while len(rows) < 100_000:
+        name = f"{rng.choice(heads)} {rng.randrange(100, 10**7)}"
+        if name not in seen:
+            seen.add(name)
+            eid = len(rows) + 1
+            rows += [(name, eid, name, "ORG", 1.0),
+                     (name.upper(), eid, name, "ORG", 0.5)]
+    blob = pickle.dumps(Gazetteer([(r[0], r[3]) for r in rows],
+                                  best_links(rows)))
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        gaz = pickle.loads(blob)
+        live = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    # the upper-case variant links by its casefold twin: 0.7 x 1.0
+    assert gaz.find(f"at {rows[-1][0]}.")[0][3] == ("ORG", rows[-1][1], 0.7)
+    assert live / len(rows) <= 200, f"{live / len(rows):.0f} B per alias"
 
 
 def test_gazetteer_matches_frozen_regex_at_50k_aliases():

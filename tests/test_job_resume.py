@@ -283,3 +283,73 @@ def test_failed_side_write_joins_everything_and_resumes(spark, tmp_path,
 
     got = snapshot(job.run(pages, run_id="resume", resume=True))
     assert got == want
+
+
+@pytest.fixture()
+def matchers(monkeypatch):
+    """Every kg_ops.Matcher built while the test runs, and whether its
+    broadcast was destroyed."""
+    from mdscraper_spark.operators import kg as kg_ops
+
+    built, closed = [], []
+    init, close = kg_ops.Matcher.__init__, kg_ops.Matcher.close
+
+    def tracked_init(self, *args):
+        init(self, *args)
+        built.append(self)
+
+    def tracked_close(self):
+        closed.append(self)
+        close(self)
+
+    monkeypatch.setattr(kg_ops.Matcher, "__init__", tracked_init)
+    monkeypatch.setattr(kg_ops.Matcher, "close", tracked_close)
+    return built, closed
+
+
+def test_run_closes_its_matcher(spark, tmp_path, matchers):
+    """A run builds one matcher over the injected dictionary and
+    destroys its broadcast before returning."""
+    built, closed = matchers
+    KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+               aliases=_custom_aliases(spark)).run(_custom_pages(spark))
+    assert len(built) == 1 and closed == built
+    assert not built[0].gazetteer._jbroadcast.isValid()
+
+
+def test_failed_extraction_destroys_the_matcher(spark, tmp_path,
+                                               monkeypatch, matchers):
+    """Extraction fails while the matcher is built beside it: run()
+    waits for the matcher, destroys its broadcast and re-raises."""
+    built, closed = matchers
+
+    def failing_extract(self, *args):
+        time.sleep(1)
+        raise RuntimeError("extraction failed")
+
+    monkeypatch.setattr(KgBuildJob, "extract", failing_extract)
+    with pytest.raises(RuntimeError, match="extraction failed"):
+        KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                   aliases=_custom_aliases(spark)).run(_custom_pages(spark))
+    assert len(built) == 1 and closed == built
+
+
+def test_dictionary_error_surfaces_after_extraction_is_recorded(
+        spark, tmp_path, matchers):
+    """A dictionary whose collect fails is raised only after
+    extraction committed markdown_docs and its lineage rows, so a
+    resume after fixing the dictionary skips every bucket."""
+    from pyspark.sql.types import StringType
+
+    @F.udf(StringType())
+    def broken(alias):
+        raise ValueError("bad alias row")
+
+    job = KgBuildJob(spark, str(tmp_path / "wh"), CFG, n_buckets=4,
+                     aliases=_custom_aliases(spark)
+                     .withColumn("alias", broken("alias")))
+    with pytest.raises(Exception, match="bad alias row"):
+        job.run(_custom_pages(spark))
+    assert job.wh.exists("markdown_docs")
+    assert {r.stage for r in job._lineage().collect()} == {"extract"}
+    assert matchers[0] == []

@@ -38,8 +38,8 @@ def oracle():
 @pytest.fixture(scope="module")
 def spark_kg(spark):
     pages = bulk_pages_df(spark, N_PAGES).repartition(5)
-    with kg_ops.KgBuild(extract_markdown(pages, CFG),
-                        fixtures.alias_rows()) as kg:
+    with kg_ops.Matcher(spark, fixtures.alias_rows()) as m, \
+            kg_ops.KgBuild(extract_markdown(pages, CFG), m) as kg:
         yield {
             "mentions": kg.mentions, "triples": kg.triples,
             "links": kg.links, "cmap": kg.canonical_map,
@@ -469,7 +469,8 @@ def test_job_links_follow_casefold_rule_of_oracle(spark, tmp_path):
         spark, tables["markdown_docs"], aliases, job._gazetteer_entries()))
 
     # the composition alone, with no job, follows the oracle too
-    with kg_ops.KgBuild(extract_markdown(pages, CFG), rows) as kg:
+    with kg_ops.Matcher(spark, rows) as m, \
+            kg_ops.KgBuild(extract_markdown(pages, CFG), m) as kg:
         assert sorted((r.url, r.mention_key, r.entity_id, r.score)
                       for r in kg.links.collect()) == oracle["entity_links"]
         cmap_rows, node_rows = kg.canonicalize()
@@ -512,7 +513,8 @@ def test_casefold_probe_consumers_equal_oracle(spark):
             ("e:3", "works_for", "s:mass")} == edges
     want_pmi = pmi_cooccurrence(oracle)
     assert want_pmi, "probe must co-locate two linked entities"
-    with kg_ops.KgBuild(extract_markdown(pages, CFG), _PROBE_ROWS) as kg:
+    with kg_ops.Matcher(spark, _PROBE_ROWS) as m, \
+            kg_ops.KgBuild(extract_markdown(pages, CFG), m) as kg:
         cmap = kg.canonical_map
         assert _rows(kg.edges()) == sorted(oracle["kg_edges"])
         assert _rows(kg_ops.build_kg_edges_with_provenance(

@@ -189,3 +189,18 @@ def test_multimodal_stub_seam_guard(monkeypatch):
     monkeypatch.setattr(mm, "REAL_DECODERS_AVAILABLE", False)
     meta = mm._decode_image_stub(b"payload")
     assert meta["status"] == "ok" and len(meta["content_hash"]) == 32
+
+
+def test_second_kg_row_builds_no_matcher(spark, monkeypatch, matcher_builds):
+    """The registry's KG rows share one matcher per application and
+    dictionary: after the first KG row, kg_snapshot_diff's second
+    build runs no ``best_links`` and builds no ``Gazetteer``."""
+    from mdscraper_spark import queries
+
+    monkeypatch.setattr(queries, "_KG_BUILD_CACHE", {})
+    REGISTRY["kg_flagship"][0](spark, SF_DIR)
+    assert matcher_builds == ["best_links", "Gazetteer"]
+    REGISTRY["kg_snapshot_diff"][0](spark, SF_DIR)
+    assert matcher_builds == ["best_links", "Gazetteer"]
+    for kg in queries._KG_BUILD_CACHE.values():
+        kg.close()

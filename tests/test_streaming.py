@@ -202,7 +202,8 @@ def test_lambda_loop_streaming_plus_canonicalize_matches_batch(
     # one-shot batch build and oracle over the same pages
     docs = extract_markdown(
         spark.createDataFrame(all_pages, PAGES_SCHEMA), CFG)
-    with kg_ops.KgBuild(docs, alias_rows()) as kg:
+    with kg_ops.Matcher(spark, alias_rows()) as m, \
+            kg_ops.KgBuild(docs, m) as kg:
         want_edges = {(r.src, r.pred, r.dst): r.n_support
                       for r in kg.edges().collect()}
         want_nodes = {r.canon_id: (r.label, r.n_mentions)
@@ -487,3 +488,19 @@ def test_kg_stream_from_warc_matches_parquet_ingest(spark, tmp_path):
     got = (sorted(map(tuple, nodes_w.collect())),
            sorted(map(tuple, edges_w.collect())))
     assert got == want
+
+
+def test_second_micro_batch_builds_no_matcher(spark, tmp_path,
+                                              matcher_builds):
+    """The stream builds its matcher once per application: a second
+    micro-batch on the unchanged fixture dictionary builds none."""
+    from mdscraper_spark.streaming.kg_incremental import apply_kg_batch
+
+    wh_path = str(tmp_path / "wh")
+    pages = bulk_pages_df(spark, 8).collect()
+    apply_kg_batch(spark, spark.createDataFrame(pages[:4], PAGES_SCHEMA),
+                   0, wh_path, stream_id="s")
+    assert matcher_builds == ["best_links", "Gazetteer"]
+    apply_kg_batch(spark, spark.createDataFrame(pages[4:], PAGES_SCHEMA),
+                   1, wh_path, stream_id="s")
+    assert matcher_builds == ["best_links", "Gazetteer"]

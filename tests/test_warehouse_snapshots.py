@@ -134,6 +134,8 @@ def test_compact_carry_does_not_duplicate_surviving_sids(spark, wh):
     assert s1 in m2["partitions"][key1]        # lost entry carried
     assert s2 not in m2["partitions"][key1]    # surviving sid NOT re-attached
     assert grab(wh.read_table("t")) == before  # and no duplicated rows
+    # the manifest still counts the lost copy it carries, as before
+    assert wh.row_count("t") == len(before) + 1 == 3
 
 
 def test_merge_table_upsert_partition_scoped(spark, wh):
@@ -331,3 +333,61 @@ def test_write_rows_time_travel_and_maintenance(spark, wh):
     assert grab(wh.read_table("t")) == [("c", 3, "y")]
     with pytest.raises(ValueError, match="not found"):
         wh.read_table("t", snapshot_id=s2)
+
+
+def test_row_count_from_current_manifest_after_expiry(spark, wh):
+    """``row_count`` reads the current manifest's ``live_counts`` alone:
+    it stays right after the older owners of live partitions expire,
+    while those expired snapshots can no longer be read."""
+    s0 = wh.write_table(_df(spark, [(0, "a", 1), (1, "b", 2), (2, "c", 3)]),
+                        "t", partition_by=("part_id",))
+    s1 = wh.write_table(_df(spark, [(1, "B", 20), (1, "BB", 21)]), "t",
+                        partition_by=("part_id",))
+    s2 = wh.write_table(_df(spark, [(0, "A", 10), (2, "C", 30)]), "t",
+                        partition_by=("part_id",))
+    s3 = wh.write_table(_df(spark, [(1, "D", 40)]), "t",
+                        partition_by=("part_id",), mode="append")
+    assert wh.manifest("t")["partitions"] == {
+        "part_id=0": [s2], "part_id=1": [s1, s3], "part_id=2": [s2]}
+    assert wh.manifest("t")["live_counts"] == {
+        "part_id=0": 1, "part_id=1": 3, "part_id=2": 1}
+    want = grab(wh.read_table("t"))
+    assert wh.row_count("t") == len(want) == 5
+
+    out = wh.expire_snapshots("t", keep_last=1)
+    assert out == {"kept": 1, "expired": 3, "data_dirs_deleted": 1}
+    assert grab(wh.read_table("t")) == want
+    assert wh.row_count("t") == 5
+    for expired in (s0, s1, s2):
+        with pytest.raises(ValueError, match="not found"):
+            wh.read_table("t", snapshot_id=expired)
+        with pytest.raises(ValueError, match="not found"):
+            wh.changes("t", expired, s3, key_cols=("k",))
+
+    # compaction keeps the count; a full overwrite resets it
+    wh.compact("t")
+    assert wh.row_count("t") == 5
+    wh.write_table(_df(spark, [(7, "z", 0)]), "t")
+    assert wh.manifest("t")["live_counts"] == {"": 1}
+
+
+def test_row_count_of_manifests_without_live_counts(spark, wh):
+    """A table committed before manifests carried ``live_counts`` is
+    counted from its owners' ``record_counts``, and its next commit
+    writes the field."""
+    import json
+
+    wh.write_table(_df(spark, [(0, "a", 1), (1, "b", 2)]), "t",
+                   partition_by=("part_id",))
+    wh.write_table(_df(spark, [(0, "c", 3)]), "t",
+                   partition_by=("part_id",), mode="append")
+    for p in [wh._manifest_path("t"), *wh._snapshots_dir("t").glob("*.json")]:
+        m = json.loads(p.read_text())
+        del m["live_counts"]
+        p.write_text(json.dumps(m))
+    assert wh.row_count("t") == 3
+    wh.write_table(_df(spark, [(1, "d", 4)]), "t",
+                   partition_by=("part_id",), mode="append")
+    assert wh.manifest("t")["live_counts"] == {"part_id=0": 2,
+                                               "part_id=1": 2}
+    assert wh.row_count("t") == len(grab(wh.read_table("t"))) == 4
